@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from simpleetlpipeline_spark.cache import track
+from simpleetlpipeline_spark.cache import shared, track
 from simpleetlpipeline_spark.io import fan_out, read_table
 from simpleetlpipeline_spark.session import ensure_session_conf
 
@@ -223,25 +223,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-def exploded_grams(spark: SparkSession, sf_dir: str,
-                   ngram: int = 3) -> DataFrame:
-    """Gram-posting stream (doc_id, gram_hash), persisted.
-
-    Used by dedup_pairs_all, where the stream has two in-plan
-    consumers (df count + join-back). dedup_ngram_jaccard deliberately
-    does NOT read this cache: its probe join is a single pipelined
-    pass (explode -> broadcast-join -> partial agg, no intermediate),
-    and paying the cache materialization there measured SLOWER than
-    recomputing (8s vs ~3s at sf0.1) — cache reuse only wins when the
-    same stream is scanned more than once. Registry-owned.
-    """
-    ensure_session_conf(spark)
-    docs = fan_out(read_table(spark, sf_dir, "documents")).select(
-        "doc_id", word_ngram_hashes_col(F.col("text"), ngram).alias("grams"))
-    return track(
-        docs.select("doc_id", F.explode("grams").alias("g")).persist())
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
@@ -502,7 +483,19 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
     >=threshold pair set whenever banding recall is perfect — which
     DuckDB recomputes exactly via shared-gram blocking
     (_MINHASH_PAIRS_SQL below), so the gate attests recall itself.
+
+    The verified pair graph is tiny (near-dup pairs are rare by
+    construction) and has three catalog consumers — this query,
+    dedup_clusters and corpus_curate_neardup — so it is one shared
+    frame: the shingle/signature/verify pipeline runs once per
+    session instead of once per consumer.
     """
+    return shared(spark, ("minhash_lsh", sf_dir, threshold),
+                  lambda: _minhash_lsh_pairs(spark, sf_dir, threshold))
+
+
+def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
+                       threshold: float) -> DataFrame:
     ensure_session_conf(spark)
     minhash = minhash_from_gram_hashes_udf()
     raw = fan_out(read_table(spark, sf_dir, "documents"))
@@ -529,16 +522,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
     b = docs.select(F.col("doc_id").alias("b_id"), F.col("grams").alias("b_g"))
     inter = F.size(F.array_intersect("a_g", "b_g"))
     union = F.size("a_g") + F.size("b_g") - inter
-    # Persist the verified pair graph: it is tiny (near-dup pairs are
-    # rare by construction) and has three consumers in the catalog —
-    # this query, dedup_clusters, and corpus_curate_neardup. The
-    # cache manager matches their structurally identical plans, so
-    # the shingle/signature/verify pipeline runs once per session
-    # instead of once per consumer. Materializing it eagerly (count)
-    # lets the corpus-sized gram cache be released immediately — the
-    # pair graph is the only thing the consumers still need — and the
-    # registry owns the pair cache's lifetime (cache.release_caches).
-    pairs = track(
+    # Materializing the pair graph eagerly (persist + count) lets the
+    # corpus-sized gram cache be released immediately — the pair
+    # graph is the only thing the consumers still need.
+    pairs = (
         candidates.join(a, "a_id").join(b, "b_id")
         .withColumn("jaccard", F.floor(inter / union * 10000) / 10000)
         .filter(F.col("jaccard") >= threshold)
@@ -1037,14 +1024,28 @@ def dedup_pairs_all(spark: SparkSession, sf_dir: str, ngram: int = 3,
     bounded at C(df_cap, 2); everything else is linear.
 
     Caching: the capped posting stream (kg) has two consumers (pair
-    generation + per-doc sizes) and the returned pair graph has two
-    catalog consumers (this query and dedup_clusters_exact, whose
-    structurally identical rebuild the cache manager matches). Both
-    persists are lazy and registry-owned.
+    generation + per-doc sizes), and the returned pair graph is one
+    shared frame for its two catalog consumers (this query and
+    dedup_clusters_exact). Both persists are lazy and registry-owned.
     """
-    # Shared persisted posting stream (see exploded_grams) — also the
-    # cross-query cache dedup_ngram_jaccard deliberately skips.
-    ex = exploded_grams(spark, sf_dir, ngram)
+    return shared(spark, ("pairs_all", sf_dir, ngram, threshold, df_cap),
+                  lambda: _pairs_all(spark, sf_dir, ngram, threshold,
+                                     df_cap))
+
+
+def _pairs_all(spark: SparkSession, sf_dir: str, ngram: int,
+               threshold: float, df_cap: int) -> DataFrame:
+    # Gram-posting stream (doc_id, gram_hash), persisted: it has two
+    # in-plan consumers (df count + join-back). dedup_ngram_jaccard
+    # deliberately recomputes its own: its probe join is one pipelined
+    # pass, and materializing a cache there measured SLOWER (8s vs
+    # ~3s at sf0.1) — reuse only wins when a stream is scanned twice.
+    ensure_session_conf(spark)
+    ex = track(
+        fan_out(read_table(spark, sf_dir, "documents"))
+        .select("doc_id", F.explode(word_ngram_hashes_col(
+            F.col("text"), ngram)).alias("g"))
+        .persist())
     # df-filter BEFORE the list build: a cheap count aggregate keeps
     # only sub-cap grams, and the posting stream semi-joins against
     # it before collect_list — so a hot stop-shingle costs a counter,
@@ -1083,12 +1084,11 @@ def dedup_pairs_all(spark: SparkSession, sf_dir: str, ngram: int = 3,
     a_sz = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("a_n"))
     b_sz = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("b_n"))
     jac = F.col("n_common") / (F.col("a_n") + F.col("b_n") - F.col("n_common"))
-    return track(
+    return (
         common.join(a_sz, "a_id").join(b_sz, "b_id")
         .withColumn("jaccard", F.floor(jac * 10000) / 10000)
         .filter(F.col("jaccard") >= threshold)
         .select("a_id", "b_id", "n_common", "jaccard")
-        .persist()
     )
 
 

@@ -36,11 +36,14 @@ cross-engine rules (see functions/similarity.py module docstring).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from simpleetlpipeline_spark.cache import file_stamp, shared, track
 from simpleetlpipeline_spark.operators.dates import ts_lit
 from simpleetlpipeline_spark.functions.similarity import as_double_vec
 from simpleetlpipeline_spark.functions.text import tokens_col
@@ -297,18 +300,6 @@ KMEANS_ITERS = 2   # assignment rounds (1 centroid update between)
 _KMEANS_ROUND = 6
 
 
-#: Session-scoped memo of the Lloyd assignment frame, keyed on
-#: (applicationId, sf_dir, k, iters). kmeans_assign and
-#: kmeans_cluster_purity each replayed the FULL Lloyd loop (init
-#: collect + per-round centroid collect + one ArrowEvalPython pass
-#: over the corpus); the assignment is 3 narrow int columns, so the
-#: family shares ONE registry-tracked persist built lazily by its
-#: first consumer inside that consumer's own timed region (round 13,
-#: guide §5 — same governance as the dedup pair cache; release_caches
-#: unpersists it, after which a memo hit just recomputes).
-_ASSIGN_MEMO: dict = {}
-
-
 def kmeans_assign(spark: SparkSession, sf_dir: str,
                   k: int = KMEANS_K,
                   iters: int = KMEANS_ITERS) -> DataFrame:
@@ -332,65 +323,78 @@ def kmeans_assign(spark: SparkSession, sf_dir: str,
     shuffle per round, map-side combined. Empty clusters keep their
     previous centroid. Returns (vec_id, cluster, label) — label kept
     so cluster/label agreement can be eyeballed downstream.
+
+    Sharing: kmeans_assign and kmeans_cluster_purity read ONE shared
+    assignment frame (3 narrow int columns) built lazily by the
+    family's first consumer from the shared centroids, which survive
+    release_caches() — a rebuild never re-runs the Lloyd loop.
     """
     ensure_session_conf(spark)
-    memo_key = (spark.sparkContext.applicationId, sf_dir, k, iters)
-    memoed = _ASSIGN_MEMO.get(memo_key)
-    if memoed is not None:
-        return memoed
-    emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
+    return shared(spark, ("kmeans_assign", sf_dir, k, iters), lambda: (
+        _nearest(_kmeans_input(spark, sf_dir),
+                 _kmeans_centroids(spark, sf_dir, k, iters))
+        .select("vec_id", "label", "cluster")))
+
+
+def _kmeans_input(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return fan_out(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "label", as_double_vec(F.col("embedding")).alias("e"))
-    emb.persist()
-    try:
-        cents: dict[int, list[float]] = {
-            i: list(r["e"]) for i, r in enumerate(
-                emb.orderBy("vec_id").limit(k).collect())
-        }
 
-        def _assign(df: DataFrame) -> DataFrame:
-            cent = np.array([cents[c] for c in range(k)], dtype=np.float64)
 
-            @F.pandas_udf("int")
-            def nearest(e: pd.Series) -> pd.Series:
-                if len(e) == 0:
-                    return pd.Series([], dtype="int32")
-                mat = np.array(e.tolist(), dtype=np.float64)
-                d = ((mat[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-                # argmin returns the FIRST minimum — ties go to the
-                # lower cluster id, matching the oracle's row_number
-                # ORDER BY dist, cluster.
-                return pd.Series(d.argmin(axis=1).astype("int32"))
+def _nearest(df: DataFrame, cent: np.ndarray) -> DataFrame:
+    @F.pandas_udf("int")
+    def nearest(e: pd.Series) -> pd.Series:
+        if len(e) == 0:
+            return pd.Series([], dtype="int32")
+        mat = np.array(e.tolist(), dtype=np.float64)
+        d = ((mat[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+        # argmin returns the FIRST minimum — ties go to the lower
+        # cluster id, matching the oracle's row_number ORDER BY dist,
+        # cluster.
+        return pd.Series(d.argmin(axis=1).astype("int32"))
 
-            return df.withColumn("cluster", nearest("e"))
+    return df.withColumn("cluster", nearest("e"))
 
-        # Centroid update: ONE hash aggregate with `dim` positional
-        # avg buffers per cluster (round 12, guide §2.3 — the same
-        # rewrite as similarity._centroid_cells). The previous form
-        # posexploded to n x dim rows, shuffled them on (cluster, dim)
-        # and reassembled arrays with a second aggregate — dim x the
-        # shuffle volume and an extra exchange per round for the same
-        # per-position avg values. Built as one parsed expression so
-        # construction is one py4j call, not ~130. The width comes
-        # from the init centroids just collected (fixtures use small
-        # dims; the embeddings table contract is EMB_DIM=64).
-        dim = len(next(iter(cents.values())))
-        mean_arr = F.expr(
-            "array(" + ",".join(
-                f"round(avg(e[{i}]), {_KMEANS_ROUND})"
-                for i in range(dim)) + ")")
-        for it in range(iters - 1):
-            assigned = _assign(emb)
-            means = assigned.groupBy("cluster").agg(mean_arr.alias("c"))
-            for r in means.collect():
-                cents[r["cluster"]] = list(r["c"])
-        from simpleetlpipeline_spark.cache import track
 
-        out = track(
-            _assign(emb).select("vec_id", "label", "cluster").persist())
-        _ASSIGN_MEMO[memo_key] = out
-        return out
-    finally:
-        emb.unpersist()
+def _kmeans_centroids(spark: SparkSession, sf_dir: str, k: int,
+                      iters: int) -> np.ndarray:
+    """The k x dim centroids of the final assignment round: a shared
+    driver value keyed on the embeddings file's stamp."""
+    def build():
+        emb = _kmeans_input(spark, sf_dir).persist()
+        try:
+            cent = np.array([r["e"] for r in
+                             emb.orderBy("vec_id").limit(k).collect()],
+                            dtype=np.float64)
+            # Centroid update: ONE hash aggregate with `dim` positional
+            # avg buffers per cluster (round 12, guide §2.3 — the same
+            # rewrite as similarity._centroid_cells). The previous form
+            # posexploded to n x dim rows, shuffled them on (cluster,
+            # dim) and reassembled arrays with a second aggregate — dim
+            # x the shuffle volume and an extra exchange per round for
+            # the same per-position avg values. Built as one parsed
+            # expression so construction is one py4j call, not ~130.
+            # The width comes from the init centroids just collected
+            # (fixtures use small dims; the embeddings table contract
+            # is EMB_DIM=64).
+            mean_arr = F.expr(
+                "array(" + ",".join(
+                    f"round(avg(e[{i}]), {_KMEANS_ROUND})"
+                    for i in range(cent.shape[1])) + ")")
+            for _ in range(iters - 1):
+                means = _nearest(emb, cent).groupBy("cluster").agg(
+                    mean_arr.alias("c")).collect()
+                cent = cent.copy()
+                for r in means:
+                    cent[r["cluster"]] = r["c"]
+            cent.flags.writeable = False  # one array for every consumer
+            return cent
+        finally:
+            emb.unpersist()
+
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    return shared(spark, ("kmeans_centroids", file_stamp(path), k, iters),
+                  build)
 
 
 # ---------------------------------------------------------- sharding
@@ -452,7 +456,6 @@ def quality_bins(spark: SparkSession, sf_dir: str,
     For fixed THRESHOLD bins (no global ranks at all) use
     width_bucket-style arithmetic instead.
     """
-    from simpleetlpipeline_spark.cache import track
     from simpleetlpipeline_spark.functions.text import doc_stats
     from simpleetlpipeline_spark.operators.aggregates import (
         ntile_from_rank, two_pass_global_window)

@@ -35,9 +35,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from simpleetlpipeline_spark.cache import file_stamp, shared, track
 from simpleetlpipeline_spark.functions.dedup import (
     cap_bucket_members, collapse_exact_groups, star_pairs)
-from simpleetlpipeline_spark.io import fan_out, read_table
+from simpleetlpipeline_spark.io import driver_rows_df, fan_out, read_table
 from simpleetlpipeline_spark.session import ensure_session_conf
 
 N_PROBES = 10          # probe set = vec_id < N_PROBES
@@ -107,23 +108,19 @@ def _table_bytes(sf_dir: str, name: str) -> int:
         if os.path.isfile(p))
 
 
-_TABLE_ROWS_CACHE: dict = {}
-
-
 def _table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Row count of one testdata table via the parquet footer
     statistics (count() over a bare scan plans as a metadata-only
     aggregate — no data pages read). Sizes the LSH band width.
-    Memoized per (sf_dir, name) — same pattern as io's timestamp-type
-    probe — so repeated query CONSTRUCTION stays job-free (pinned by
-    test_no_driver_collect_in_query_construction)."""
+    A shared driver value keyed on the file's stamp, so repeated
+    query CONSTRUCTION stays job-free (pinned by
+    test_no_driver_collect_in_query_construction) and a rewritten
+    table is recounted."""
     import os
 
-    key = (sf_dir, name)
-    if key not in _TABLE_ROWS_CACHE:
-        _TABLE_ROWS_CACHE[key] = spark.read.parquet(
-            os.path.join(sf_dir, f"{name}.parquet")).count()
-    return _TABLE_ROWS_CACHE[key]
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return shared(spark, ("table_rows", file_stamp(path)),
+                  lambda: spark.read.parquet(path).count())
 
 
 def as_double_vec(embedding: Column) -> Column:
@@ -144,35 +141,20 @@ def cosine(a: Column, b: Column, a_norm: Column, b_norm: Column) -> Column:
     return F.floor(dot(a, b) / (a_norm * b_norm) * 10000) / 10000
 
 
-#: Session-scoped memo of the parsed-vector frame, keyed on
-#: (applicationId, sf_dir). Ten ANN/embedding catalog entries each
-#: re-derived scan -> fan_out -> 64-way cast -> norm (several times
-#: per query where probe/corpus branches fork); the frame is one
-#: registry-tracked persist built lazily by the family's first
-#: consumer inside its own timed region (round 13, guide §5 — no
-#: eager prefill, per the round-12 lesson; release_caches unpersists
-#: it, after which a memo hit just recomputes).
-_VECTORS_MEMO: dict = {}
-
-
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The parsed-vector frame (vec_id, label, e, nrm), shared by the
+    ten ANN/embedding catalog entries: scan -> fan_out -> 64-way cast
+    -> norm runs once, built lazily by the family's first consumer
+    inside its own timed region (no eager prefill)."""
     # fan_out: every consumer runs an O(dim) interpreted fold per pair
     # downstream of this scan, usually on the streamed side of a
     # broadcast join — i.e. at the scan's own parallelism. label
     # rides along so the IVF coarse quantizer can share the cache.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _VECTORS_MEMO.get(key)
-    if got is None:
-        from simpleetlpipeline_spark.cache import track
-
-        got = track(
-            fan_out(read_table(spark, sf_dir, "embeddings"))
-            .select("vec_id", "label",
-                    as_double_vec(F.col("embedding")).alias("e"))
-            .withColumn("nrm", l2_norm(F.col("e")))
-            .persist())
-        _VECTORS_MEMO[key] = got
-    return got
+    return shared(spark, ("vectors", sf_dir), lambda: (
+        fan_out(read_table(spark, sf_dir, "embeddings"))
+        .select("vec_id", "label",
+                as_double_vec(F.col("embedding")).alias("e"))
+        .withColumn("nrm", l2_norm(F.col("e")))))
 
 
 def _topk_per_probe(scored: DataFrame, k: int = TOP_K) -> DataFrame:
@@ -394,8 +376,6 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str,
     matrix below the size gate, id-joins above it).
     """
     ensure_session_conf(spark)
-    from simpleetlpipeline_spark.cache import track
-
     small = _table_bytes(sf_dir, "embeddings") <= EXACT_NEARDUP_MAX_BYTES
     raw = fan_out(read_table(spark, sf_dir, "embeddings"))
     groups = collapse_exact_groups(raw, "vec_id", "embedding")
@@ -1438,6 +1418,9 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str,
                     d = d + x * x
                 flat.append(int(math.floor(d * 1e9)))
         table_rows.append((p["vec_id"], flat))
+    if not table_rows:  # no probe rows: array() would not be a struct array
+        return driver_rows_df(
+            spark, [], "a_id long, b_id long, rank int, dist9 long")
     # One parsed literal (a single py4j round-trip, like the kmeans
     # positional-avg aggregate): n_probes structs of (a_id, 128-long
     # ADC table), exploded per corpus row — the in-row form of the
@@ -1545,22 +1528,8 @@ def ann_recall_report(spark: SparkSession, sf_dir: str,
     that every method returns all probes. Scale: each method's
     top-k frame is |probes| x k; the join+agg here is trivial
     against the index costs themselves.
-
-    Bench note (r10 1.29s -> r11 3.84s explained): this entry's cost
-    IS the sum of the three index pipelines it evaluates (exact +
-    IVF + LSH, ~5s standalone at sf0.1). The r10 bench sample timed
-    standalone ann_topk / ann_ivf_topk / ann_lsh_topk rows BEFORE
-    this entry, and their cache.track-governed persists (released
-    only at end of run) were substituted plan-keyed into this
-    entry's identical sub-plans — so r10's 1.29s measured only the
-    join+agg tail. The r11 sample dropped those rows and this entry
-    paid its honest standalone cost. Same effect in BENCH_FULL.json
-    (full catalog in order: 1.5s). Work done is identical; what
-    moved is which row the shared stages were billed to.
     """
     ensure_session_conf(spark)
-    from simpleetlpipeline_spark.cache import track
-
     # the exact scorer is the expensive stage; persist ONE copy and
     # reuse it both as ground truth (probed once per method) and as
     # the self-check method row — without this the O(|probes| x n)

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from simpleetlpipeline_spark.cache import file_stamp, shared, track
 from simpleetlpipeline_spark.schemas import TESTDATA_SCHEMAS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -84,8 +85,6 @@ def read_csv_with_rejects(spark: SparkSession, path: str,
     with_corrupt = StructType(
         [*schema.fields,
          StructField("_corrupt_record", StringType(), True)])
-    from simpleetlpipeline_spark.cache import track
-
     # track(): the cache must outlive this function (both returned
     # frames read it lazily), so the registry owns its release —
     # repeated ingests no longer pin executor storage for the session.
@@ -189,18 +188,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: footer ts type per events.parquet (path, mtime, size) — one footer
-#: read per file VERSION per process: keying on the stat too means an
-#: in-place regeneration with a different physical type re-probes
-#: instead of silently reusing a stale declared schema.
-_EVENTS_TS_TYPES: dict[tuple[str, float, int], object] = {}
-
-
 def _events_ts_type(spark: SparkSession, path: str):
     """Footer probe: the declared-schema fast path must declare the
     type the file actually carries, or Spark silently misreads the
     column (a LONG schema over a micros TIMESTAMP file yields raw
     micros ints that the nanos->micros truncation then shrinks 1000x).
+    One footer read per file version: the shared key carries the
+    file's stamp, so an in-place regeneration with a different
+    physical type re-probes.
 
     TIMESTAMP_NTZ is normalized to TIMESTAMP here: if the session's
     inferTimestampNTZ=false conf didn't take (ensure_session_conf is
@@ -209,14 +204,13 @@ def _events_ts_type(spark: SparkSession, path: str):
     unix_micros/watermark/numeric-cast paths downstream. Under the
     UTC session timezone the wall-clock values are identical.
     """
-    st = os.stat(path)
-    key = (path, st.st_mtime, st.st_size)
-    if key not in _EVENTS_TS_TYPES:
+    def probe():
         probed = spark.read.parquet(path).schema["ts"].dataType
         if isinstance(probed, TimestampNTZType):
             probed = TimestampType()
-        _EVENTS_TS_TYPES[key] = probed
-    return _EVENTS_TS_TYPES[key]
+        return probed
+
+    return shared(spark, ("events_ts_type", file_stamp(path)), probe)
 
 
 def register_views(spark: SparkSession, sf_dir: str,

@@ -1,33 +1,16 @@
-"""Join operators (SURVEY.md §2.4 J1-J3).
+"""Join operators (SURVEY.md §2.4 J2-J3).
 
-Scale notes: dimension sides are explicitly broadcast (J1) so the
-fact table never shuffles for them; the per-key rollup (J2)
-aggregates the fact side FIRST and joins the small aggregate back
-to the dimension — at 100 TB this means one shuffle of pre-combined
-partial aggregates instead of shuffling raw fact rows, and the
-dim-side join is then broadcastable.
+Scale notes: the per-key rollup (J2) aggregates the fact side FIRST
+and joins the small aggregate back to the dimension — at 100 TB this
+means one shuffle of pre-combined partial aggregates instead of
+shuffling raw fact rows, and the dim-side join is then broadcastable.
+The J1 star join is inline in its query (`analytics.top_products`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def star_join(fact: DataFrame, *dims: tuple[DataFrame, str | list[str]],
-              broadcast_dims: bool = True) -> DataFrame:
-    """J1: fact joined to small dimensions on equi-keys.
-
-    Reference: 3-table inner join products x order_items x orders
-    (main.py:672-685). Each dim is broadcast — Catalyst would often
-    pick this itself under the autoBroadcastJoinThreshold, but an
-    explicit hint keeps the plan stable when dim stats are missing.
-    """
-    out = fact
-    for dim, keys in dims:
-        side = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(side, on=keys, how="inner")
-    return out
 
 
 def rollup_update(dim: DataFrame, fact: DataFrame, dim_key: str,

@@ -58,13 +58,6 @@ def null_counts_expr(df: DataFrame) -> list[F.Column]:
     ]
 
 
-def duplicate_row_count(df: DataFrame) -> int:
-    """A8: rows minus first occurrences == pandas duplicated().sum()."""
-    total = df.count()
-    distinct = df.dropDuplicates().count()
-    return total - distinct
-
-
 def quality_score(row_count: int, column_count: int, total_nulls: int,
                   duplicate_rows: int) -> float:
     """A10: reference scoring formula (main.py:68-74), exactly:

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.io import (
     append_table,
+    driver_rows_df,
     read_csv,
     read_table_version,
     write_table_version,
@@ -463,19 +464,13 @@ def etl_pipeline_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         "records_failed", "data_quality_score")
     # The lineage result is one row per table; materialize it so the
     # throwaway warehouse can be deleted (repeated bench/driver runs
-    # otherwise accumulate scratch dirs in /tmp). Re-entry goes
-    # through pandas/Arrow: createDataFrame(list-of-Rows) pickles
-    # through one RDD slice per core — a 32-task job (~1.5s cold,
-    # ~0.4s warm) to ship 4 driver rows (round 13, guide §6).
+    # otherwise accumulate scratch dirs in /tmp), and re-enter it
+    # through the shared Arrow path.
     import shutil
-
-    import pandas as pd
 
     rows, schema = out.collect(), out.schema
     shutil.rmtree(td, ignore_errors=True)
-    pdf = pd.DataFrame([r.asDict() for r in rows],
-                       columns=[f.name for f in schema.fields])
-    return spark.createDataFrame(pdf, schema)
+    return driver_rows_df(spark, rows, schema)
 
 
 def prune_metadata(spark: SparkSession, config: ETLConfig,

@@ -209,6 +209,22 @@ def test_pq_ann_ranks_exact_copy_first(spark):
         "copy of a codebook vector quantizes losslessly -> ADC 0"
 
 
+@pytest.mark.parametrize("vec_ids", [[], [20, 21, 22]])
+def test_pq_ann_without_probe_rows_is_empty(spark, tmp_path, vec_ids):
+    """An embeddings table with fewer than n_probes rows and no probe
+    vec_id yields an empty, well-typed result (no ADC tables to
+    build)."""
+    rows = [(i, [float(i)] * 64, 0) for i in vec_ids]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    out = S.pq_ann_topk(spark, str(tmp_path))
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("a_id", "bigint"), ("b_id", "bigint"), ("rank", "int"),
+        ("dist9", "bigint")]
+
+
 def test_ann_recall_report_bounds(spark, sf_dir):
     """exact must self-score 1.0; approximate methods must return a
     recall in [0,1] over every probe (the report's sanity floor —
