@@ -46,7 +46,6 @@ from simpleetlpipeline_spark.functions.text import (
     doc_token_profile,
     tokens_col,
 )
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 QUALITY_THRESHOLD = 0.3
 KEEP_LANG = "en"
@@ -71,7 +70,6 @@ def corpus_curate(spark: SparkSession, sf_dir: str,
     fingerprint carried through the profile aggregation; the only
     other shuffle is the fingerprint-keyed dedup window. Measured
     sf1: 5.2s (three-join form) -> ~2.3s."""
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     survivors = (
         doc_token_profile(
@@ -93,7 +91,6 @@ def corpus_curate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """corpus_curate plus near-dup removal: every non-canonical
     member of a MinHash-LSH cluster (dedup.dedup_cluster_frame) is
     dropped. Hash-oracled since round 11 (see ORACLE_SQL below)."""
-    ensure_session_conf(spark)
     kept = corpus_curate(spark, sf_dir)
     clusters = dedup_cluster_frame(spark, sf_dir)
     drops = (
@@ -154,7 +151,6 @@ def decontaminate(spark: SparkSession, sf_dir: str,
     """
     from simpleetlpipeline_spark.functions.similarity import _table_bytes
 
-    ensure_session_conf(spark)
     docs = fan_out(read_table(spark, sf_dir, "documents")).select(
         "doc_id",
         word_ngram_hashes_col(F.col("text"), ngram).alias("grams"))
@@ -208,7 +204,6 @@ def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reproducibility is the point: a mixing manifest must be stable
     across reruns and engines or downstream token counts drift.
     """
-    ensure_session_conf(spark)
     ticket = F.pmod(F.col("doc_id") * F.lit(_MIX_MULT), F.lit(10000))
     keep_per_10k = F.coalesce(
         *[F.when(F.col("lang") == lang, F.lit(frac))
@@ -358,7 +353,6 @@ def corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     One hash aggregate over a narrow projection; distinct fingerprints
     via count_distinct on the 128-bit md5 (uniform, no skew).
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     from simpleetlpipeline_spark.functions.text import STOPWORDS, tokens_col
 
@@ -438,7 +432,6 @@ def pretrain_prepare_report(spark: SparkSession, sf_dir: str,
         PACK_CTX,
         SPLIT_BOUNDS,
     )
-    ensure_session_conf(spark)
     # Single-scan enrichment (round 10, same diagnosis as
     # corpus_curate): quality/language/fingerprint all derive from
     # ONE documents scan via text.doc_token_profile (explode +

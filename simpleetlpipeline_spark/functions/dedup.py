@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.cache import shared, track
 from simpleetlpipeline_spark.io import fan_out, read_table
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 # MinHash parameters: 32 hash functions = 8 bands x 4 rows.
 # P(candidate | jaccard=s) = 1 - (1 - s^4)^8  — ~0.97 at s=0.8,
@@ -214,7 +213,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full text to shrink the shuffle key — both shown here by
     grouping on the fingerprint and keeping min(doc_id) as canonical.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5(F.col("text").cast("binary")).alias("text_md5"))
@@ -255,7 +253,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
     (different hash family, same contract — only equality and
     distinct counts are consumed, and probe/corpus share the
     family), so the string-gram DuckDB oracle is unchanged."""
-    ensure_session_conf(spark)
     roll = rolling_window_hashes_udf(ngram)
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     pre = fan_out(read_table(spark, sf_dir, "documents")).select(
@@ -496,7 +493,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
 
 def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
                        threshold: float) -> DataFrame:
-    ensure_session_conf(spark)
     minhash = minhash_from_gram_hashes_udf()
     raw = fan_out(read_table(spark, sf_dir, "documents"))
     groups = collapse_exact_groups(raw, "doc_id", "text")
@@ -577,7 +573,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str,
     aggregate feeds both the simhash pipeline and the star join —
     one exchange, reused by both branches of the union.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.functions.text import tokens_col
 
     simhash = simhash_from_hashes_udf()
@@ -1040,7 +1035,6 @@ def _pairs_all(spark: SparkSession, sf_dir: str, ngram: int,
     # deliberately recomputes its own: its probe join is one pipelined
     # pass, and materializing a cache there measured SLOWER (8s vs
     # ~3s at sf0.1) — reuse only wins when a stream is scanned twice.
-    ensure_session_conf(spark)
     ex = track(
         fan_out(read_table(spark, sf_dir, "documents"))
         .select("doc_id", F.explode(word_ngram_hashes_col(
@@ -1203,7 +1197,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a persisted bucketed table and the join is exchange-free on
     the batch side only.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     fp = F.md5(F.col("text").cast("binary"))
     batch = (docs.filter(F.pmod("doc_id", F.lit(INCR_MOD)) == 0)
@@ -1318,7 +1311,6 @@ def dedup_shared_windows(spark: SparkSession, sf_dir: str,
     the pair key; fan-out bounded at C(df_cap, 2) per window at any
     corpus size.
     """
-    ensure_session_conf(spark)
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     docs = fan_out(read_table(spark, sf_dir, "documents")).select(
         "doc_id",
@@ -1416,7 +1408,6 @@ def segment_dedup(spark: SparkSession, sf_dir: str,
     linear in corpus size at any SF.
     Output digest is md5 (computed identically by Spark and DuckDB)
     so the oracle hashes the rebuilt TEXT, not just counts."""
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     n_segs = F.ceil(F.size(toks) / F.lit(float(seg_len))).cast("int")
@@ -1541,7 +1532,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str,
         word_gram_strings_expr,
     )
 
-    ensure_session_conf(spark)
     docs = fan_out(read_table(spark, sf_dir, "documents"))
     gram_sources = (docs
                     .withColumn("__toks",
@@ -1647,7 +1637,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str,
     output IS the ground-truth pair graph restricted to pairs
     touching a batch document — one WHERE clause on
     _MINHASH_PAIRS_SQL (plus the equivalence pytest)."""
-    ensure_session_conf(spark)
     minhash = minhash_from_gram_hashes_udf()
     raw = fan_out(read_table(spark, sf_dir, "documents"))
     groups = collapse_exact_groups(raw, "doc_id", "text")

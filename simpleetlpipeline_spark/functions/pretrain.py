@@ -48,7 +48,6 @@ from simpleetlpipeline_spark.operators.dates import ts_lit
 from simpleetlpipeline_spark.functions.similarity import as_double_vec
 from simpleetlpipeline_spark.functions.text import tokens_col
 from simpleetlpipeline_spark.io import fan_out, read_table
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 # ---------------------------------------------------------------- PII
 
@@ -102,7 +101,6 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle verifies the rewritten payload, not just the
     counts. Narrow projection — no shuffle at any scale.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     planted = F.col("text")
@@ -151,7 +149,6 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip_with bigram pass already spends (the round-10 lesson:
     interpreted HOF passes are a LINEAR per-row cost; the thing to
     kill at scale is the shuffle, not the lambda)."""
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens_col(F.col("text"))
 
@@ -250,7 +247,6 @@ def sequence_pack(spark: SparkSession, sf_dir: str,
     more than a file's worth of rows.
     """
     from pyspark.sql import Window
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     n = F.size(tokens_col(F.col("text"))).cast("long")
     w = (Window.partitionBy("source").orderBy("doc_id")
@@ -274,7 +270,6 @@ def source_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     One hash aggregate (map-side combined) + a broadcast of the
     1-row global total back across the groups — no per-row window.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     n = F.size(tokens_col(F.col("text"))).cast("long")
     per = (docs.select("source", "lang", n.alias("n"))
@@ -329,7 +324,6 @@ def kmeans_assign(spark: SparkSession, sf_dir: str,
     family's first consumer from the shared centroids, which survive
     release_caches() — a rebuild never re-runs the Lloyd loop.
     """
-    ensure_session_conf(spark)
     return shared(spark, ("kmeans_assign", sf_dir, k, iters), lambda: (
         _nearest(_kmeans_input(spark, sf_dir),
                  _kmeans_centroids(spark, sf_dir, k, iters))
@@ -419,7 +413,6 @@ def shard_manifest(spark: SparkSession, sf_dir: str,
     One hash aggregate, map-side combined; the subsequent write would
     be repartition(n_shards, shard) with each task streaming one file.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     shard = F.pmod((F.col("doc_id") * _SHARD_HASH_A) % _SHARD_HASH_MOD,
                    F.lit(n_shards))
@@ -768,7 +761,6 @@ def train_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently while DuckDB promotes to INT128, silently diverging the
     split assignment at large corpus ids.
     """
-    ensure_session_conf(spark)
     ticket = F.pmod(
         F.pmod(F.col("doc_id"), F.lit(10000)) * F.lit(_SPLIT_MULT),
         F.lit(10000))
@@ -815,7 +807,6 @@ def feature_scaling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups, no second pass (the sufficient-statistics trick vs the
     naive mean-then-variance double scan).
     """
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "event_type",
         F.floor(F.col("value") * 1e6).cast("long").alias("v6"))
@@ -882,7 +873,6 @@ def user_level_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant the pytest would state — no user in two splits — holds
     by construction (the ticket is a function of the group key).
     """
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select("user_id", "event_id")
     ticket = F.pmod(
         F.pmod(F.col("user_id"), F.lit(10000)) * F.lit(_SPLIT_MULT),
@@ -946,7 +936,6 @@ def stratified_exact_sample(spark: SparkSession, sf_dir: str,
     result, no single-reducer sort. Ticket arithmetic is the
     overflow-safe reduced form shared with train_split_assign.
     """
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     docs = read_table(spark, sf_dir, "documents").select(
@@ -998,7 +987,6 @@ def kmeans_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame, then |clusters| rows — evaluation is free relative to
     the clustering itself.
     """
-    ensure_session_conf(spark)
     assigned = kmeans_assign(spark, sf_dir).select("cluster", "label")
     by_pair = assigned.groupBy("cluster", "label").agg(
         F.count(F.lit(1)).alias("n"))
@@ -1063,7 +1051,6 @@ def negative_samples(spark: SparkSession, sf_dir: str,
     non-contiguous key space needs one extra dense-rank dimension
     map); the rejection is a single anti-join shuffled on (custkey,
     partkey) — linear end to end, no windows, no driver collect."""
-    ensure_session_conf(spark)
     n_parts = (read_table(spark, sf_dir, "part")
                .agg(F.count(F.lit(1)).alias("__n_parts")))
     purchasers = (read_table(spark, sf_dir, "orders")
@@ -1152,7 +1139,6 @@ def token_weighted_sample(spark: SparkSession, sf_dir: str,
     from simpleetlpipeline_spark.operators.aggregates import (
         two_pass_global_window)
 
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(tokens_col(F.col("text"))).cast("long")
         .alias("n_tokens"))
@@ -1237,7 +1223,6 @@ def priority_sample_docs(spark: SparkSession, sf_dir: str,
     from simpleetlpipeline_spark.functions.text import tokens_col
     from simpleetlpipeline_spark.operators.aggregates import salted_topk
 
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(tokens_col(F.col("text"))).cast("long")
         .alias("n_tokens"))
@@ -1333,7 +1318,6 @@ def woe_encoding(spark: SparkSession, sf_dir: str,
     (max_by-free: a plain max of a boolean), broadcast-joined to the
     customer dim -> |segments| hash agg. At 100 TB the orders agg is
     the only big shuffle (keyed by custkey, map-side combined)."""
-    ensure_session_conf(spark)
     customers = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment")
     orders = read_table(spark, sf_dir, "orders").select(
@@ -1448,7 +1432,6 @@ def gains_lift_table(spark: SparkSession, sf_dir: str,
     from simpleetlpipeline_spark.operators.aggregates import (
         ntile_from_rank, two_pass_global_window)
 
-    ensure_session_conf(spark)
     orders = (
         read_table(spark, sf_dir, "orders")
         .select("o_custkey", "o_totalprice",
@@ -1585,7 +1568,6 @@ def quantile_normalize_quality(spark: SparkSession,
     from simpleetlpipeline_spark.functions.text import doc_token_profile
     from simpleetlpipeline_spark.io import read_table as _rt
 
-    ensure_session_conf(spark)
     docs = doc_token_profile(
         _rt(spark, sf_dir, "documents"),
         extra={"source": F.col("source")},
@@ -1676,7 +1658,6 @@ def calibration_reliability(spark: SparkSession, sf_dir: str,
     from simpleetlpipeline_spark.operators.aggregates import (
         ntile_from_rank, two_pass_global_window)
 
-    ensure_session_conf(spark)
     orders = (
         read_table(spark, sf_dir, "orders")
         .select("o_custkey", "o_totalprice",

@@ -39,7 +39,6 @@ from simpleetlpipeline_spark.cache import file_stamp, shared, track
 from simpleetlpipeline_spark.functions.dedup import (
     cap_bucket_members, collapse_exact_groups, star_pairs)
 from simpleetlpipeline_spark.io import driver_rows_df, fan_out, read_table
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 N_PROBES = 10          # probe set = vec_id < N_PROBES
 TOP_K = 10
@@ -187,7 +186,6 @@ def ann_topk(spark: SparkSession, sf_dir: str,
     only shuffles are the two salted/final top-k exchanges keyed by
     probe id — linear in corpus size.
     """
-    ensure_session_conf(spark)
     vecs = _vectors(spark, sf_dir)
     probes = (
         vecs.filter(F.col("vec_id") < n_probes)
@@ -267,7 +265,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str,
     tuned by (planes, bands); verified against ann_topk in
     tests/test_similarity.py.
     """
-    ensure_session_conf(spark)
     vecs = _vectors(spark, sf_dir)
     # Band width scales with corpus size (see LSH_TARGET_OCCUPANCY):
     # constant occupancy keeps the candidate join linear in n.
@@ -324,7 +321,6 @@ def embedding_neardup(spark: SparkSession, sf_dir: str,
     is the broadcast build side, so past max_bytes this refuses to
     plan rather than OOM an executor mid-stage.
     """
-    ensure_session_conf(spark)
     n_bytes = _table_bytes(sf_dir, "embeddings")
     if n_bytes > max_bytes:
         raise ValueError(
@@ -375,7 +371,6 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str,
     exact-cosine verify of the surviving candidate pairs (broadcast
     matrix below the size gate, id-joins above it).
     """
-    ensure_session_conf(spark)
     small = _table_bytes(sf_dir, "embeddings") <= EXACT_NEARDUP_MAX_BYTES
     raw = fan_out(read_table(spark, sf_dir, "embeddings"))
     groups = collapse_exact_groups(raw, "vec_id", "embedding")
@@ -507,7 +502,6 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups however large the corpus. Values floored to 6dp for
     cross-engine stability.
     """
-    ensure_session_conf(spark)
     emb = read_table(spark, sf_dir, "embeddings")
     return (
         emb.select("label", F.posexplode(as_double_vec(F.col("embedding")))
@@ -570,7 +564,6 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str,
     the fusion cost is unchanged."""
     from simpleetlpipeline_spark.functions.text import bm25_doc_ranking
 
-    ensure_session_conf(spark)
     lex_pool = bm25_doc_ranking(spark, sf_dir, k=pool)
     w_lex = Window.orderBy(F.desc("score_micro"), F.asc("doc_id"))
     lex = lex_pool.select(
@@ -829,7 +822,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str,
     the cache write costs more than the cheap columnar re-scans it
     saves, so the rescans stay.
     """
-    ensure_session_conf(spark)
     vecs = _vectors(spark, sf_dir)
     cents = _centroid_cells(vecs)
     corpus_cells = _assign_cells(vecs, cents, nprobe=1).select(
@@ -943,7 +935,6 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical float32-widened inputs. Narrow projection — no shuffle
     at any scale.
     """
-    ensure_session_conf(spark)
     emb = read_table(spark, sf_dir, "embeddings")
     e = as_double_vec(F.col("embedding"))
     absmax = F.array_max(F.transform(e, F.abs))
@@ -1172,7 +1163,6 @@ def embedding_outliers(spark: SparkSession, sf_dir: str,
     rewrite ann_topk ships; the window form is the oracle-checkable
     tier.
     """
-    ensure_session_conf(spark)
     emb = fan_out(read_table(spark, sf_dir, "embeddings"))
     centroids = (
         emb.select("label", F.posexplode(as_double_vec(F.col("embedding")))
@@ -1277,7 +1267,6 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str,
     contract); argmax by (sim DESC, probe id ASC) via one struct
     max, no window.
     """
-    ensure_session_conf(spark)
     vecs = _vectors(spark, sf_dir)
     probes = (
         vecs.filter(F.col("vec_id") < n_probes)
@@ -1371,7 +1360,6 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str,
     TakeOrdered job: every vec_id < n_probes row is by construction
     among the PQ_K lowest vec_ids (unique ids, n_probes <= PQ_K).
     """
-    ensure_session_conf(spark)
     assert n_probes <= PQ_K, "probe rows must lie within the codebook rows"
     head = (read_table(spark, sf_dir, "embeddings")
             .orderBy("vec_id").limit(PQ_K)
@@ -1529,7 +1517,6 @@ def ann_recall_report(spark: SparkSession, sf_dir: str,
     top-k frame is |probes| x k; the join+agg here is trivial
     against the index costs themselves.
     """
-    ensure_session_conf(spark)
     # the exact scorer is the expensive stage; persist ONE copy and
     # reuse it both as ground truth (probed once per method) and as
     # the self-check method row — without this the O(|probes| x n)
@@ -1590,7 +1577,6 @@ def ann_incremental_topk(spark: SparkSession, sf_dir: str,
     instead of rescoring the corpus; the base top-k is the cached
     artifact from the previous run (recomputed here so the entry is
     self-contained and stateless under the gate)."""
-    ensure_session_conf(spark)
     vecs = _vectors(spark, sf_dir)
     probes = (
         vecs.filter(F.col("vec_id") < n_probes)
@@ -1663,7 +1649,6 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: posexplode -> ONE hash aggregate keyed by dim (64 groups,
     map-side combined) — shuffle volume is 64 rows of partials per
     task at any corpus size."""
-    ensure_session_conf(spark)
     emb = fan_out(read_table(spark, sf_dir, "embeddings"))
     d38 = "decimal(38,0)"
     q = F.floor(F.col("v") * 1e8).cast("long")
@@ -1757,7 +1742,6 @@ def embedding_pca_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pytest contract checks eigenvalues against a direct numpy
     covariance+eigh of the collected matrix and the whitening
     property W C W^T = I."""
-    ensure_session_conf(spark)
     import numpy as np
     import pandas as pd
 

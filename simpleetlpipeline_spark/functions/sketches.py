@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.io import read_table
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 #: HLL relative standard deviation; the _ok bound allows 3 sigma.
 HLL_RSD = 0.02
@@ -50,7 +49,6 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; the exact distinct needs a (type, user) de-dup shuffle
     first) — the exact column exists here to be the oracle's witness.
     """
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     approx = F.approx_count_distinct("user_id", rsd=HLL_RSD)
     exact = F.count_distinct("user_id")
@@ -74,7 +72,6 @@ def quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary state is bounded and mergeable; the exact percentile()
     columns exist as the oracle's witness and bound rails.
     """
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
 
     def ok(p: float) -> F.Column:
@@ -158,7 +155,6 @@ def heavy_hitter_users(spark: SparkSession, sf_dir: str,
     (groupBy user -> TakeOrdered) is the oracle witness; its k-row
     collect (to learn the k-th share) is the sanctioned small collect.
     """
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     top = (
         events.groupBy("user_id")
@@ -246,7 +242,6 @@ def hll_shard_merge(spark: SparkSession, sf_dir: str,
     per-shard sketches as a materialized rollup and drop the exact
     pass — the booleans here are the evidence that's safe.
     """
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events").select(
         "event_type", "user_id",
         (F.col("user_id") % n_shards).alias("shard"))
@@ -320,7 +315,6 @@ def hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-sigma tail draw at a new scale factor must not red the gate);
     the tight 3x scientific bound is asserted in
     tests/test_stats_ops.py."""
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     ut = events.select(F.col("event_type").alias("t"),
                        F.col("user_id").alias("u")).distinct()
@@ -445,7 +439,6 @@ def cms_user_event_counts(spark: SparkSession,
     top-k for the witness; 3 broadcast counter lookups."""
     from simpleetlpipeline_spark.cache import track
 
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("long").alias("u"))
 

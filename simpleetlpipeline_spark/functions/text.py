@@ -19,7 +19,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.io import read_table
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 # Small fixed stopword list shared with the SQL oracles — keep in
 # sync with _STOPWORDS_SQL below.
@@ -221,7 +220,6 @@ def doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(1, n_tokens/50) times (1 - stopword_ratio), truncated to 4dp.
     One narrow projection over the scan — no shuffle at any scale.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens_col(F.col("text"))
     n_tokens = F.size(toks).cast("long")
@@ -246,7 +244,6 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting under a BPE-ish regex pretokenizer —
     the counting a training-data pipeline runs to budget documents.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -261,7 +258,6 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     language, argmax with alphabetical tiebreak ('unknown' when no
     marker hits). Pure column expressions — no UDF.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -278,7 +274,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     simhash fingerprint lives in dedup.dedup_simhash (xxhash64-based,
     engine-specific, so checked by unit tests instead of the oracle).
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -366,7 +361,6 @@ def term_frequencies(spark: SparkSession, sf_dir: str,
     partition to its vocabulary before the shuffle, so shuffle volume
     is vocab-sized, not token-sized; the top-N plans as
     TakeOrderedAndProject (no global sort materialization)."""
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     # fan_out: tokenization + explode + partial agg run pre-shuffle at
@@ -397,7 +391,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     differ in the last ulp, and ordering by the raw value would let
     that flip neighboring ranks; after flooring, ties break on token.
     """
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     from simpleetlpipeline_spark.io import fan_out
@@ -455,7 +448,6 @@ def doc_chunk(spark: SparkSession, sf_dir: str,
     its own rows ~n/stride-fold with no shuffle; the natural shape for
     chunking 100 TB of text.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     docs = fan_out(read_table(spark, sf_dir, "documents"))
@@ -492,7 +484,6 @@ def bpe_merge_pairs(spark: SparkSession, sf_dir: str,
     is pair-vocabulary-sized, not corpus-sized) -> TakeOrderedAndProject
     top-N with deterministic pair tie-break.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     docs = fan_out(read_table(spark, sf_dir, "documents"))
@@ -615,7 +606,6 @@ def tokenize_ids(spark: SparkSession, sf_dir: str,
     Scale: explode -> broadcast-hash-join -> (doc_id) hash agg with
     map-side combine; the only shuffle is corpus-linear on doc_id.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     docs = fan_out(read_table(spark, sf_dir, "documents"))
@@ -697,7 +687,6 @@ def doc_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself agrees across engines to the ulp, and floor (unlike
     round) has no tie-break to diverge on.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     docs = fan_out(read_table(spark, sf_dir, "documents"))
@@ -773,7 +762,6 @@ def bigram_pmi(spark: SparkSession, sf_dir: str,
     tail BEFORE the joins, so the joined set is the frequent-pair
     vocabulary only. Top-N plans as TakeOrderedAndProject.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     docs = fan_out(read_table(spark, sf_dir, "documents"))
@@ -868,7 +856,6 @@ def token_char_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     corr() is NOT used: engines disagree on the streaming/Welford
     fold). One hash aggregate with map-side partials, floored 4dp.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     x = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
     y = F.length("text")
@@ -948,7 +935,6 @@ def bigram_doc_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins back onto the pair stream (at 100 TB the bigram vocabulary
     outgrows a broadcast) -> per-doc integer-sum aggregate.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     docs = fan_out(read_table(spark, sf_dir, "documents"))
@@ -1023,7 +1009,6 @@ def ttr_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct for approx_count_distinct and keep hapax from a
     count-min sketch — the exact form is the oracle-checkable tier.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     docs = fan_out(read_table(spark, sf_dir, "documents"))
@@ -1090,7 +1075,6 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|^2-bounded pair table. Integer counts -> floored 4dp
     ratio, deterministic in any fold order.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     docs = fan_out(read_table(spark, sf_dir, "documents"))
@@ -1184,7 +1168,6 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow projection — no shuffle at all until a downstream
     aggregate.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = F.filter(tokens_col(F.col("text")), lambda t: t != "")
     n = F.size(toks)
@@ -1352,7 +1335,6 @@ def quality_filter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid cross-joins the spine — the corpus never replicates per
     threshold (the naive explode-per-threshold form pushes T x
     corpus rows through the shuffle)."""
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
 
     # One explode pass feeds BOTH rules' token counts; the per-doc
@@ -1444,7 +1426,6 @@ def compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ordering the signal exists for: looped text < natural-ish
     text < incompressible noise.
     """
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.io import fan_out
 
     docs = fan_out(read_table(spark, sf_dir, "documents"))
@@ -1503,7 +1484,6 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str,
     per-token window over the same tf stream -> broadcast the
     one-row corpus stats -> per-doc integer sum -> top-k as
     TakeOrderedAndProject. No all-pairs stage at any scale."""
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     from simpleetlpipeline_spark.io import fan_out
@@ -1623,7 +1603,6 @@ def language_sampling_weights(spark: SparkSession,
 
     Shape: one map-side-combined per-language token agg over the
     scan; everything after is |languages|-sized."""
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     docs = read_table(spark, sf_dir, "documents")
@@ -1718,7 +1697,6 @@ def zipf_term_fit(spark: SparkSession, sf_dir: str,
     from simpleetlpipeline_spark.io import fan_out
     from simpleetlpipeline_spark.operators.aggregates import salted_topk
 
-    ensure_session_conf(spark)
     docs = fan_out(read_table(spark, sf_dir, "documents"))
     vocab = (
         docs.select(F.explode(tokens_col(F.col("text"))).alias("token"))
@@ -1859,7 +1837,6 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str,
     combined; short docs (< n tokens) surface with zero grams."""
     from simpleetlpipeline_spark.io import fan_out
 
-    ensure_session_conf(spark)
     from pyspark.sql import Window
 
     docs = fan_out(read_table(spark, sf_dir, "documents"))
@@ -1939,7 +1916,6 @@ def token_fertility_by_source(spark: SparkSession,
     Shape: one narrow projection, one map-side-combined hash agg to
     |sources| rows — linear at any corpus size.
     """
-    ensure_session_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "source",
@@ -2042,7 +2018,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str,
     """
     from simpleetlpipeline_spark.cache import track
 
-    ensure_session_conf(spark)
     g = "\x01"
     words = (read_table(spark, sf_dir, "documents")
              .select(F.explode(tokens_col(F.col("text"))).alias("w"))

@@ -167,9 +167,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DuckDB/Arrow do so both engines see identical instants; a micros
     file passes through untouched.
     """
-    from simpleetlpipeline_spark.session import ensure_session_conf
-
-    ensure_session_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = TESTDATA_SCHEMAS.get(name)
     if schema is not None:
@@ -198,8 +195,8 @@ def _events_ts_type(spark: SparkSession, path: str):
     physical type re-probes.
 
     TIMESTAMP_NTZ is normalized to TIMESTAMP here: if the session's
-    inferTimestampNTZ=false conf didn't take (ensure_session_conf is
-    best-effort on externally-built sessions), the probe would
+    inferTimestampNTZ=false conf didn't take (the catalog's session
+    pin is best-effort on externally-built sessions), the probe would
     otherwise leak NTZ into the declared schema and break
     unix_micros/watermark/numeric-cast paths downstream. Under the
     UTC session timezone the wall-clock values are identical.

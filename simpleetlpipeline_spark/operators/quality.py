@@ -200,9 +200,7 @@ def k_anonymity_report(spark, sf_dir: str, k: int = K_ANONYMITY_K):
     from pyspark.sql import functions as F
 
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     cust = read_table(spark, sf_dir, "customer")
 
     def level(name, cols):
@@ -255,10 +253,8 @@ def table_stats_profile(spark, sf_dir: str, ndv_mode: str = "exact"):
     from pyspark.sql import functions as F
 
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
     assert ndv_mode in ("exact", "approx"), ndv_mode
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("long")
     micros = (F.unix_micros(F.col("o_orderdate"))).cast("long")
@@ -344,9 +340,7 @@ def expectation_suite_report(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders")
     li = read_table(spark, sf_dir, "lineitem").select("l_orderkey")
 
@@ -415,9 +409,7 @@ def l_diversity_report(spark, sf_dir: str, l_min: int = L_DIVERSITY_L):
     from pyspark.sql import functions as F
 
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     cust = read_table(spark, sf_dir, "customer").select(
         "c_nationkey", "c_mktsegment",
         F.expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) "
@@ -480,9 +472,7 @@ def dp_noisy_nation_counts(spark, sf_dir: str,
     from pyspark.sql import functions as F
 
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     counts = (read_table(spark, sf_dir, "customer")
               .groupBy("c_nationkey")
               .agg(F.count(F.lit(1)).alias("true_count")))

@@ -121,9 +121,7 @@ def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer unchanged, which must produce zero churn rows. Output
     is the full post-merge SCD2 table."""
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     snap = read_table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.round("c_acctbal", 2).alias("c_acctbal"),
@@ -203,9 +201,7 @@ def events_point_in_time_enrich(spark: SparkSession,
     data-derived scalars.
     """
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     hist = scd2_customer_history(spark, sf_dir).select(
         F.col("c_custkey").alias("h_key"), "c_mktsegment",
         F.col(VALID_FROM).alias("vf"), F.col(VALID_TO).alias("vt"))

@@ -45,7 +45,6 @@ from simpleetlpipeline_spark.schemas import (
     REFERENCE_SCHEMAS,
     TARGET_COLUMNS,
 )
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 #: Submission order (reference's FK-respecting order, main.py:570-575).
 LOAD_ORDER = ("customers", "products", "orders", "order_items")
@@ -280,32 +279,21 @@ def update_calculated_fields(spark: SparkSession, config: ETLConfig) -> DataFram
     return read_table_version(spark, root, schema=enriched.schema)
 
 
-def run_full_pipeline(spark: SparkSession, source_dir: str,
-                      config: ETLConfig) -> RunMetrics:
-    """ETL loop with per-table failure isolation (reference
-    run_full_pipeline, main.py:560-610): one table's failure records
-    an error and the rest still load.
-
-    Tables load CONCURRENTLY (config.parallel_tables submission
-    threads; each thread drives its table's Spark jobs, and the
-    scheduler interleaves their stages across executor cores). This is
-    safe because every table is an independent warehouse path with an
-    independent job DAG — the reference's FK-ordered sequencing only
-    existed because SQLite enforced... nothing (FKs declared, never
-    enabled; SURVEY.md §2.4 J3) — and the one true dependency, the
-    customer rollup, runs after the barrier below.
-    """
+def _run_chains(spark: SparkSession, config: ETLConfig,
+                chain) -> RunMetrics:
+    """Run chain(table) -> (records_processed, records_inserted) for
+    every table of LOAD_ORDER on config.parallel_tables submission
+    threads, then the customer rollup after the barrier. One table's
+    failure records an error and the rest still load."""
     from concurrent.futures import ThreadPoolExecutor
 
-    ensure_session_conf(spark)
     metrics = RunMetrics()
     t0 = time.monotonic()
 
     def _one(table: str) -> tuple[str, float, tuple[int, int] | None, str | None]:
         t_start = time.monotonic()
         try:
-            counts = load_table(
-                spark, table, os.path.join(source_dir, f"{table}.csv"), config)
+            counts = chain(table)
             return table, time.monotonic() - t_start, counts, None
         except Exception as exc:  # noqa: BLE001 — isolation is the contract
             return table, time.monotonic() - t_start, None, str(exc)
@@ -327,6 +315,25 @@ def run_full_pipeline(spark: SparkSession, source_dir: str,
     return metrics
 
 
+def run_full_pipeline(spark: SparkSession, source_dir: str,
+                      config: ETLConfig) -> RunMetrics:
+    """ETL loop with per-table failure isolation (reference
+    run_full_pipeline, main.py:560-610): one table's failure records
+    an error and the rest still load.
+
+    Tables load CONCURRENTLY (config.parallel_tables submission
+    threads; each thread drives its table's Spark jobs, and the
+    scheduler interleaves their stages across executor cores). This is
+    safe because every table is an independent warehouse path with an
+    independent job DAG — the reference's FK-ordered sequencing only
+    existed because SQLite enforced... nothing (FKs declared, never
+    enabled; SURVEY.md §2.4 J3) — and the one true dependency, the
+    customer rollup, runs after the barrier.
+    """
+    return _run_chains(spark, config, lambda table: load_table(
+        spark, table, os.path.join(source_dir, f"{table}.csv"), config))
+
+
 def run_generated_pipeline(spark: SparkSession, source_dir: str,
                            config: ETLConfig, n_customers: int,
                            n_products: int, n_orders: int) -> RunMetrics:
@@ -340,41 +347,17 @@ def run_generated_pipeline(spark: SparkSession, source_dir: str,
     run_full_pipeline remains the pure-load surface for pre-existing
     sources (reference parity: generate and run are separate stages,
     main.py:757-775, but nothing in the data couples the barriers)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from simpleetlpipeline_spark.generator import table_builders
     from simpleetlpipeline_spark.io import write_csv
 
-    ensure_session_conf(spark)
-    metrics = RunMetrics()
-    t0 = time.monotonic()
     builders = table_builders(spark, n_customers, n_products, n_orders)
 
-    def _chain(table: str):
-        t_start = time.monotonic()
+    def chain(table: str) -> tuple[int, int]:
         src = os.path.join(source_dir, f"{table}.csv")
-        try:
-            write_csv(builders[table], src)
-            counts = load_table(spark, table, src, config)
-            return table, time.monotonic() - t_start, counts, None
-        except Exception as exc:  # noqa: BLE001 — isolation is the contract
-            return table, time.monotonic() - t_start, None, str(exc)
+        write_csv(builders[table], src)
+        return load_table(spark, table, src, config)
 
-    with ThreadPoolExecutor(max_workers=max(1, config.parallel_tables)) as ex:
-        results = list(ex.map(_chain, LOAD_ORDER))
-    for table, elapsed, counts, err in results:
-        metrics.table_times[table] = round(elapsed, 4)
-        if err is None:
-            metrics.records_processed += counts[0]
-            metrics.records_inserted += counts[1]
-            metrics.successful_tables += 1
-        else:
-            metrics.failed_tables += 1
-            metrics.errors[table] = err
-    if metrics.errors.keys().isdisjoint({"customers", "orders"}):
-        update_calculated_fields(spark, config)
-    metrics.total_time = round(time.monotonic() - t0, 4)
-    return metrics
+    return _run_chains(spark, config, chain)
 
 
 #: Where etl_pipeline_run leaves the generated source CSVs for its

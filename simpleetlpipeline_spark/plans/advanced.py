@@ -46,7 +46,6 @@ from simpleetlpipeline_spark.operators.dates import (
     week_start,
 )
 from simpleetlpipeline_spark.plans.analytics import COMPLETED
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 
 def customer_order_ranks(spark: SparkSession, sf_dir: str,
@@ -54,7 +53,6 @@ def customer_order_ranks(spark: SparkSession, sf_dir: str,
     """Top-k orders per customer by value: row_number() over a
     per-customer window — the grouped generalization of the
     reference's global ORDER BY ... LIMIT top-k (main.py:672-685)."""
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_totalprice")
     w = Window.partitionBy("o_custkey").orderBy(
@@ -75,7 +73,6 @@ def monthly_revenue_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles in the identical (month-ordered) sequence — bit-equal
     accumulations, stable under the final round(2).
     """
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders")
     # hot-path pattern (dates.month_label contract): bucket rows by
     # the pure-DATE month_start, render the label on the aggregated
@@ -109,7 +106,6 @@ def events_asof_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id) so the match is deterministic. Inner semantics: events
     with no prior purchase are dropped, mirroring DuckDB ASOF JOIN.
     """
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type")
     purchases = (
@@ -159,7 +155,6 @@ def order_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the identically-sorted doubles, so values are bit-equal;
     floored to 4dp (division-derived, far from .xx5 boundaries).
     """
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders")
     pct = orders.groupBy("o_orderstatus").agg(
         F.percentile("o_totalprice", F.array(*[F.lit(p) for p in PERCENTILES]))
@@ -182,7 +177,6 @@ def sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation covers all grouping sets map-side; without ROLLUP
     this is three scans). grouping_id() disambiguates the NULL
     placeholder rows exactly as DuckDB's GROUPING()."""
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
@@ -212,7 +206,6 @@ def events_conversion_window(spark: SparkSession, sf_dir: str,
     at any corpus size. DuckDB oracle is the plain inequality join
     (its optimizer plans an IEJoin — the single-node luxury).
     """
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type")
     views = events.filter(F.col("event_type") == "view").select(
@@ -243,7 +236,6 @@ def repeat_status_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     any with a 'P' order (EXCEPT). Spark plans these as aggregates/
     anti-joins over pre-filtered key projections — each leg pushes
     its status filter to the scan and shuffles only distinct keys."""
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders")
     keys = lambda s: orders.filter(  # noqa: E731
         F.col("o_orderstatus") == s).select("o_custkey")
@@ -267,7 +259,6 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str,
     groups with map-side partials. Filters (r_name, o_orderstatus)
     push to the scans.
     """
-    ensure_session_conf(spark)
     nations = (
         read_table(spark, sf_dir, "nation")
         .join(F.broadcast(read_table(spark, sf_dir, "region")
@@ -313,7 +304,6 @@ def events_pivot_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pivot with known values = groupBy day, one conditional count
     per type, map-side partials — no second shuffle). Oracle is the
     ANSI conditional-aggregation spelling."""
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     return (
         events.select(epoch_date("ts").alias("day"), "event_type")
@@ -456,9 +446,7 @@ def events_anomaly(spark: SparkSession, sf_dir: str,
     z is floored to 4dp in both engines for stable comparison.
     """
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     stats = (events.groupBy("event_type")
              .agg(F.avg("value").alias("__mean"),
@@ -521,9 +509,7 @@ def fuzzy_name_neighbors(spark: SparkSession, sf_dir: str,
     sized) broadcast onto the row scan; two linear passes total.
     """
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     parts = read_table(spark, sf_dir, "part").select(
         "p_partkey", "p_name",
         F.split("p_name", " ")[0].alias("blk"),
@@ -654,9 +640,7 @@ def events_value_histogram(spark: SparkSession, sf_dir: str,
     (floor((v-min)/w) == n for v == max).
     """
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     rng = (events.groupBy("event_type")
            .agg(F.min("value").alias("__lo"), F.max("value").alias("__hi")))
@@ -720,9 +704,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (PushedFilters); sums are rounded to 2dp in both engines.
     """
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     li = read_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= ts_lit(PRICING_CUTOFF))
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -776,9 +758,7 @@ def events_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from simpleetlpipeline_spark.io import read_table
     from simpleetlpipeline_spark.operators.aggregates import key_skew_report
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     return key_skew_report(read_table(spark, sf_dir, "events"), "event_type")
 
 
@@ -812,9 +792,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     events. Emits one row of funnel counts (integer-exact).
     """
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     views = (events.filter(F.col("event_type") == "view")
              .groupBy("user_id").agg(F.min("ts").alias("v_ts")))
@@ -882,9 +860,7 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw events.
     """
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     # week_start: Monday DATE from pure epoch-day arithmetic (the
     # timezone-proof replacement for to_date(date_trunc('week', ts));
@@ -916,9 +892,7 @@ def events_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine needed).
     """
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     pairs = (events.select("user_id", epoch_date("ts").alias("day"))
              .distinct())
@@ -991,9 +965,7 @@ def ship_latency_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     impossible rows hides exactly the data bugs it exists to catch.
     """
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate")
     orders = read_table(spark, sf_dir, "orders").select(
@@ -1049,9 +1021,7 @@ def supplier_geo_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppliers × customers per nation.
     """
     from simpleetlpipeline_spark.io import read_table
-    from simpleetlpipeline_spark.session import ensure_session_conf
 
-    ensure_session_conf(spark)
     region = read_table(spark, sf_dir, "region").select(
         "r_regionkey", "r_name")
     nation = read_table(spark, sf_dir, "nation").select(
@@ -1159,7 +1129,6 @@ def zorder_layout_manifest(spark: SparkSession, sf_dir: str,
     from simpleetlpipeline_spark.operators.aggregates import (
         ntile_from_rank, two_pass_global_window)
 
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts")
     keyed = events.select(
@@ -1235,7 +1204,6 @@ def events_unpivot_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Round-trip contract: re-aggregating this output
     reproduces the original (day, type) counts exactly — pinned by
     the pytest."""
-    ensure_session_conf(spark)
     wide = events_pivot_daily(spark, sf_dir)
     return (
         wide.unpivot("day", list(EVENT_TYPES), "event_type", "n_events")
@@ -1294,7 +1262,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str,
     from simpleetlpipeline_spark.operators.aggregates import (
         ntile_from_rank, two_pass_global_ranks)
 
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice")
     anchor = orders.agg(
@@ -1381,7 +1348,6 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins move |users| rows, not raw events; timestamps compare at
     exact microsecond precision in both engines.
     """
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type")
     v = (events.filter(F.col("event_type") == "view")
@@ -1460,7 +1426,6 @@ def revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from simpleetlpipeline_spark.operators.aggregates import (
         ntile_from_rank, two_pass_global_window)
 
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice")
     per_cust = (orders.groupBy("o_custkey")
@@ -1554,7 +1519,6 @@ def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a month join — at 100 TB both distincts swap for HLL
     sketches (hll_shard_merge is the evidence that is safe).
     """
-    ensure_session_conf(spark)
     # one epoch_date per row; the month bucket is a pure-DATE trunc
     # of it (no per-row strings — the dates.month_label contract)
     events = read_table(spark, sf_dir, "events").select(
@@ -1620,7 +1584,6 @@ def monthly_seasonality_index(spark: SparkSession,
     the index is a fixed IEEE chain floored 4dp. Two tiny aggregates
     over the |months| rollup frame (which itself folds map-side from
     orders) plus a one-row broadcast."""
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == COMPLETED)
     monthly = (orders.groupBy(
@@ -1697,7 +1660,6 @@ def rolling_7d_revenue(spark: SparkSession, sf_dir: str,
     both engines; the double cast happens only at output), and the
     RANGE bound is an integer day offset computed identically in
     both engines from the same epoch."""
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_orderdate", "o_totalprice")
     daily = (
@@ -1787,7 +1749,6 @@ def user_value_ewma(spark: SparkSession, sf_dir: str,
     diverge from the weighted sum, so both sides filter them
     (testdata has none — the filter is a contract, not a
     workaround)."""
-    ensure_session_conf(spark)
     ev = (read_table(spark, sf_dir, "events")
           .select("user_id", "ts", "event_id", "value")
           .filter(F.col("value").isNotNull()))
@@ -1856,7 +1817,6 @@ def top_events_per_user(spark: SparkSession, sf_dir: str,
     task."""
     from simpleetlpipeline_spark.operators.aggregates import salted_topk
 
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "value")
     out = salted_topk(
@@ -1905,7 +1865,6 @@ def event_pattern_conversions(spark: SparkSession, sf_dir: str,
     (the sessionization bound — a regex over it is linear); no
     windows, no second pass. At 100 TB the hot-key mitigation is the
     same time-chunking note as user_value_ewma."""
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id",
         F.substring("event_type", 1, 1).alias("ch"))
@@ -1968,7 +1927,6 @@ def benford_digit_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-count ratios, and expectations are shared literals. One
     map-side-combined agg into 9 groups, plus a one-row total
     broadcast."""
-    ensure_session_conf(spark)
     v2 = (F.col("o_totalprice").cast("decimal(18,2)") * 100) \
         .cast("bigint")
     orders = (read_table(spark, sf_dir, "orders")
@@ -2040,7 +1998,6 @@ def ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: two hash aggregates over (user, arm) then arm — map-side
     combined, |arms| final groups, no joins wider than the event
     scan itself."""
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_type")
     arm = F.when(
@@ -2125,7 +2082,6 @@ def revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one map-side-combined daily rollup (|days| groups), one
     one-row moment aggregate. Nothing else."""
-    ensure_session_conf(spark)
     daily = (
         read_table(spark, sf_dir, "orders")
         .select(_trend_day().alias("x"),
@@ -2232,7 +2188,6 @@ def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     x priorities| cells (~25 rows), then a tiny grid cross-join and
     windows over the cell table. Nothing after the agg touches big
     data."""
-    ensure_session_conf(spark)
     from simpleetlpipeline_spark.cache import track
 
     orders = read_table(spark, sf_dir, "orders").select(
@@ -2371,7 +2326,6 @@ def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar, a per-day rollup (<= observation-window days rows), then
     ordered windows on that tiny table. The unpartitioned windows
     never see raw events."""
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type")
     us = F.unix_micros(F.col("ts"))
@@ -2521,7 +2475,6 @@ def revenue_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer truncation, identical in both engines for non-negative
     operands; every output measure is a BIGINT sum of int64s, so
     the gate hash is exact with no float anywhere."""
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value")
     us = F.unix_micros(F.col("ts"))
@@ -2672,7 +2625,6 @@ def revenue_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is also the 100 TB-safe form: n*prefix exceeds int64 at
     ~1e16 total daily cents. See monthly_sales_retract's round-8
     note and tests/test_oracle_types.py for the catalog-wide ban."""
-    ensure_session_conf(spark)
     daily = (
         read_table(spark, sf_dir, "orders")
         .select(_trend_day().alias("day"),
@@ -2758,7 +2710,6 @@ def cusum_daily_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
     row's non-BIGINT columns or the canonicalizer; if this reds, the
     prefix/rank layer itself diverges. All five output columns are
     exact integers identical by construction in both engines."""
-    ensure_session_conf(spark)
     daily = (
         read_table(spark, sf_dir, "orders")
         .select(_trend_day().alias("day"),
@@ -2847,7 +2798,6 @@ def events_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpoint), broadcast; one (bin, side) hash agg — 20 final
     groups, map-side combined; then literal-spine joins on tiny
     frames. One pass over big data."""
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select("ts", "value")
     us = F.unix_micros(F.col("ts"))
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
@@ -2969,7 +2919,6 @@ def user_value_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     it), a broadcast one-row study-end scalar. Per-user state is a
     running pair of exact sums — no skew beyond per-user event
     counts."""
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value")
     us = F.unix_micros(F.col("ts"))
@@ -3057,7 +3006,6 @@ def revenue_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-joined (broadcast) and equi-joined back to the day table
     on d+lag, per-lag hash agg, one-row global moments broadcast.
     Every post-rollup frame is |days|- or |lags|-sized."""
-    ensure_session_conf(spark)
     daily = (
         read_table(spark, sf_dir, "orders")
         .select(_trend_day().alias("day"),
@@ -3162,8 +3110,6 @@ def categorical_entropy_profile(spark: SparkSession,
     Shape: one map-side-combined count agg per source column (each
     |categories|-sized), a per-column window total, then a 4-row
     union. One narrow scan per table."""
-    ensure_session_conf(spark)
-
     def profile(df, col, label):
         counts = (df.select(F.col(col).alias("cat"))
                   .groupBy("cat").agg(F.count(F.lit(1)).alias("n_cat")))
@@ -3312,7 +3258,6 @@ def supplier_efficiency_frontier(spark: SparkSession,
     rev > max(rev) over strictly-smaller latencies (RANGE frame) and
     rev = max(rev) within the same latency — no quadratic dominance
     join anywhere."""
-    ensure_session_conf(spark)
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount",
         "l_shipdate")
@@ -3417,7 +3362,6 @@ def revenue_trend_theil_sen(spark: SparkSession,
     bounded-by-design, like the scalar-count crossJoins."""
     from simpleetlpipeline_spark.cache import track
 
-    ensure_session_conf(spark)
     # persisted: the tiny |days|-row rollup feeds BOTH sides of the
     # pairwise join plus the n_days count — without it the full
     # orders scan+agg would run three times
@@ -3500,7 +3444,6 @@ def event_hour_mutual_information(spark: SparkSession,
     joins. One shuffle over the fact, total."""
     from simpleetlpipeline_spark.cache import track
 
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "event_type", hour_of("ts").alias("h"))
     cells = track(
@@ -3638,7 +3581,6 @@ def bloom_semijoin_reduction(spark: SparkSession,
     touches the fact table at all."""
     from simpleetlpipeline_spark.cache import track
 
-    ensure_session_conf(spark)
     keys = (read_table(spark, sf_dir, "customer")
             .filter(F.col("c_mktsegment") == "BUILDING")
             .select(F.col("c_custkey").cast("long").alias("k")))
@@ -3816,7 +3758,6 @@ def poisson_bootstrap_mean_ci(spark: SparkSession,
     keyed by replicate (100 groups, partial agg does the heavy
     lifting) -> a 100-row window for the order statistics. The
     point estimate reuses the same scan lineage."""
-    ensure_session_conf(spark)
     base = read_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("long").alias("k"),
         (F.col("o_totalprice").cast("decimal(18,2)") * 100)
@@ -3946,7 +3887,6 @@ def open_orders_timeline(spark: SparkSession,
     join orders (AQE picks the strategy; both sides keyed by
     orderkey) -> 2-row explode -> hash agg to change dates ->
     O(days) running window."""
-    ensure_session_conf(spark)
     spans = (
         read_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -4024,7 +3964,6 @@ def mann_whitney_u_test(spark: SparkSession,
     (bounded by the value domain, NOT by row count — 100 TB of
     events still folds into <=~1e5 cent buckets map-side) -> one
     O(spine) ordered window -> a 1-row aggregate."""
-    ensure_session_conf(spark)
     ev = (read_table(spark, sf_dir, "events")
           .filter(F.col("event_type").isin("view", "purchase"))
           .select(
@@ -4140,7 +4079,6 @@ def order_value_equidepth(spark: SparkSession, sf_dir: str,
     window -> b-row rollup. The fact table never sorts globally —
     the window runs on the spine, which is why this scales where
     ntile() over raw rows (a single-partition global sort) dies."""
-    ensure_session_conf(spark)
     vals = read_table(spark, sf_dir, "orders").select(
         (F.col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long").alias("v"))
@@ -4218,7 +4156,6 @@ def daily_revenue_stl(spark: SparkSession, sf_dir: str) -> DataFrame:
     after (gapfill join, 7-row windows, DOW rollup) runs on the
     O(days) spine — thousands of rows at ANY scale factor, so the
     single-partition ordered window is a non-issue at 100 TB."""
-    ensure_session_conf(spark)
     daily = (read_table(spark, sf_dir, "orders")
              .groupBy(epoch_date("o_orderdate").alias("day"))
              .agg((F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -4349,7 +4286,6 @@ def robust_outlier_mad(spark: SparkSession, sf_dir: str,
     deviation spine (|v - med|, another domain-bounded agg) -> same
     window for the MAD -> one fence aggregate. 100 TB of events
     still folds to <= |types| x |distinct cents| spine rows."""
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         F.col("event_type").alias("etype"),
         F.floor(F.col("value") * 100).cast("long").alias("v"))
@@ -4468,7 +4404,6 @@ def user_activity_streaks(spark: SparkSession, sf_dir: str,
     keyed by user; nothing funnels through one task."""
     from simpleetlpipeline_spark.operators.aggregates import salted_topk
 
-    ensure_session_conf(spark)
     days = (read_table(spark, sf_dir, "events")
             .select("user_id",
                     epoch_day("ts")
@@ -4565,7 +4500,6 @@ def interarrival_time_profile(spark: SparkSession,
     no global window) -> (type, gap) spine hash agg (domain-bounded:
     gaps land on whole seconds) -> per-type cumulative window over
     the spine -> one rollup per threshold joined back."""
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id")
     w = (Window.partitionBy("user_id", "event_type")
@@ -4649,7 +4583,6 @@ def revenue_growth_mom_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sequence over the min..max month range, left join, zero fill —
     the events_hourly_gapfill pattern; an absent month then shows
     0 revenue rather than silently shifting every later YoY)."""
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderdate", "o_totalprice")
     monthly = (orders
@@ -4752,7 +4685,6 @@ def user_sequence_entropy(spark: SparkSession, sf_dir: str,
     touches a row tier."""
     from simpleetlpipeline_spark.operators.aggregates import salted_topk
 
-    ensure_session_conf(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -4852,7 +4784,6 @@ def weighted_price_percentiles(spark: SparkSession,
     weights (map-side combined, value-domain-bounded) -> per-flag
     cumulative window over the spine -> one rollup. The same
     domain-spine scaling argument as robust_outlier_mad."""
-    ensure_session_conf(spark)
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.floor(F.col("l_extendedprice") * 100).cast("long")
@@ -4944,7 +4875,6 @@ def order_value_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         two_pass_global_window,
     )
 
-    ensure_session_conf(spark)
     pre = (epoch_day("o_orderdate") < F.lit(day_lit(KS_SPLIT)))
     per_value = (
         read_table(spark, sf_dir, "orders")
@@ -5047,7 +4977,6 @@ def seasonal_naive_backtest(spark: SparkSession,
     Shape: one map-side-combined daily rollup (|days| groups), two
     self-equi-joins of that tiny frame on day arithmetic, one
     |months|-row hash agg."""
-    ensure_session_conf(spark)
     daily = (
         read_table(spark, sf_dir, "orders")
         .select(epoch_day("o_orderdate").alias("day"),

@@ -12,7 +12,7 @@ Determinism rules applied throughout (both engines):
   floating sum-order differences can't flip the value hash;
 - every LIMIT/top-k orders by the ROUNDED measure plus a unique key
   tiebreak, so rank selection is identical;
-- session timezone pinned UTC (session.ensure_session_conf) so
+- session timezone pinned UTC (on catalog entry) so
   timestamp bucketing matches DuckDB's UTC-naive timestamps;
 - integer-typed aggregates are kept BIGINT on both sides (DuckDB
   sum(int) widens to HUGEINT — the oracles cast it back).
@@ -38,7 +38,6 @@ from simpleetlpipeline_spark.operators.dates import (
     sql_month_label,
 )
 from simpleetlpipeline_spark.operators.joins import orphan_rows, rollup_update
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 # Reference order_status 'Completed' (main.py:654,681) maps to TPC-H
 # o_orderstatus 'F' (fulfilled) on the testdata.
@@ -54,7 +53,6 @@ def top_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject for the final top-k, so only 10 rows per
     partition reach the driver-side merge.
     """
-    ensure_session_conf(spark)
     orders = (
         read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == COMPLETED)
@@ -87,7 +85,6 @@ def monthly_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate with map-side partial combine; the status filter
     is pushed to the parquet scan.
     """
-    ensure_session_conf(spark)
     return (
         read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == COMPLETED)
@@ -104,7 +101,6 @@ def monthly_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2/O2: segment aggregate (main.py:660-669)."""
-    ensure_session_conf(spark)
     return (
         read_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_mktsegment").alias("customer_segment"))
@@ -122,7 +118,6 @@ def customer_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (main.py:612-628). Aggregate orders first (tiny partials), then
     LEFT JOIN back to the dimension and COALESCE absent groups to 0.
     """
-    ensure_session_conf(spark)
     customer = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     completed = (
         read_table(spark, sf_dir, "orders")
@@ -143,7 +138,6 @@ def orphan_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference declares FKs it never enforces (372 orphans in its
     committed DB); this makes the check a first-class operator.
     """
-    ensure_session_conf(spark)
     lineitem = read_table(spark, sf_dir, "lineitem").select("l_orderkey")
     orders = read_table(spark, sf_dir, "orders")
     return (
@@ -158,7 +152,6 @@ def order_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     |o_totalprice - SUM(line net incl. tax)| < 0.01 per order.
     Returns one row of (consistent, total) counts.
     """
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     recomputed = (
         read_table(spark, sf_dir, "lineitem")
@@ -180,7 +173,6 @@ def transform_customers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1/F4 composition mapped to customer: trim string columns,
     keep non-negative balances (reference main.py:428-430,477-480).
     """
-    ensure_session_conf(spark)
     return (
         read_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") >= 0)
@@ -198,7 +190,6 @@ def transform_parts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamp size floor, derive a rounded per-unit price (reference
     main.py:461-468 semantics on testdata columns).
     """
-    ensure_session_conf(spark)
     return (
         read_table(spark, sf_dir, "part")
         .filter(F.col("p_retailprice") > 0)
@@ -224,7 +215,6 @@ def quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate rows, 0-100 quality score — two aggregates total,
     fully lazy, no per-column jobs.
     """
-    ensure_session_conf(spark)
     df = read_table(spark, sf_dir, "lineitem")
     ncols = len(df.columns)
     null_sum = None
@@ -271,7 +261,6 @@ def validation_rules(spark: SparkSession, sf_dir: str,
     |o_totalprice - recomputed line net| >= tolerance. Default (no
     config) output is the pinned 4-row gate shape.
     """
-    ensure_session_conf(spark)
     customer = read_table(spark, sf_dir, "customer")
     lineitem = read_table(spark, sf_dir, "lineitem")
     orders = read_table(spark, sf_dir, "orders")
@@ -323,7 +312,6 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     caught on events_dedup_batch (banned catalog-wide by
     tests/test_oracle_types.py).
     """
-    ensure_session_conf(spark)
     return (
         read_table(spark, sf_dir, "events")
         .groupBy(
@@ -342,7 +330,6 @@ def events_recent_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9/A6: sliding 24h global aggregate (main.py:832-845),
     anchored at max(ts) instead of now() for determinism.
     """
-    ensure_session_conf(spark)
     events = read_table(spark, sf_dir, "events")
     anchor = events.agg(
         (F.max("ts") - F.expr("INTERVAL 24 HOURS")).alias("cutoff"))
@@ -363,7 +350,6 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming module). One shuffle on user_id; both window functions
     reuse the same partitioning.
     """
-    ensure_session_conf(spark)
     w = Window.partitionBy("user_id").orderBy("ts")
     gap_sec = 30 * 60
     events = read_table(spark, sf_dir, "events").select("user_id", "ts", "value")
@@ -572,7 +558,6 @@ def sql_monthly_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from simpleetlpipeline_spark.io import run_sql
 
-    ensure_session_conf(spark)
     # Month bucket spelled in the timezone-proof SQL idiom (the SQL
     # twin of operators/dates.month_label): date_format over a
     # TIMESTAMP resolves the session timezone at analysis time.
@@ -599,7 +584,6 @@ def orders_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits; per-partition with no shuffle at any scale. Exact-n
     sampling would be orderBy(rand(seed)).limit(n) — a global sort,
     only worth it when exactness matters."""
-    ensure_session_conf(spark)
     return read_table(spark, sf_dir, "orders").sample(0.1, seed=42)
 
 
@@ -624,7 +608,6 @@ def orders_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hex digit lexicographically so the oracle needs no hex
     parsing — md5 of the same string is identical everywhere.
     """
-    ensure_session_conf(spark)
     digit = F.substring(
         F.md5(F.concat(F.lit("seed42:"),
                        F.col("o_orderkey").cast("string"))), 1, 1)
@@ -652,7 +635,6 @@ def events_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY (oracle below)."""
     from simpleetlpipeline_spark.operators.aggregates import salted_agg
 
-    ensure_session_conf(spark)
     out = salted_agg(
         read_table(spark, sf_dir, "events"),
         keys=["event_type"],
@@ -686,7 +668,6 @@ def events_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_count_distinct (HyperLogLog++, mergeable sketch, no
     distinct-expand shuffle) — tested within 5% of exact in
     tests/test_plans.py::test_approx_reach_close_to_exact."""
-    ensure_session_conf(spark)
     return (
         read_table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -727,7 +708,6 @@ def date_axis_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined hash aggregate over ~|months|
     groups, status filter pushed to the scan. Trivial at any SF.
     """
-    ensure_session_conf(spark)
     return (
         read_table(spark, sf_dir, "orders")
         .select(F.unix_micros(F.col("o_orderdate")).alias("us"),
@@ -768,7 +748,6 @@ def int128_fetch_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas`` ladder rung, so a regression in either the fetch
     emulation or a future INT128-typed oracle still trips locally
     before any driver round."""
-    ensure_session_conf(spark)
     return (read_table(spark, sf_dir, "nation")
             .agg(F.count(F.lit(1)).alias("n_bigint"),
                  F.count(F.lit(1)).alias("n_int128")))

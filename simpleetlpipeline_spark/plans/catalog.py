@@ -13,6 +13,8 @@ oracle recomputes and thereby attests (dedup._MINHASH_PAIRS_SQL).
 
 from __future__ import annotations
 
+import functools
+
 from simpleetlpipeline_spark.functions import (
     curation,
     dedup,
@@ -22,7 +24,7 @@ from simpleetlpipeline_spark.functions import (
     sketches,
     text,
 )
-from simpleetlpipeline_spark import sources
+from simpleetlpipeline_spark import pipeline, sources
 from simpleetlpipeline_spark.operators import erasure, scd
 from simpleetlpipeline_spark.plans import (
     advanced,
@@ -30,6 +32,7 @@ from simpleetlpipeline_spark.plans import (
     relational,
     subqueries,
 )
+from simpleetlpipeline_spark.session import ensure_session_conf
 from simpleetlpipeline_spark.streaming import sinks as streaming_sinks
 from simpleetlpipeline_spark.streaming import stateful as streaming_stateful
 from simpleetlpipeline_spark.streaming import windows as streaming_windows
@@ -47,15 +50,7 @@ for _mod in (advanced, relational, subqueries, scd, erasure,
     ORACLE_SQL.update(_mod.ORACLE_SQL)
 
 
-def _etl_pipeline_run(spark, sf_dir):
-    """Full generate -> extract/transform/load -> rollup cycle into a
-    throwaway warehouse, returning the deterministic lineage columns
-    (see pipeline.etl_pipeline_run)."""
-    from simpleetlpipeline_spark.pipeline import etl_pipeline_run
-    return etl_pipeline_run(spark, sf_dir)
-
-
-QUERIES["etl_pipeline_run"] = _etl_pipeline_run  # hash-oracled round 11
+QUERIES["etl_pipeline_run"] = pipeline.etl_pipeline_run  # hash-oracled round 11
 
 # DuckDB replay of the full extract->transform->load chain from the
 # source CSVs the Spark run just wrote (pipeline.ETL_ORACLE_SRC_DIR;
@@ -73,9 +68,7 @@ QUERIES["etl_pipeline_run"] = _etl_pipeline_run  # hash-oracled round 11
 # Single source of truth for the path is pipeline.ETL_ORACLE_SRC_DIR
 # (per-user, deterministic across processes — the gate may run the
 # Spark side and the DuckDB side in different interpreters).
-from simpleetlpipeline_spark.pipeline import (  # noqa: E402
-    ETL_ORACLE_SRC_DIR as _ETL_SRC,
-)
+_ETL_SRC = pipeline.ETL_ORACLE_SRC_DIR
 
 _ETL_CSV_COLS = {
     "customers": {
@@ -435,14 +428,9 @@ ORACLE_SQL["table_stats_profile"] = """
 # Three tiers:
 #   1. GATE_PREFIX — 50 oracled entries pinned so the bounded window
 #      checks a deliberate set instead of churning whenever a new
-#      oracled query lands. Round-4 rotation: the 10 cheapest entries
-#      that had been driver-verified green in BOTH round 2 and round
-#      3 (segment_rollup, order_consistency, transform_customers,
-#      transform_parts, events_user_reach, token_count_bpe, lang_id,
-#      doc_fingerprint, corpus_mix_sample, pii_redact) moved to tier
-#      2, and the 10 float-stable round-3 queries that had only ever
-#      been verified by the local replica took their slots — so every
-#      catalog surface eventually accrues driver-grade evidence.
+#      oracled query lands. Entries rotate in and out of it so every
+#      catalog surface accrues driver-grade evidence; the per-wave
+#      rotation history is in CHANGES.md.
 #   2. remaining oracled entries — verified by the local gate replica
 #      (tools/check_oracle.py at sf0.01 and sf0.1) and pytest; the
 #      rotated-out tier-1 veterans live here with two rounds of
@@ -450,392 +438,6 @@ ORACLE_SQL["table_stats_profile"] = """
 #   3. rows-only family (seeded-hash LSH/SRP candidates, stateful
 #      streaming, the driver-loop ETL run) — covered by pytest
 #      (planted-cluster structure tests, recall-vs-exact tests).
-# Second-wave round-4 rotation (same policy, applied to the fresh
-# surface): six round-4 queries — all verified by the local replica
-# at sf0.01 AND sf0.1 AND under the hostile-partitioning sweep
-# (SPARK_GRAFT_ORACLE_SHUFFLE=3), all integer/pre-rounded-stable —
-# took the slots of six cheap veterans that were driver-green in
-# BOTH round 2 and round 3 (quality_profile, events_recent_24h,
-# sql_monthly_sales, orders_sample_hash, events_type_rollup,
-# events_pivot_daily), which retire to tier 2 with two rounds of
-# driver-grade history.
-# Fifth-wave rotation (round-5 close): the 11 newest operators —
-# copurchase_pagerank, monthly_sales_retract, the two custom-source
-# entries (jsonl_ingest_rollup / streaming_jsonl_rollup),
-# zorder_layout_manifest, gopher_quality_flags,
-# semantic_decontaminate, hll_shard_merge, pretrain_prepare_report,
-# pq_ann_topk, k_anonymity_report — take the slots of the last 11
-# veterans with BOTH round-3 and round-4 driver-green history
-# (dedup_exact, dedup_ngram_jaccard, dedup_pairs_all,
-# dedup_clusters_exact, ann_topk, embedding_neardup, label_centroids,
-# ann_ivf_topk, media_catalog, corpus_curate, decontaminate -> tier
-# 2). All 11 rotated-in entries verified at sf0.01 AND sf0.1 AND in
-# the full-catalog hostile SPARK_GRAFT_ORACLE_SHUFFLE=3 sweep (and,
-# for the heavy ones, the sf1-scale sweep) before rotation.
-# Sixth-wave rotation (round-5 final): the 12 newest oracled
-# entries — the four sampling/feature/CF operators, the seven
-# round-5-close TPC-H shapes (Q2 Q3 Q6 Q9 Q10 Q16 Q21 analogs), and
-# the unpivot reshape — take the slots of the last 12 veterans with
-# two rounds of driver-green history (the round-1 analytics guard:
-# pricing_summary, supplier_geo_rollup, ship_latency_monthly,
-# events_funnel, promo_revenue_monthly, late_ship_orders,
-# latest_event_per_user, events_props_stats,
-# monthly_sales_incremental, dedup_incremental, user_path_transitions,
-# media_dedup -> tier 2). The window now consists almost entirely of
-# surface awaiting its FIRST driver attestation (the round-3-wave
-# streaming/sketch families plus every round-5 addition), which is
-# the rotation policy's whole point. All rotated-in entries verified
-# at sf0.01 AND sf0.1 AND under the hostile shuffle sweep.
-# Third-wave round-5 rotation: the two families that had ZERO
-# driver-grade history — all 8 streaming queries (batch-equivalent
-# plans of the streaming operators, streaming/*.py) and the 3 sketch
-# queries (functions/sketches.py) — take the slots of 11 veterans
-# that were driver-green in BOTH round 3 and round 4
-# (revenue_by_nation, events_conversion_window,
-# repeat_status_customers, order_value_percentiles, sales_rollup,
-# customer_order_ranks, monthly_revenue_running, events_asof_purchase,
-# doc_stats, term_frequencies, tfidf_top_terms -> tier 2). All 11
-# rotated-in entries pre-verified green under the hostile
-# SPARK_GRAFT_ORACLE_SHUFFLE=3 sweep at sf0.01 before rotation.
-# Fourth-wave round-5 rotation (second half of the round): the 12
-# round-5 additions — the eight TPC-H subquery/decorrelation shapes
-# (plans/subqueries.py) and the four corpus-QA operators
-# (bigram_doc_logprob, ttr_by_source, source_vocab_overlap,
-# embedding_outliers) — take the slots of 12 veterans driver-green
-# in BOTH round 3 and round 4 (top_products, monthly_sales,
-# customer_rollup, orphan_lineitems, validation_rules, events_hourly,
-# events_sessionization, and five of the seven media entries —
-# media_catalog/media_dedup stay for family coverage). All 12
-# rotated-in entries pre-verified at sf0.01 AND sf0.1 AND under the
-# hostile SPARK_GRAFT_ORACLE_SHUFFLE=3 sweep before rotation.
-# Seventh-wave rotation (round 6, per the round-5 verdict's task #3):
-# the 12 round-5 stats/graph-wave entries with ZERO driver history
-# (benford_digit_test, copurchase_triangles, revenue_trend_theil_sen,
-# revenue_cusum_changepoint, events_value_psi, revenue_autocorrelation,
-# chi_square_independence, supplier_efficiency_frontier,
-# event_hour_mutual_information, mann_whitney_u_test,
-# kaplan_meier_survival, poisson_bootstrap_mean_ci — the
-# float-heaviest sufficient-statistics ops in the catalog) rotate in.
-# POLICY AMENDMENT, recorded here: only three window occupants hold
-# the ≥2-rounds-driver-green retirement bar (tokenize_ids,
-# doc_logprob, corpus_health — r4+r5); quality_bins also holds it but
-# was REWRITTEN this round (two-pass distributed ntile) so it stays
-# for re-attestation of the changed code, as do zorder_layout_manifest
-# and monthly_sales_retract (BIGINT-milli-unit hardening). The other
-# nine slots retire single-round (r5-green) entries chosen to keep
-# every family represented — six of the nine streaming entries
-# (streaming_events_hourly/_sliding/_user_sessions/_enrich_customers/
-# _event_dedup/_totals_to_table retire; the stream-stream interval
-# join, the applyInPandasWithState stateful op, and the custom-source
-# streaming_jsonl_rollup stay), two of the four sketch entries
-# (approx_distinct_users, quantile_sketch retire; heavy_hitter_users
-# and the merge-contract hll_shard_merge stay), and one of the eight
-# subquery shapes (cross_nation_trade). Rationale: the window's job
-# is maximizing surface awaiting FIRST attestation, and the verdict
-# explicitly requested this wave; all retirees keep one round of
-# driver history plus the full local ladder. All 12 rotated-in
-# entries re-verified this session at sf0.01 AND sf0.1 AND under
-# SPARK_GRAFT_ORACLE_SHUFFLE=3 AND an LA-timezone drive from /tmp.
-# Eighth-wave rotation (round 7, per the round-6 verdict's tasks
-# #2/#4/#5):
-#   * date_axis_canary enters slot 1 PERMANENTLY (it never rotates
-#     out): per month it emits the raw min/max stored micros AND the
-#     epoch-idiom rendered label/day bounds, so any future driver red
-#     involving dates localizes to read-vs-render in a single round.
-#   * monthly_sales_retract and revenue_cusum_changepoint STAY for
-#     re-attestation in the same window as the canary — both were
-#     rewritten to the timezone-proof epoch-micros idiom
-#     (operators/dates.py) after two rounds of calendar-shaped hash
-#     reds; green here proves the calendar theory, red-with-green-
-#     canary falsifies it and names the divergent layer.
-#   * The 13 oracled round-6-wave entries with ZERO driver history
-#     rotate in (zipf_term_fit .. weighted_price_percentiles below;
-#     dedup_minhash_incremental and embedding_pca_report are
-#     rows-only so their oracled siblings carry the attestation).
-#   * 14 retirees, EVERY one holding the >=2-rounds-driver-green bar
-#     (r5+r6, no single-round retirement this wave — the r6
-#     amendment is recorded in README's rotation-policy section):
-#     bigram_doc_logprob, ttr_by_source, source_vocab_overlap,
-#     embedding_outliers, pq_ann_topk, semantic_decontaminate,
-#     k_anonymity_report, pretrain_prepare_report,
-#     gopher_quality_flags, copurchase_pagerank, jsonl_ingest_rollup
-#     (custom-source family stays represented by
-#     streaming_jsonl_rollup), heavy_hitter_users (sketch family
-#     stays represented by hll_shard_merge), and the two re-attested
-#     rewrites quality_bins and zorder_layout_manifest (r4-r6 /
-#     r5-r6 histories).
-#   * All rotated-in entries pre-verified this session at sf0.01 AND
-#     sf0.1 AND under the hostile shuffle sweep AND the
-#     hostile-analysis-timezone harness (tests/test_dates.py).
-# Ninth-wave rotation (round 8, per the round-7 verdict's tasks
-# #1/#2/#3/#7):
-#   * ROOT CAUSE CLOSURE: the r5-r7 hash-reds were the only gated
-#     entries whose ORACLE output carried an INT128-backed column
-#     (HUGEINT total_orders; DECIMAL(38,0) cusum_scaled) — DuckDB's
-#     pandas/arrow fetch converts INT128 to float64 while fetchall()
-#     (every local replica) yields exact ints/Decimals, so
-#     str-canonicalization sees '74.0' != '74' ONLY on the driver's
-#     path. Both reds are fixed (BIGINT cast / digit-string output),
-#     the class is banned catalog-wide (tests/test_oracle_types.py),
-#     and check_oracle grew a SPARK_GRAFT_ORACLE_FETCH=pandas rung
-#     that reproduces the divergence locally.
-#   * DIAGNOSTIC SLOTS: int128_fetch_probe (slot 2) carries a
-#     DELIBERATE HUGEINT — driver hash-red there is the EXPECTED
-#     positive signal confirming the mechanism (see its docstring);
-#     green would falsify it. retract_base/delta_canary and
-#     cusum_daily_canary are the verdict-prescribed strict sub-plans
-#     of the two reds, bracketing base rollup / CDC algebra / merge.
-#   * Rotate in the never-gated fixed INT128 class
-#     (order_value_ks_drift, calibration_reliability,
-#     order_value_equidepth), the r7-wave zero-history additions
-#     (token_fertility_by_source, l_diversity_report,
-#     dp_noisy_nation_counts, brand_triple_rules,
-#     seasonal_naive_backtest, frequent_event_trigrams), and the
-#     backlog families with no in-window representative: CDC/SCD
-#     (scd2_customer_history, cdc_latest_state), warehouse ops
-#     (snapshot_diff, table_stats_profile — now with the ndv_mode
-#     parameter, exact default), governance erasure
-#     (user_erasure_audit), and two fresh sketches
-#     (cms_user_event_counts, hll_audience_overlap) replacing the
-#     retiring hll_shard_merge.
-#   * 20 retirees, EVERY one holding the >=2-rounds-driver-green
-#     bar (18 with r5+r6+r7, 2 with r6+r7): streaming_purchase_view
-#     _join (streaming stays represented by the stateful op + the
-#     custom-source rollup), six subquery shapes (family rep:
-#     idle_high_balance_customers), six TPC-H shapes (family rep:
-#     shipping_priority_orders — kept deliberately for its DATE
-#     output column), feature_scaling_stats, item_cooccurrence_cf,
-#     stratified_exact_sample (pretrain-sampling rep:
-#     user_level_split), hll_shard_merge (sketch family gets two
-#     FRESH entries instead), events_unpivot_daily,
-#     benford_digit_test, copurchase_triangles.
-#   * All rotated-in entries pre-verified this session at sf0.01 AND
-#     sf0.1 AND under the hostile shuffle sweep AND the hostile-TZ
-#     drive AND the new pandas-fetch rung (probe excepted by
-#     design).
-# Tenth-wave rotation (round 9, per the round-8 verdict's tasks
-# #1/#2/#4):
-#   * int128_fetch_probe STAYS at slot 2, RE-ARMED GREEN: the r8
-#     driver red confirmed the INT128->float64 fetch theory, so its
-#     oracle now casts both columns to BIGINT (task #1 — no more
-#     red-by-design slots; the HUGEINT positive control lives in
-#     tests/test_oracle_types.py and the pandas-fetch ladder rung).
-#   * AMENDMENT (recorded here + README): the three r8 bisection
-#     canaries (retract_base/delta_canary, cusum_daily_canary)
-#     retire with ONE round of driver-green history — below the
-#     usual >=2 bar — because their diagnostic purpose is CLOSED:
-#     they existed solely to bracket the r5-r7 reds, the root cause
-#     is confirmed and fixed, and both PARENTS
-#     (monthly_sales_retract, revenue_cusum_changepoint) stay
-#     in-window for a second green. Keeping converged one-purpose
-#     canaries would burn three first-attestation slots.
-#   * 26 further retirees, EVERY one holding the >=2-rounds-driver-
-#     green bar: the 13 r7-wave entries (r7+r8: zipf_term_fit,
-#     robust_outlier_mad, embedding_dim_stats, woe_encoding,
-#     gains_lift_table, user_activity_streaks,
-#     quantile_normalize_quality, ngram_novelty_score,
-#     interarrival_time_profile, expectation_suite_report,
-#     revenue_growth_mom_yoy, user_sequence_entropy,
-#     weighted_price_percentiles), the 9 r6-wave stats entries
-#     (r6-r8: revenue_trend_theil_sen, events_value_psi,
-#     revenue_autocorrelation, chi_square_independence,
-#     supplier_efficiency_frontier, event_hour_mutual_information,
-#     mann_whitney_u_test, kaplan_meier_survival,
-#     poisson_bootstrap_mean_ci), and 4 four-round veterans
-#     (streaming_jsonl_rollup, idle_high_balance_customers,
-#     shipping_priority_orders, user_level_split).
-#     streaming_user_totals_stateful (r5-r8) stays as the streaming
-#     family's in-window representative.
-#   * 29 rotate-ins, draining the never-gated backlog 62 -> 34 and
-#     giving every module-family a driver-gated representative:
-#     the events_* behavioral family (events_wau,
-#     events_cohort_retention, events_funnel_windowed,
-#     events_point_in_time_enrich, events_key_skew,
-#     events_stickiness, events_hourly_gapfill), the copurchase
-#     graph family (copurchase_khop_reach,
-#     copurchase_degree_powerlaw) plus the round-9-rewritten
-#     cf_holdout_hitrate (salted neighbor top-k + half-pair
-#     explode — gated to attest the rewrite), hybrid_rrf_search,
-#     quality_filter_sweep, fd_audit, revenue_cube_nation_segment
-#     (the only grouping-sets entry), rolling_7d_revenue,
-#     customer_rfm_segments, ab_test_report,
-#     bloom_semijoin_reduction, media_ingest_rollup, kmeans_assign,
-#     sequence_pack, shard_manifest, train_split_assign,
-#     bm25_doc_ranking, bigram_pmi, doc_chunk, doc_repetition, the
-#     round-9-rewritten fuzzy_name_neighbors (name-level exact
-#     rewrite), and the NEW compaction_invariant (task #4: one plan
-#     exercising merge_upsert -> compact_table -> time travel).
-#   * All rotated-in entries pre-verified this session at sf0.01
-#     AND sf0.1 AND under the hostile shuffle sweep AND the
-#     pandas-fetch rung AND a hostile-timezone drive (see README
-#     round-9 notes); the three former sf1-skip oracles
-#     (fuzzy_name_neighbors, embedding_neardup,
-#     semantic_dedup_clusters) additionally hash-verified at sf1.
-# Eleventh-wave rotation (round 10, per the round-9 verdict's tasks
-# #2/#5):
-#   * The 29 round-9 rotate-ins ALL STAY for their second green (the
-#     >=2-rounds bar the tenth wave's own policy note anticipated),
-#     as do date_axis_canary (permanent), int128_fetch_probe (one
-#     round of green history as the re-armed BIGINT contract), and
-#     the family representatives cdc_latest_state (CDC/SCD),
-#     user_erasure_audit (governance/privacy), hll_audience_overlap
-#     (sketches), streaming_user_totals_stateful (streaming) —
-#     retiring any of those four would leave its family with zero
-#     in-window representation.
-#   * 15 retirees, EVERY one holding the >=2-rounds-full-green bar
-#     (r8+r9, recomputed from the artifacts this session):
-#     monthly_sales_retract, revenue_cusum_changepoint (both
-#     double-attested post-rewrite — the r5-r7 red saga closes),
-#     order_value_ks_drift, calibration_reliability,
-#     order_value_equidepth, token_fertility_by_source,
-#     l_diversity_report, dp_noisy_nation_counts (privacy stays
-#     represented by user_erasure_audit), brand_triple_rules (the
-#     basket/recommender family stays via the three in-window
-#     copurchase entries), seasonal_naive_backtest (trend family
-#     gets THREE fresh entries below), frequent_event_trigrams,
-#     scd2_customer_history (cdc_latest_state keeps the family),
-#     snapshot_diff + table_stats_profile (warehouse family stays
-#     via compaction_invariant), cms_user_event_counts
-#     (hll_audience_overlap keeps sketches).
-#   * 15 rotate-ins from the 36-entry never-gated backlog (down to
-#     21): the whole remaining events tail (events_anomaly,
-#     events_dedup_batch — REWRITTEN this round to the epoch-micros
-#     bucket after the pre-rotation TZ rung caught its raw-TIMESTAMP
-#     output rendering through the process timezone —
-#     events_dow_hour_heatmap, events_value_histogram,
-#     event_pattern_conversions), the trend/seasonality family
-#     (daily_revenue_stl, revenue_trend_ols,
-#     monthly_seasonality_index), customer_retention_set_ops (the
-#     only set-ops entry), semantic_dedup_clusters,
-#     source_overlap_matrix, bpe_merge_pairs, ann_incremental_topk,
-#     order_percentile_ranks, revenue_attribution.
-#   * All 15 rotate-ins pre-verified this session at sf0.01 AND
-#     sf0.1 AND under SPARK_GRAFT_ORACLE_SHUFFLE=3 AND the
-#     pandas-fetch rung AND a TZ=America/Los_Angeles drive from
-#     /tmp; events_dedup_batch additionally hash-verified at sf1
-#     after its rewrite.
-# Twelfth-wave rotation (round 11, per the round-10 verdict's task
-# #1: drain the never-gated oracled backlog to ZERO):
-#   * STAYS (21): date_axis_canary (permanent), int128_fetch_probe
-#     (the re-armed BIGINT fetch contract), the four family
-#     representatives (cdc_latest_state, user_erasure_audit,
-#     hll_audience_overlap, streaming_user_totals_stateful), and all
-#     15 round-10 rotate-ins for their second green (the >=2-rounds
-#     bar): the events_* tail (events_anomaly, events_dedup_batch,
-#     events_dow_hour_heatmap, events_value_histogram,
-#     event_pattern_conversions), the trend family
-#     (daily_revenue_stl, revenue_trend_ols,
-#     monthly_seasonality_index), customer_retention_set_ops,
-#     semantic_dedup_clusters, source_overlap_matrix,
-#     bpe_merge_pairs, ann_incremental_topk, order_percentile_ranks,
-#     revenue_attribution.
-#   * RETAINED VETERANS (7, each with a named reason):
-#     doc_repetition — REWRITTEN this round (shuffle-free sorted-run
-#     mode count) so it stays for re-attestation of the changed code
-#     (the quality_bins precedent); compaction_invariant — warehouse
-#     lifecycle's only rep; fuzzy_name_neighbors — entity
-#     resolution's only rep; revenue_cube_nation_segment — the only
-#     grouping-sets entry; cf_holdout_hitrate — recommender-EVAL rep
-#     (the basket rotate-ins cover association mining, not holdout
-#     evaluation); bloom_semijoin_reduction — join-strategy rep;
-#     media_ingest_rollup — known-green multimodal anchor kept
-#     next to first-gated media_decode_report so a decode red with
-#     ingest green localizes to the decoder, not the binaryFile
-#     plumbing.
-#   * ROTATE-INS (22) — the ENTIRE never-gated oracled backlog, by
-#     exact recount from CORRECTNESS_r01-r10 (the verdict's list;
-#     the round-10 README said 21 — off-by-one, corrected):
-#     basket_lift_rules, bpe_train_merges,
-#     categorical_entropy_profile, copurchase_pairs,
-#     dedup_shared_windows, embedding_quantize,
-#     language_sampling_weights, large_volume_orders,
-#     linestatus_priority_mix, media_decode_report,
-#     negative_samples, open_orders_timeline, priority_sample_docs,
-#     revenue_concentration, segment_dedup, source_mix_report,
-#     surplus_stock_suppliers, token_char_correlation,
-#     token_weighted_sample, top_events_per_user, user_value_ewma,
-#     user_value_twap. After this wave EVERY oracled catalog entry
-#     has >=1 round of driver-gate history — the backlog is zero.
-#   * RETIREES (22), EVERY one holding the >=2-rounds-full-green bar
-#     (r9+r10, recomputed from the artifacts): events_wau,
-#     events_cohort_retention, events_funnel_windowed,
-#     events_point_in_time_enrich, events_key_skew,
-#     events_stickiness, events_hourly_gapfill (the behavioral
-#     family stays represented by the five r10 events entries +
-#     rotate-in top_events_per_user), copurchase_khop_reach,
-#     copurchase_degree_powerlaw (graph family stays via rotate-in
-#     copurchase_pairs), hybrid_rrf_search (ANN family stays via
-#     ann_incremental_topk), quality_filter_sweep, fd_audit,
-#     rolling_7d_revenue, customer_rfm_segments, ab_test_report,
-#     kmeans_assign (clustering stays via semantic_dedup_clusters),
-#     sequence_pack, shard_manifest, train_split_assign (pretrain
-#     family stays via the four sampling rotate-ins),
-#     bm25_doc_ranking, bigram_pmi, doc_chunk (text family stays
-#     via token_char_correlation + bpe_train_merges).
-#   * All 22 rotate-ins re-verified this session through the full
-#     ladder (sf0.01 default + pandas-fetch + hostile shuffle +
-#     TZ=America/Los_Angeles drive from /tmp + sf0.1) and the sf1
-#     sweep before rotation; user_value_ewma and media_decode_report
-#     additionally carry this round's oracle-hardening fixes
-#     (cent-boundary guard; empty-text coalesce).
-# Thirteenth-wave rotation (round 12, r11 verdict tasks #1/#4): the
-# six round-11 oracle promotions — dedup_minhash_lsh, dedup_clusters,
-# dedup_minhash_incremental, corpus_curate_neardup,
-# kmeans_cluster_purity, etl_pipeline_run, i.e. the ENTIRE
-# never-gated backlog (the verdict's recount: 4 strictly never-gated
-# plus second-look slots for dedup_minhash_lsh/dedup_clusters under
-# their NEW ground-truth-pair-graph oracles) — take the slots of six
-# retiring veterans, each holding 3 rounds of full driver green
-# (r9+r10+r11, recomputed from the artifacts) and each leaving a
-# family representative in-window: doc_repetition (text family stays
-# via token_char_correlation/bpe_train_merges/language_sampling_
-# weights), fuzzy_name_neighbors (similarity via
-# semantic_dedup_clusters + ann_incremental_topk),
-# revenue_cube_nation_segment (revenue analytics via
-# revenue_concentration/revenue_attribution), cf_holdout_hitrate
-# (recsys via negative_samples + copurchase_pairs),
-# bloom_semijoin_reduction (sketches via hll_audience_overlap),
-# media_ingest_rollup (multimodal via media_decode_report).
-# compaction_invariant stays: sole layout/maintenance-family rep.
-# The 22 twelfth-wave rotate-ins all stay for their second green;
-# the 15 two-green r10 rotate-ins and the diagnostic anchors
-# (date_axis_canary permanent, int128_fetch_probe, cdc_latest_state,
-# user_erasure_audit, hll_audience_overlap,
-# streaming_user_totals_stateful) stay put.
-# Fourteenth-wave rotation (round 13, an OPTIMIZATION round): the
-# policy's "rewritten queries stay in-window for re-attestation of
-# the changed code" clause is the driver here — this round rewrote
-# eleven hash-oracled queries that were NOT in the window (kmeans
-# Lloyd-cache memo: kmeans_assign; ADC-literal rewrite: pq_ann_topk;
-# key_bounds fast path: zorder_layout_manifest, quality_bins; Arrow
-# result re-entry: heavy_hitter_users, streaming_totals_to_table;
-# shared _vectors cache consumers: ann_topk, ann_ivf_topk,
-# embedding_neardup, hybrid_rrf_search, semantic_decontaminate).
-# All eleven re-ran the ladder this session (sf0.01 + sf0.1 oracle,
-# BOTH fetch modes, full-suite hostile-TZ harness) before rotating
-# in. They take the slots of eleven strict-bar retirees, each
-# holding r11+r12 full driver green (recomputed from
-# CORRECTNESS_r11/r12) and each leaving family representation:
-# events_dow_hour_heatmap + events_value_histogram (events family
-# keeps events_anomaly, events_dedup_batch, event_pattern_
-# conversions, top_events_per_user), daily_revenue_stl +
-# revenue_trend_ols (revenue keeps monthly_seasonality_index,
-# revenue_attribution, revenue_concentration), token_weighted_sample
-# + priority_sample_docs (sampling keeps language_sampling_weights,
-# source_mix_report, token_char_correlation), large_volume_orders +
-# linestatus_priority_mix (relational keeps open_orders_timeline,
-# surplus_stock_suppliers, copurchase_pairs, basket_lift_rules),
-# customer_retention_set_ops (set-ops keeps order_percentile_ranks
-# and the retention surface stays via customer-family entries),
-# user_value_twap (advanced keeps user_value_ewma), segment_dedup
-# (dedup keeps dedup_minhash_lsh, dedup_clusters,
-# dedup_minhash_incremental, corpus_curate_neardup,
-# dedup_shared_windows). The six one-green thirteenth-wave
-# rotate-ins and the diagnostic anchors stay put; rewritten
-# in-window veterans (bpe_train_merges, compaction_invariant,
-# etl_pipeline_run, kmeans_cluster_purity, semantic_dedup_clusters,
-# ann_incremental_topk, embedding_quantize, user_erasure_audit)
-# stay for re-attestation of this round's changes.
 GATE_PREFIX = (
     "date_axis_canary",
     "int128_fetch_probe",
@@ -881,14 +483,21 @@ def _order(name: str) -> tuple[int, int]:
     return (1 if name in ORACLE_SQL else 2, 0)
 
 
+def _pinned(fn):
+    """Catalog entry that asserts the session profile on entry.
+
+    ensure_session_conf is looked up in this module's globals at call
+    time, so a harness that rebinds it here (the hostile-timezone
+    test) reaches every entry."""
+    @functools.wraps(fn)
+    def entry(spark, sf_dir):
+        ensure_session_conf(spark)
+        return fn(spark, sf_dir)
+
+    return entry
+
+
 QUERIES = {
-    name: QUERIES[name]
+    name: _pinned(QUERIES[name])
     for name in sorted(QUERIES, key=_order)
 }
-
-
-def register(queries: dict, oracle: dict | None = None) -> None:
-    """Extension catalogs call this at import time."""
-    QUERIES.update(queries)
-    if oracle:
-        ORACLE_SQL.update(oracle)

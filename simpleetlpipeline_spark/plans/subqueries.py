@@ -64,7 +64,6 @@ from simpleetlpipeline_spark.operators.dates import (
     ts_lit,
     year_of,
 )
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 # Exact-money helper: per-row cast to DECIMAL(18,2), exact sum,
 # surfaced as double (≤2dp values are exact doubles within 2^53).
@@ -99,7 +98,6 @@ def cross_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain each hop through the nation dimension — nation and
     supplier broadcast; orders⋈customer and lineitem⋈orders shuffle
     on their keys (the only big exchanges)."""
-    ensure_session_conf(spark)
     pair = (TRADE_NATION_A, TRADE_NATION_B)
     nation = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name").filter(F.col("n_name").isin(*pair))
@@ -142,7 +140,6 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue, the share supplied by one nation, per order year. The
     numerator/denominator are exact decimal sums, so the floored
     share is a fixed IEEE divide of identical doubles."""
-    ensure_session_conf(spark)
     region = read_table(spark, sf_dir, "region").filter(
         F.col("r_name") == SHARE_REGION).select("r_regionkey")
     nation = read_table(spark, sf_dir, "nation").select(
@@ -193,7 +190,6 @@ def supplier_value_concentration(
     total supplier account balance exceeds `fraction` of the global
     total. Both sides of the comparison are exact decimal sums, so
     membership can't flip under re-partitioning."""
-    ensure_session_conf(spark)
     nation = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name")
     supplier = read_table(spark, sf_dir, "supplier").select(
@@ -223,7 +219,6 @@ def customer_order_distribution(spark: SparkSession,
     customers placed exactly N orders (N=0 included via the left
     join). Orders pre-aggregates to |custkeys| partials map-side
     before the dimension join; the histogram agg is tiny."""
-    ensure_session_conf(spark)
     customer = read_table(spark, sf_dir, "customer").select("c_custkey")
     orders = read_table(spark, sf_dir, "orders").select("o_custkey")
     per_cust = orders.groupBy("o_custkey").agg(
@@ -247,7 +242,6 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier(s) whose shipped revenue in one quarter equals the
     global maximum. Per-supplier revenue is an exact decimal sum, so
     the equality join against the broadcast max is deterministic."""
-    ensure_session_conf(spark)
     supplier = read_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name")
     lineitem = (read_table(spark, sf_dir, "lineitem")
@@ -281,7 +275,6 @@ def small_order_part_revenue(
     decorrelates into a per-part aggregate joined back. Quantities
     are integral doubles, so the per-part average (exact integer sum
     / count) is one IEEE divide — identical in both engines."""
-    ensure_session_conf(spark)
     part = read_table(spark, sf_dir, "part").filter(
         F.col("p_brand") == brand).select("p_partkey")
     lineitem = read_table(spark, sf_dir, "lineitem").select(
@@ -312,7 +305,6 @@ def disjunctive_promo_revenue(spark: SparkSession,
     disjunction evaluates inside whole-stage codegen after a
     broadcast join on partkey; the per-branch part predicates push
     into the part scan as one OR filter."""
-    ensure_session_conf(spark)
     b1, b2, b3 = DISJUNCT_BRANDS
     part = read_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_size").filter(
@@ -346,7 +338,6 @@ def idle_high_balance_customers(spark: SparkSession, sf_dir: str,
     classic 'no orders ever' form would be vacuous). The threshold
     is an exact decimal sum / count, so membership is deterministic;
     recent orders anti-join on custkey."""
-    ensure_session_conf(spark)
     customer = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal", "c_mktsegment")
     orders = read_table(spark, sf_dir, "orders").select(
@@ -539,7 +530,6 @@ def cheapest_supplier_per_part(spark: SparkSession,
 
     Per-unit price is one IEEE divide of the same doubles in both
     engines, so the min and its tie-break are deterministic."""
-    ensure_session_conf(spark)
     part = read_table(spark, sf_dir, "part").filter(
         F.col("p_type") == CHEAPEST_PART_TYPE).select("p_partkey")
     li = read_table(spark, sf_dir, "lineitem").select(
@@ -577,7 +567,6 @@ def returned_revenue_customers(spark: SparkSession,
     the per-customer aggregate (agg-below-join again), nation
     broadcasts; top-N plans as TakeOrderedAndProject on the exact
     decimal revenue (ties to the lowest custkey)."""
-    ensure_session_conf(spark)
     orders = (read_table(spark, sf_dir, "orders")
               .filter((F.col("o_orderdate") >= ts_lit(RETURNED_START))
                       & (F.col("o_orderdate") < ts_lit(RETURNED_END)))
@@ -620,7 +609,6 @@ def supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs dedup BEFORE the count_distinct agg, so the shuffle
     carries pairs, not lineitems; at 100 TB swap count_distinct for
     the HLL sketch per hll_shard_merge's evidence."""
-    ensure_session_conf(spark)
     part = (read_table(spark, sf_dir, "part")
             .filter(F.col("p_brand") != VARIETY_EXCLUDED_BRAND)
             .select("p_partkey", "p_brand", "p_size"))
@@ -669,7 +657,6 @@ def suppliers_kept_waiting(spark: SparkSession, sf_dir: str,
     join shuffles on the order key)."""
     from simpleetlpipeline_spark.functions.similarity import _table_bytes
 
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", epoch_day("o_orderdate").alias("o_day"))
     if _table_bytes(sf_dir, "orders") <= 256 << 20:
@@ -817,7 +804,6 @@ def shipping_priority_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     open revenue. Customer (segment-filtered) broadcasts into
     orders; the date filters push into both fact scans; top-N plans
     as TakeOrderedAndProject on the exact decimal revenue."""
-    ensure_session_conf(spark)
     cust = (read_table(spark, sf_dir, "customer")
             .filter(F.col("c_mktsegment") == SHIPPING_SEGMENT)
             .select("c_custkey"))
@@ -856,7 +842,6 @@ def discount_revenue_forecast(spark: SparkSession,
     column would compute per row instead of pruning row groups; no
     join, no shuffle beyond the one-row agg). Money is the exact-decimal product of the 2dp
     inputs (module contract)."""
-    ensure_session_conf(spark)
     lo, hi = FORECAST_DISCOUNT
     li = (read_table(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= ts_lit(f"{FORECAST_YEAR}-01-01"))
@@ -886,7 +871,6 @@ def product_margin_by_nation(spark: SparkSession,
     product, cost is DECIMAL retailprice x integer quantity x a
     DECIMAL(2,1) factor — no float rounding anywhere before the
     final cast."""
-    ensure_session_conf(spark)
     part = read_table(spark, sf_dir, "part").select(
         "p_partkey", "p_retailprice")
     supplier = read_table(spark, sf_dir, "supplier").select(
@@ -989,7 +973,6 @@ def linestatus_priority_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune); the join is the orderkey shuffle both sides already
     need, and the CASE sums fold map-side into |linestatus| groups
     — integer counts, so no float-determinism exposure at all."""
-    ensure_session_conf(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority")
     li = (read_table(spark, sf_dir, "lineitem")
@@ -1027,7 +1010,6 @@ def surplus_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem); the name-filtered part dimension broadcasts as a
     semi-join; supplier and nation broadcast for the final labels.
     The only big shuffle is the pair-building agg itself."""
-    ensure_session_conf(spark)
     part = (read_table(spark, sf_dir, "part")
             .filter(F.col("p_name").startswith(STOCK_NAME_PREFIX))
             .select("p_partkey"))

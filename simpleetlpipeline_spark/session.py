@@ -194,8 +194,16 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
     query semantics. The local-only scan knobs (_LOCAL_SCAN_CONF)
     are applied ONLY when the session's master is local[*] — a
     cluster session keeps Spark's 128 MB/4 MB defaults, which are
-    correct for HDFS/S3-backed multi-file tables. Also ships this
-    package to executor workers (see _ship_package).
+    correct for HDFS/S3-backed multi-file tables. The shuffle
+    partition count is set only when the session left it unset: an
+    explicit count (builder or conf.set) is the caller's choice, and
+    the hostile-partitioning sweep depends on it holding. Also ships
+    this package to executor workers (see _ship_package).
+
+    The one caller is the catalog: every plans.catalog.QUERIES entry
+    pins on entry. Module functions called directly assume a
+    get_spark() session; pass a foreign session through here once
+    before calling them.
     """
     try:
         master = spark.conf.get("spark.master", "") or ""
@@ -203,6 +211,9 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
         master = ""
     for k, v in _runtime_conf(local=master.startswith("local")).items():
         try:
+            if (k == "spark.sql.shuffle.partitions"
+                    and spark.conf.get(k, None) is not None):
+                continue
             spark.conf.set(k, v)
         except Exception:
             pass  # non-runtime-settable on this build; best effort

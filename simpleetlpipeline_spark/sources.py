@@ -399,9 +399,6 @@ def jsonl_ingest_rollup(spark, sf_dir: str):
     """
     from pyspark.sql import functions as F
 
-    from simpleetlpipeline_spark.session import ensure_session_conf
-
-    ensure_session_conf(spark)
     root = _jsonl_fixture_dir(spark, sf_dir)
     register_jsonl_events(spark)
     logs = (
@@ -455,10 +452,8 @@ def streaming_jsonl_rollup(spark, sf_dir: str):
     """
     from pyspark.sql import functions as F
 
-    from simpleetlpipeline_spark.session import ensure_session_conf
     from simpleetlpipeline_spark.streaming.windows import run_stream_to_df
 
-    ensure_session_conf(spark)
     root = _jsonl_fixture_dir(spark, sf_dir)
     register_jsonl_events(spark)
     logs = (spark.readStream.format("jsonl_events")

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from simpleetlpipeline_spark.schemas import TESTDATA_SCHEMAS
-from simpleetlpipeline_spark.session import ensure_session_conf
 
 
 def _events_stream_schema(spark: SparkSession, sf_dir: str) -> StructType:
@@ -56,7 +55,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (finite replay of
     the same files the batch path reads; ts normalized to
     microsecond timestamps identically to io.read_table)."""
-    ensure_session_conf(spark)
     # The file source requires a directory; point it at sf_dir and
     # select only the events file(s) via glob filter.
     raw = (
@@ -112,16 +110,26 @@ def _needs_nodata_batch(sdf: DataFrame, output_mode: str) -> bool:
     Complete/update aggregates, inner joins and dropDuplicates emit
     eagerly per data batch, so the final advance is pure cost there.
     """
-    plan = sdf._jdf.queryExecution().analyzed().toString().lower()
-    if "eventtimetimeout" in plan:
+    nodes = [(n.getClass().getSimpleName(), n) for n in
+             _plan_nodes(sdf._jdf.queryExecution().analyzed())]
+    # FlatMapGroupsWithState / FlatMapGroupsInPandasWithState
+    if any(k.startswith("FlatMapGroups") and k.endswith("WithState")
+           and n.timeout().toString() == "EventTimeTimeout"
+           for k, n in nodes):
         return True
     if output_mode != "append":
         return False
-    if "aggregate" in plan or "session_window" in plan:
-        return True
-    return any(t in plan for t in
-               ("leftouter", "rightouter", "fullouter",
-                "leftanti", "leftsemi"))
+    return any(k == "Aggregate"
+               or (k == "Join" and n.joinType().sql() not in ("INNER", "CROSS"))
+               for k, n in nodes)
+
+
+def _plan_nodes(plan):
+    """Pre-order walk of a JVM logical plan through py4j."""
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
 
 
 def run_stream_to_df(sdf: DataFrame, output_mode: str = "complete") -> DataFrame:

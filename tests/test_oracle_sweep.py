@@ -47,3 +47,5 @@ def test_full_catalog_hostile_shuffle_sweep():
     assert proc.returncode == 0, \
         f"hostile-shuffle sweep failed:\n{tail}\n{proc.stderr[-2000:]}"
     assert "0 failures" in proc.stdout
+    # the catalog's session pin must keep the hostile count
+    assert "shuffle partitions held: 3" in proc.stdout

@@ -147,6 +147,19 @@ def test_runner_keeps_nodata_batch_for_append_aggregates(spark, tmp_path):
     assert got.get(t(9)) == 2, f"final window lost: {got}"
 
 
+def test_runner_ignores_higher_order_aggregate(spark, tmp_path):
+    """The guard reads the plan's nodes, not its text: an append-mode
+    stream whose only "aggregate" is the higher-order F.aggregate over
+    an array column has no state to finalize, so the no-data batch
+    stays off."""
+    sdf = (spark.readStream.schema("ts timestamp, v double")
+           .parquet(str(tmp_path)))
+    summed = sdf.withWatermark("ts", "1 hour").select(
+        "ts", F.aggregate(F.array("v", "v"), F.lit(0.0),
+                          lambda acc, x: acc + x).alias("s"))
+    assert not W._needs_nodata_batch(summed, "append")
+
+
 def test_totals_sink_restart_resume_idempotent(spark, tmp_path):
     """The foreachBatch sink's crash-retry window: batch N's snapshot
     commit lands (pointer swap + _META batch stamp) but the streaming

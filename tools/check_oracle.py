@@ -196,6 +196,8 @@ def main() -> int:
             failed.append(name)
         else:
             print(f"PASS {name} ({len(srows)} rows)")
+    print("shuffle partitions held: "
+          + spark.conf.get("spark.sql.shuffle.partitions"))
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
     from simpleetlpipeline_spark.cache import release_caches
 
