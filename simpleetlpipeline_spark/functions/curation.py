@@ -51,9 +51,7 @@ QUALITY_THRESHOLD = 0.3
 KEEP_LANG = "en"
 
 
-def corpus_curate(spark: SparkSession, sf_dir: str,
-                  quality_threshold: float = QUALITY_THRESHOLD,
-                  keep_lang: str = KEEP_LANG) -> DataFrame:
+def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality filter -> language filter -> exact dedup (min doc_id
     per md5 fingerprint); returns the surviving corpus manifest.
 
@@ -76,8 +74,8 @@ def corpus_curate(spark: SparkSession, sf_dir: str,
             docs,
             extra={"md5_fingerprint":
                    F.md5(F.col("text").cast("binary"))})
-        .filter((F.col("quality_score") >= quality_threshold)
-                & (F.col("detected_lang") == keep_lang))
+        .filter((F.col("quality_score") >= QUALITY_THRESHOLD)
+                & (F.col("detected_lang") == KEEP_LANG))
     )
     w = Window.partitionBy("md5_fingerprint").orderBy("doc_id")
     return (
@@ -120,13 +118,9 @@ BENCH_MOD, BENCH_REM = 20, 7
 DECON_BROADCAST_MAX_BYTES = 64 << 20
 
 
-def decontaminate(spark: SparkSession, sf_dir: str,
-                  ngram: int = DECON_NGRAM,
-                  min_overlap: int = DECON_MIN_OVERLAP,
-                  broadcast_max_bytes: int = DECON_BROADCAST_MAX_BYTES,
-                  ) -> DataFrame:
+def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training documents that share
-    >= min_overlap distinct word n-grams with a held-out benchmark
+    >= DECON_MIN_OVERLAP distinct word n-grams with a held-out benchmark
     set — the overlap filter every serious pretraining pipeline runs
     so eval questions don't leak into the training corpus.
 
@@ -139,7 +133,7 @@ def decontaminate(spark: SparkSession, sf_dir: str,
     broadcasts; the corpus side is one narrow explode + broadcast
     semi-join + groupBy(doc_id) — linear, one shuffle keyed by
     doc_id. The broadcast is GUARDED, not assumed: past
-    broadcast_max_bytes (estimated driver-side from the benchmark
+    DECON_BROADCAST_MAX_BYTES (estimated driver-side from the benchmark
     source's on-disk size, no job) the hint is dropped and the same
     plan shuffles on the gram hash — a blocklist that quietly grew to
     GBs costs a shuffle instead of OOMing every executor
@@ -153,7 +147,7 @@ def decontaminate(spark: SparkSession, sf_dir: str,
 
     docs = fan_out(read_table(spark, sf_dir, "documents")).select(
         "doc_id",
-        word_ngram_hashes_col(F.col("text"), ngram).alias("grams"))
+        word_ngram_hashes_col(F.col("text"), DECON_NGRAM).alias("grams"))
     is_bench = (F.col("doc_id") % BENCH_MOD) == BENCH_REM
     bench_grams = (
         docs.filter(is_bench)
@@ -161,7 +155,7 @@ def decontaminate(spark: SparkSession, sf_dir: str,
     # The synthetic benchmark is a 1/BENCH_MOD slice of documents;
     # a real eval-suite table would use its own footprint here.
     if _table_bytes(sf_dir, "documents") // BENCH_MOD \
-            <= broadcast_max_bytes:
+            <= DECON_BROADCAST_MAX_BYTES:
         bench_grams = F.broadcast(bench_grams)
     corpus = docs.filter(~is_bench)
     overlap = (
@@ -176,7 +170,7 @@ def decontaminate(spark: SparkSession, sf_dir: str,
         .select(
             "doc_id",
             F.coalesce(F.col("__n"), F.lit(0)).alias("n_overlap"),
-            (F.coalesce(F.col("__n"), F.lit(0)) >= min_overlap)
+            (F.coalesce(F.col("__n"), F.lit(0)) >= DECON_MIN_OVERLAP)
             .alias("contaminated"),
         )
     )
@@ -408,8 +402,7 @@ ORACLE_SQL["corpus_health"] = f"""
 PREP_SHARDS = 8
 
 
-def pretrain_prepare_report(spark: SparkSession, sf_dir: str,
-                            n_shards: int = PREP_SHARDS) -> DataFrame:
+def pretrain_prepare_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole pretraining data-prep funnel as ONE lazy plan — the
     single-row readiness report a training run gates on: input
     volume, survivors of each curation stage (quality -> language ->
@@ -484,7 +477,7 @@ def pretrain_prepare_report(spark: SparkSession, sf_dir: str,
         F.sum(F.when(F.col("split") == "train", F.col("n_tokens"))
               .otherwise(F.lit(0))).alias("train_tokens"))
     shard = F.pmod((F.col("doc_id") * _SHARD_HASH_A) % _SHARD_HASH_MOD,
-                   F.lit(n_shards))
+                   F.lit(PREP_SHARDS))
     shard_agg = (
         splat.filter(F.col("split") == "train")
         .groupBy(shard.alias("shard"))

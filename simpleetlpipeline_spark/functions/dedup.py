@@ -39,6 +39,15 @@ MINHASH_BANDS = 8
 MINHASH_ROWS = MINHASH_K // MINHASH_BANDS
 MINHASH_SEED = 42
 
+# Word-gram Jaccard family: gram width, the probe set of the blocked
+# exact form (doc_id < N_PROBES), and the pair threshold every tier
+# and its oracle share.
+NGRAM = 3
+N_PROBES = 10
+JACCARD_THRESHOLD = 0.15
+SIMHASH_MAX_HAMMING = 10
+OVERLAP_NGRAM = 5
+
 
 def word_ngrams_col(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of lowercased text.
@@ -223,11 +232,10 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
-                        n_probes: int = 10, ngram: int = 3,
-                        threshold: float = 0.15) -> DataFrame:
-    """EXACT word-3-gram Jaccard of every document against a small
-    probe set (doc_id < n_probes), pairs above threshold.
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT word-NGRAM Jaccard of every document against a small
+    probe set (doc_id < N_PROBES), pairs at or above
+    JACCARD_THRESHOLD.
 
     Probe-blocked by design: the probe side is broadcast (and its
     doc_id filter pushes below the gram compute, so probe grams cost
@@ -245,7 +253,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
 
     Round 11: gram hashing moved to the Arrow-vectorized rolling
     kernel (rolling_window_hashes_udf) — the chained zip_with form
-    costs ngram interpreted per-token passes over the whole corpus
+    costs NGRAM interpreted per-token passes over the whole corpus
     and was this query's dominant linear term at sf1. One
     interpreted pass (per-token xxhash64) remains; the window
     combine and per-doc distinct run vectorized in numpy. Gram-hash
@@ -253,7 +261,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
     (different hash family, same contract — only equality and
     distinct counts are consumed, and probe/corpus share the
     family), so the string-gram DuckDB oracle is unchanged."""
-    roll = rolling_window_hashes_udf(ngram)
+    roll = rolling_window_hashes_udf(NGRAM)
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     pre = fan_out(read_table(spark, sf_dir, "documents")).select(
         "doc_id",
@@ -277,7 +285,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
         F.explode_outer("grams").alias("g"))
         .filter(F.col("g").isNotNull()))
     probes = (
-        pre.filter(F.col("doc_id") < n_probes)
+        pre.filter(F.col("doc_id") < N_PROBES)
         .select(F.col("doc_id").alias("a_id"),
                 F.col("n_grams").alias("a_n"),
                 F.explode_outer("grams").alias("g"))
@@ -292,7 +300,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
     jac = F.col("n_common") / (F.col("a_n") + F.col("b_n") - F.col("n_common"))
     return (
         common.withColumn("jaccard", F.floor(jac * 10000) / 10000)
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("a_id", "b_id", "n_common", "jaccard")
     )
 
@@ -452,14 +460,14 @@ def band_candidates(sig: DataFrame,
     )
 
 
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
-                      threshold: float = 0.15) -> DataFrame:
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup pipeline with exact verify.
 
     exact-fingerprint collapse -> shingle -> 32-hash minhash
     signature -> 8 band keys -> capped self-join on (band index, band
     hash) -> distinct candidate pairs -> exact Jaccard on candidates
-    only -> filter by threshold -> union the exact-duplicate stars.
+    only -> filter by JACCARD_THRESHOLD -> union the exact-duplicate
+    stars.
 
     Duplicate-skew safety (the 100 TB story): exact copies are
     collapsed to one representative per distinct text BEFORE any
@@ -477,7 +485,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
 
     Hash-oracled since round 11: because candidates are verified
     with EXACT Jaccard, the output equals the full ground-truth
-    >=threshold pair set whenever banding recall is perfect — which
+    >=JACCARD_THRESHOLD pair set whenever banding recall is perfect — which
     DuckDB recomputes exactly via shared-gram blocking
     (_MINHASH_PAIRS_SQL below), so the gate attests recall itself.
 
@@ -487,12 +495,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
     frame: the shingle/signature/verify pipeline runs once per
     session instead of once per consumer.
     """
-    return shared(spark, ("minhash_lsh", sf_dir, threshold),
-                  lambda: _minhash_lsh_pairs(spark, sf_dir, threshold))
+    return shared(spark, ("minhash_lsh", sf_dir, JACCARD_THRESHOLD),
+                  lambda: _minhash_lsh_pairs(spark, sf_dir))
 
 
-def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
-                       threshold: float) -> DataFrame:
+def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash = minhash_from_gram_hashes_udf()
     raw = fan_out(read_table(spark, sf_dir, "documents"))
     groups = collapse_exact_groups(raw, "doc_id", "text")
@@ -524,7 +531,7 @@ def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
     pairs = (
         candidates.join(a, "a_id").join(b, "b_id")
         .withColumn("jaccard", F.floor(inter / union * 10000) / 10000)
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("a_id", "b_id", "jaccard")
         .unionByName(star)
         .persist()
@@ -534,17 +541,15 @@ def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
     return pairs
 
 
-def dedup_simhash(spark: SparkSession, sf_dir: str,
-                  max_hamming: int = 10,
-                  threshold: float = 0.15) -> DataFrame:
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup with exact verify: 64-bit fingerprints,
     candidates blocked on equality of one of four 16-bit bands (any
     pair within Hamming distance 3 shares a band by pigeonhole;
     wider distances are caught probabilistically), pruned by popcount
-    distance <= max_hamming, then VERIFIED with exact word-3-gram
-    Jaccard >= threshold — the textbook simhash deployment (banding
-    and hamming are the cheap candidate path; the exact verify is
-    what gets published).
+    distance <= SIMHASH_MAX_HAMMING, then VERIFIED with exact
+    word-3-gram Jaccard >= JACCARD_THRESHOLD — the textbook simhash
+    deployment (banding and hamming are the cheap candidate path;
+    the exact verify is what gets published).
 
     Round 12: the verify stage replaced publishing raw hamming
     pairs. Raw 64-bit fingerprints of short documents sit within
@@ -552,7 +557,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str,
     sf0.1 against 249 true near-dups) — at 100 TB that output is
     noise, and it was also engine-specific, barring any check
     sharper than rows-only. With candidates exact-verified, the
-    output is a SUBSET of the ground-truth >=threshold pair set with
+    output is a SUBSET of the ground-truth >=JACCARD_THRESHOLD pair set with
     exact jaccard values (pytest pins both). It stays rows-only, NOT
     equality-oracled: banding recall is measurably imperfect —
     222/249 true pairs at sf0.1, every miss band-caused (true
@@ -631,7 +636,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str,
                     b["doc_id"].alias("b_id"),
                     F.bit_count(a["sh"].bitwiseXOR(b["sh"]))
                     .alias("hd"))),
-            lambda p: p["hd"] <= F.lit(max_hamming))))
+            lambda p: p["hd"] <= F.lit(SIMHASH_MAX_HAMMING))))
     candidates = (
         members.select(F.explode(cand).alias("p"))
         .select("p.a_id", "p.b_id")
@@ -644,7 +649,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str,
     pairs = track(
         candidates.join(a, "a_id").join(b, "b_id")
         .withColumn("jaccard", F.floor(inter / union * 10000) / 10000)
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("a_id", "b_id", "jaccard")
         .unionByName(star)
         .persist()
@@ -681,7 +686,7 @@ QUERIES = {
 # floor(inter/union*10000) expression keeps Spark's left-assoc
 # divide-then-scale evaluation order so both engines round
 # identically at floor boundaries.
-_MINHASH_PAIRS_SQL = """
+_MINHASH_PAIRS_SQL = f"""
         reps AS (
             SELECT min(doc_id) AS doc_id, text
             FROM documents GROUP BY text
@@ -714,7 +719,7 @@ _MINHASH_PAIRS_SQL = """
             JOIN msizes sa ON sa.doc_id = a_id
             JOIN msizes sb ON sb.doc_id = b_id
             WHERE floor(inter * 1.0 / (sa.n + sb.n - inter)
-                        * 10000) / 10000 >= 0.15
+                        * 10000) / 10000 >= {JACCARD_THRESHOLD}
             UNION ALL
             SELECT r.doc_id AS a_id, d.doc_id AS b_id,
                    CAST(1.0 AS DOUBLE) AS jaccard
@@ -747,7 +752,7 @@ ORACLE_SQL = {
         FROM documents
         GROUP BY 1
     """,
-    "dedup_ngram_jaccard": """
+    "dedup_ngram_jaccard": f"""
         WITH toks AS (
             SELECT doc_id,
                    string_split_regex(lower(trim(text)), '\\s+') AS t
@@ -755,8 +760,8 @@ ORACLE_SQL = {
         ), grams AS (
             SELECT doc_id,
                    list_distinct(list_transform(
-                       range(1, greatest(len(t) - 3, 0) + 2),
-                       i -> array_to_string(list_slice(t, i, i + 2), ' ')
+                       range(1, greatest(len(t) - {NGRAM}, 0) + 2),
+                       i -> array_to_string(list_slice(t, i, i + {NGRAM - 1}), ' ')
                    )) AS g
             FROM toks
         ), sizes AS (
@@ -766,7 +771,7 @@ ORACLE_SQL = {
         ), common AS (
             SELECT a.doc_id AS a_id, b.doc_id AS b_id,
                    CAST(count(*) AS BIGINT) AS n_common
-            FROM (SELECT * FROM ex WHERE doc_id < 10) a
+            FROM (SELECT * FROM ex WHERE doc_id < {N_PROBES}) a
             JOIN ex b ON a.gr = b.gr AND a.doc_id < b.doc_id
             GROUP BY 1, 2
         )
@@ -776,7 +781,7 @@ ORACLE_SQL = {
         FROM common
         JOIN sizes sa ON sa.doc_id = a_id
         JOIN sizes sb ON sb.doc_id = b_id
-        WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= 0.15
+        WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= {JACCARD_THRESHOLD}
     """,
 }
 
@@ -917,8 +922,7 @@ def connected_components(edges: DataFrame, a: str = "a_id",
     return track(labels)
 
 
-def dedup_cluster_frame(spark: SparkSession, sf_dir: str,
-                        threshold: float = 0.15) -> DataFrame:
+def dedup_cluster_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: MinHash-LSH pairs -> connected components
     -> per-cluster canonical doc (min doc_id), cluster size, and the
     sorted member array. The step that turns pairwise near-dup hits
@@ -926,7 +930,7 @@ def dedup_cluster_frame(spark: SparkSession, sf_dir: str,
     form — `members` is array<long> for programmatic consumers
     (corpus_curate_neardup explodes it); the catalog entry
     dedup_clusters serializes it for the gate."""
-    pairs = dedup_minhash_lsh(spark, sf_dir, threshold=threshold)
+    pairs = dedup_minhash_lsh(spark, sf_dir)
     comps = connected_components(pairs)
     return (
         comps.groupBy("component")
@@ -939,8 +943,7 @@ def dedup_cluster_frame(spark: SparkSession, sf_dir: str,
     )
 
 
-def dedup_clusters(spark: SparkSession, sf_dir: str,
-                   threshold: float = 0.15) -> DataFrame:
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog form of dedup_cluster_frame: the member list rides as
     a deterministic comma-joined string (sorted ascending), because
     the gate's pandas canonicalizer cannot hash array cells. Same
@@ -948,7 +951,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str,
     the recursive closure of the ground-truth pair graph
     (_MINHASH_PAIRS_SQL); structure additionally unit-tested on
     planted clusters."""
-    return dedup_cluster_frame(spark, sf_dir, threshold=threshold).select(
+    return dedup_cluster_frame(spark, sf_dir).select(
         "keep_doc_id", "cluster_size",
         F.concat_ws(",", F.col("members").cast("array<string>"))
         .alias("members"),
@@ -993,13 +996,11 @@ ORACLE_SQL["dedup_clusters"] = f"""
 DF_CAP = 50
 
 
-def dedup_pairs_all(spark: SparkSession, sf_dir: str, ngram: int = 3,
-                    threshold: float = 0.15,
-                    df_cap: int = DF_CAP) -> DataFrame:
+def dedup_pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT all-pairs near-dup graph over a df-capped shingle space.
 
     Inverted index via grouped posting LISTS: one hash aggregate
-    collects each gram's (sorted) doc list; lists longer than df_cap
+    collects each gram's (sorted) doc list; lists longer than DF_CAP
     are stop-shingles and drop; each surviving list emits its
     C(df, 2) ordered pairs directly with array HOFs. Versus the
     classic posting self-join this generates every a<b pair ONCE
@@ -1007,29 +1008,28 @@ def dedup_pairs_all(spark: SparkSession, sf_dir: str, ngram: int = 3,
     separate df-count pass, and replaces the join's two-sided
     shuffle with the single groupBy the df count already paid —
     measured ~1.4x on this stage at sf0.1 (same 1.13M pair groups;
-    the gap widens with df_cap since the join's df^2 fan-out grows
+    the gap widens with DF_CAP since the join's df^2 fan-out grows
     twice as fast as C(df,2)). Unlike dedup_ngram_jaccard
     (probe-blocked) this covers EVERY pair, and unlike
     dedup_minhash_lsh it is deterministic SQL — the oracle-verifiable
     twin of the LSH candidate generator.
 
     Scale: one shuffle on the 64-bit gram hash (posting lists, each
-    bounded to df_cap ids), one on (a_id, b_id) for the common
+    bounded to DF_CAP ids), one on (a_id, b_id) for the common
     counts, one doc-keyed shuffle for sizes. Pair fan-out per gram is
-    bounded at C(df_cap, 2); everything else is linear.
+    bounded at C(DF_CAP, 2); everything else is linear.
 
     Caching: the capped posting stream (kg) has two consumers (pair
     generation + per-doc sizes), and the returned pair graph is one
     shared frame for its two catalog consumers (this query and
     dedup_clusters_exact). Both persists are lazy and registry-owned.
     """
-    return shared(spark, ("pairs_all", sf_dir, ngram, threshold, df_cap),
-                  lambda: _pairs_all(spark, sf_dir, ngram, threshold,
-                                     df_cap))
+    return shared(spark,
+                  ("pairs_all", sf_dir, NGRAM, JACCARD_THRESHOLD, DF_CAP),
+                  lambda: _pairs_all(spark, sf_dir))
 
 
-def _pairs_all(spark: SparkSession, sf_dir: str, ngram: int,
-               threshold: float, df_cap: int) -> DataFrame:
+def _pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Gram-posting stream (doc_id, gram_hash), persisted: it has two
     # in-plan consumers (df count + join-back). dedup_ngram_jaccard
     # deliberately recomputes its own: its probe join is one pipelined
@@ -1038,19 +1038,19 @@ def _pairs_all(spark: SparkSession, sf_dir: str, ngram: int,
     ex = track(
         fan_out(read_table(spark, sf_dir, "documents"))
         .select("doc_id", F.explode(word_ngram_hashes_col(
-            F.col("text"), ngram)).alias("g"))
+            F.col("text"), NGRAM)).alias("g"))
         .persist())
     # df-filter BEFORE the list build: a cheap count aggregate keeps
     # only sub-cap grams, and the posting stream semi-joins against
     # it before collect_list — so a hot stop-shingle costs a counter,
     # never an unbounded list in one aggregation buffer, and every
-    # list the final agg does buffer is <= df_cap. Both aggregates
+    # list the final agg does buffer is <= DF_CAP. Both aggregates
     # shuffle on the same gram key, so the second reuses the first's
     # partitioning. (Measured vs alternatives at sf0.1: count+join
     # ~1.4x the unbounded single-agg form, a window-count pre-filter
     # ~2x — this is the cheapest bounded-memory shape.)
     kept = (ex.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= df_cap).select("g"))
+            .filter(F.col("__df") <= DF_CAP).select("g"))
     kg = track(
         ex.join(kept, "g")
         .groupBy("g")
@@ -1081,13 +1081,12 @@ def _pairs_all(spark: SparkSession, sf_dir: str, ngram: int,
     return (
         common.join(a_sz, "a_id").join(b_sz, "b_id")
         .withColumn("jaccard", F.floor(jac * 10000) / 10000)
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("a_id", "b_id", "n_common", "jaccard")
     )
 
 
-def dedup_clusters_exact(spark: SparkSession, sf_dir: str,
-                         threshold: float = 0.15) -> DataFrame:
+def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-components clustering over the EXACT pair graph
     (dedup_pairs_all), so the whole pipeline — shingle index, pair
     Jaccard, component labels, keep/drop manifest — is verified
@@ -1096,7 +1095,7 @@ def dedup_clusters_exact(spark: SparkSession, sf_dir: str,
     its own recursive-CTE oracle over the ground-truth pair graph
     (_MINHASH_PAIRS_SQL).
     """
-    pairs = dedup_pairs_all(spark, sf_dir, threshold=threshold)
+    pairs = dedup_pairs_all(spark, sf_dir)
     comps = connected_components(pairs)
     return (
         comps.groupBy("component")
@@ -1123,8 +1122,8 @@ _PAIRS_ALL_SQL = f"""
         ), grams AS (
             SELECT doc_id,
                    list_distinct(list_transform(
-                       range(1, greatest(len(t) - 3, 0) + 2),
-                       i -> array_to_string(list_slice(t, i, i + 2), ' ')
+                       range(1, greatest(len(t) - {NGRAM}, 0) + 2),
+                       i -> array_to_string(list_slice(t, i, i + {NGRAM - 1}), ' ')
                    )) AS g
             FROM toks
         ), ex AS (
@@ -1148,7 +1147,7 @@ _PAIRS_ALL_SQL = f"""
             FROM common
             JOIN sizes sa ON sa.doc_id = a_id
             JOIN sizes sb ON sb.doc_id = b_id
-            WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= 0.15
+            WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= {JACCARD_THRESHOLD}
         )
 """
 
@@ -1289,11 +1288,9 @@ def rolling_window_hashes_udf(n: int):
     return _roll
 
 
-def dedup_shared_windows(spark: SparkSession, sf_dir: str,
-                         window: int = SUBSTR_WINDOW,
-                         df_cap: int = DF_CAP) -> DataFrame:
+def dedup_shared_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring overlap pairs: documents sharing at least one
-    verbatim `window`-token run, with the count of distinct shared
+    verbatim SUBSTR_WINDOW-token run, with the count of distinct shared
     windows — the window-granular approximation of suffix-array exact
     substring dedup (the dedup class that catches a paragraph copied
     into an otherwise-unrelated document, which whole-doc Jaccard
@@ -1306,15 +1303,15 @@ def dedup_shared_windows(spark: SparkSession, sf_dir: str,
     polynomial combine vectorized in numpy — see
     rolling_window_hashes_udf; hash equality == window-string
     equality modulo 2^-64), df-capped posting lists (windows in more
-    than df_cap docs are boilerplate and drop), C(df,2) ordered pair
+    than DF_CAP docs are boilerplate and drop), C(df,2) ordered pair
     emission per list. One shuffle on the 64-bit window hash, one on
-    the pair key; fan-out bounded at C(df_cap, 2) per window at any
+    the pair key; fan-out bounded at C(DF_CAP, 2) per window at any
     corpus size.
     """
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     docs = fan_out(read_table(spark, sf_dir, "documents")).select(
         "doc_id",
-        rolling_window_hashes_udf(window)(
+        rolling_window_hashes_udf(SUBSTR_WINDOW)(
             F.transform(toks, lambda t: F.xxhash64(t))).alias("grams"))
     # explode_outer + explicit null filter, NOT explode (round-12,
     # optimization guide §4.4): explode's implicit size>0 generate
@@ -1327,7 +1324,7 @@ def dedup_shared_windows(spark: SparkSession, sf_dir: str,
     ex = (docs.select("doc_id", F.explode_outer("grams").alias("g"))
           .filter(F.col("g").isNotNull()))
     kept = (ex.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= df_cap).select("g"))
+            .filter(F.col("__df") <= DF_CAP).select("g"))
     kg = (
         ex.join(kept, "g")
         .groupBy("g")
@@ -1380,11 +1377,10 @@ ORACLE_SQL["dedup_shared_windows"] = f"""
 SEGMENT_LEN = 20
 
 
-def segment_dedup(spark: SparkSession, sf_dir: str,
-                  seg_len: int = SEGMENT_LEN) -> DataFrame:
+def segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paragraph-level dedup, C4-style, adapted to the newline-free
     testdata corpus: each document splits into consecutive
-    `seg_len`-token segments, every segment that already appeared
+    SEGMENT_LEN-token segments, every segment that already appeared
     earlier in the corpus (first occurrence = lexicographically
     smallest (doc_id, seg_idx)) is DROPPED, and each document is
     rebuilt from its surviving segments in order — the op that
@@ -1402,7 +1398,7 @@ def segment_dedup(spark: SparkSession, sf_dir: str,
     survivors join back on the same key, and the rebuild is one per-doc
     agg whose state is bounded by a single document's length.
     Per-doc segment counts come straight off the UN-exploded docs
-    frame (ceil(|tokens|/seg_len)) — never a second pass over the
+    frame (ceil(|tokens|/SEGMENT_LEN)) — never a second pass over the
     exploded relation just to count it. The shuffles — winner agg,
     hash join back, per-doc rebuild, final doc_id join — are each
     linear in corpus size at any SF.
@@ -1410,11 +1406,11 @@ def segment_dedup(spark: SparkSession, sf_dir: str,
     so the oracle hashes the rebuilt TEXT, not just counts."""
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    n_segs = F.ceil(F.size(toks) / F.lit(float(seg_len))).cast("int")
+    n_segs = F.ceil(F.size(toks) / F.lit(float(SEGMENT_LEN))).cast("int")
     segs_arr = F.transform(
         F.sequence(F.lit(0), n_segs - F.lit(1)),
         lambda i: F.array_join(
-            F.slice(toks, i * seg_len + F.lit(1), seg_len), " "))
+            F.slice(toks, i * SEGMENT_LEN + F.lit(1), SEGMENT_LEN), " "))
     segs = (docs
             .select("doc_id", F.posexplode(segs_arr).alias("seg_idx", "seg"))
             .withColumn("seg_hash", F.xxhash64("seg")))
@@ -1497,8 +1493,7 @@ ORACLE_SQL["segment_dedup"] = f"""
 """
 
 
-def source_overlap_matrix(spark: SparkSession, sf_dir: str,
-                          n: int = 5) -> DataFrame:
+def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source duplication matrix: for every source pair, the
     number of DISTINCT word 5-gram shingles appearing in both
     sources and the Jaccard of the two shingle sets — the
@@ -1538,7 +1533,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str,
                                 F.split(F.lower(F.trim(F.col("text"))),
                                         r"\s+"))
                     .select("source",
-                            F.explode(word_gram_strings_expr(n))
+                            F.explode(word_gram_strings_expr(OVERLAP_NGRAM))
                             .alias("sig"))
                     .groupBy("sig")
                     .agg(F.array_sort(F.collect_set("source"))
@@ -1576,18 +1571,18 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str,
 
 QUERIES["source_overlap_matrix"] = source_overlap_matrix
 
-ORACLE_SQL["source_overlap_matrix"] = """
+ORACLE_SQL["source_overlap_matrix"] = f"""
     WITH t AS (
         SELECT source,
                string_split_regex(lower(trim(text)), '\\s+') AS toks
         FROM documents
     ), sigs AS (
         SELECT DISTINCT source,
-               array_to_string(list_slice(toks, i, i + 4), ' ') AS sig
+               array_to_string(list_slice(toks, i, i + {OVERLAP_NGRAM - 1}), ' ') AS sig
         FROM t, LATERAL (
-            SELECT unnest(range(1, len(toks) - 3))
+            SELECT unnest(range(1, len(toks) - {OVERLAP_NGRAM - 2}))
         ) AS r(i)
-        WHERE len(toks) >= 5
+        WHERE len(toks) >= {OVERLAP_NGRAM}
     ), per_source AS (
         SELECT source, CAST(count(*) AS BIGINT) AS n
         FROM sigs GROUP BY 1
@@ -1608,8 +1603,7 @@ ORACLE_SQL["source_overlap_matrix"] = """
     ORDER BY source_a, source_b
 """
 
-def dedup_minhash_incremental(spark: SparkSession, sf_dir: str,
-                              threshold: float = 0.15) -> DataFrame:
+def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental (batch-vs-base) NEAR-dup maintenance — the nightly
     shape for the LSH index: a new batch (doc_id % INCR_MOD == 0,
     the established split) is checked against the already-indexed
@@ -1707,7 +1701,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str,
     pairs = track(
         candidates.join(a, "a_id").join(b, "b_id")
         .withColumn("jaccard", F.floor(inter / union * 10000) / 10000)
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("a_id", "b_id", "jaccard")
         .unionByName(star)
         .persist())

@@ -302,11 +302,9 @@ def sample_frames(media: DataFrame, frame_bytes: int = FRAME_BYTES,
     )
 
 
-def frame_sample(spark: SparkSession, sf_dir: str,
-                 frame_bytes: int = FRAME_BYTES,
-                 stride: int = FRAME_STRIDE) -> DataFrame:
+def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sample_frames over the fabricated media table."""
-    return sample_frames(media_table(spark, sf_dir), frame_bytes, stride)
+    return sample_frames(media_table(spark, sf_dir))
 
 
 def media_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -388,11 +386,13 @@ ORACLE_SQL = {
 }
 
 
-def media_resize(spark: SparkSession, sf_dir: str,
-                 factor: int = 2) -> DataFrame:
+RESIZE_FACTOR = 2
+
+
+def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize through mapInPandas: emits the stub-decoded dimensions
-    scaled down by `factor` plus a byte-downsampled payload standing
-    in for the re-encoded image (no codecs in this container; the
+    scaled down by RESIZE_FACTOR plus a byte-downsampled payload
+    standing in for the re-encoded image (no codecs in this container; the
     batch shape, schema contract and metadata math are the real
     plumbing). Output dims are oracle-checkable against the same
     md5-derived dimension formula."""
@@ -404,11 +404,12 @@ def media_resize(spark: SparkSession, sf_dir: str,
                     for p, t in zip(pdf["payload"], pdf["media_type"])]
             yield pd.DataFrame({
                 "media_id": pdf["media_id"],
-                "width": pd.Series(
-                    [max(1, m[0] // factor) for m in meta], dtype="int32"),
-                "height": pd.Series(
-                    [max(1, m[1] // factor) for m in meta], dtype="int32"),
-                "resized_payload": [bytes(p[::factor]) for p in pdf["payload"]],
+                "width": pd.Series([max(1, m[0] // RESIZE_FACTOR)
+                                    for m in meta], dtype="int32"),
+                "height": pd.Series([max(1, m[1] // RESIZE_FACTOR)
+                                     for m in meta], dtype="int32"),
+                "resized_payload": [bytes(p[::RESIZE_FACTOR])
+                                    for p in pdf["payload"]],
             })
 
     return media.mapInPandas(
@@ -417,11 +418,13 @@ def media_resize(spark: SparkSession, sf_dir: str,
     ).select("media_id", "width", "height")
 
 
-def media_features(spark: SparkSession, sf_dir: str,
-                   dim: int = 16) -> DataFrame:
+FEATURE_DIM = 16
+
+
+def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature extraction through mapInPandas: a deterministic
-    16-dim unit vector per item (md5-seeded numpy, standing in for a
-    CNN/CLIP embedding head). The contract a downstream ANN index
+    FEATURE_DIM-dim unit vector per item (md5-seeded numpy, standing
+    in for a CNN/CLIP embedding head). The contract a downstream ANN index
     consumes: (media_id, features array<float>). Internal form —
     the catalog entry media_feature_extract projects it to scalars
     for the gate; determinism and unit-norm are unit-tested."""
@@ -433,7 +436,7 @@ def media_features(spark: SparkSession, sf_dir: str,
             for p in pdf["payload"]:
                 seed = int.from_bytes(hashlib.md5(p).digest()[:4], "big")
                 rng = np.random.RandomState(seed)
-                v = rng.standard_normal(dim)
+                v = rng.standard_normal(FEATURE_DIM)
                 feats.append((v / np.linalg.norm(v)).astype(np.float32))
             yield pd.DataFrame({
                 "media_id": pdf["media_id"],
@@ -443,15 +446,14 @@ def media_features(spark: SparkSession, sf_dir: str,
     return media.mapInPandas(extract, "media_id long, features array<float>")
 
 
-def media_feature_extract(spark: SparkSession, sf_dir: str,
-                          dim: int = 16) -> DataFrame:
+def media_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog form of media_features: scalar contract the gate can
     canonicalize — vector width and L2 norm (rounded to 4dp, exactly
     1.0 for any float32-normalized vector). The norm is recomputed
     JVM-side from the actual UDF output, so the oracle's constant
     1.0 genuinely checks that the numpy head emitted unit vectors of
     the declared dimension for every row."""
-    feats = media_features(spark, sf_dir, dim)
+    feats = media_features(spark, sf_dir)
     sumsq = F.aggregate(
         F.transform("features", lambda x: x.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x * x)
@@ -493,8 +495,8 @@ QUERIES["media_feature_extract"] = media_feature_extract
 
 ORACLE_SQL["media_resize"] = f"""
     SELECT media_id,
-           CAST(greatest(1, ({_W}) // 2) AS INT) AS width,
-           CAST(greatest(1, ({_H}) // 2) AS INT) AS height
+           CAST(greatest(1, ({_W}) // {RESIZE_FACTOR}) AS INT) AS width,
+           CAST(greatest(1, ({_H}) // {RESIZE_FACTOR}) AS INT) AS height
     FROM ({_MEDIA_SQL})
 """
 
@@ -522,7 +524,7 @@ ORACLE_SQL["media_frame_sample"] = f"""
 
 ORACLE_SQL["media_feature_extract"] = f"""
     SELECT media_id,
-           CAST(16 AS INT) AS n_dims,
+           CAST({FEATURE_DIM} AS INT) AS n_dims,
            CAST(1.0 AS DOUBLE) AS l2_norm
     FROM ({_MEDIA_SQL})
 """

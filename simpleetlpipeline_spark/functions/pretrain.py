@@ -229,12 +229,11 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACK_CTX = 256
 
 
-def sequence_pack(spark: SparkSession, sf_dir: str,
-                  ctx: int = PACK_CTX) -> DataFrame:
+def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-cut sequence-packing manifest.
 
     Pretraining packing concatenates a shard's documents in a fixed
-    order and cuts every `ctx` tokens; a document may straddle a cut.
+    order and cuts every PACK_CTX tokens; a document may straddle a cut.
     This emits, per document: its token offset in the shard stream
     and the first/last pack indices it lands in.
 
@@ -257,8 +256,8 @@ def sequence_pack(spark: SparkSession, sf_dir: str,
         .select(
             "source", "doc_id", "n_tokens",
             (end - F.col("n_tokens")).alias("start_offset"),
-            F.floor((end - F.col("n_tokens")) / ctx).alias("first_pack"),
-            F.floor((end - 1) / ctx).alias("last_pack"),
+            F.floor((end - F.col("n_tokens")) / PACK_CTX).alias("first_pack"),
+            F.floor((end - 1) / PACK_CTX).alias("last_pack"),
         )
     )
 
@@ -295,12 +294,10 @@ KMEANS_ITERS = 2   # assignment rounds (1 centroid update between)
 _KMEANS_ROUND = 6
 
 
-def kmeans_assign(spark: SparkSession, sf_dir: str,
-                  k: int = KMEANS_K,
-                  iters: int = KMEANS_ITERS) -> DataFrame:
+def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded Lloyd k-means over the embedding column.
 
-    Init: the k lowest-vec_id embeddings (deterministic, no RNG).
+    Init: the KMEANS_K lowest-vec_id embeddings (deterministic, no RNG).
     Each round: assign every vector to its nearest centroid (squared
     L2, ties to the lower cluster id), then recompute centroids as
     the per-cluster dimension means, rounded to 6dp.
@@ -324,9 +321,10 @@ def kmeans_assign(spark: SparkSession, sf_dir: str,
     family's first consumer from the shared centroids, which survive
     release_caches() — a rebuild never re-runs the Lloyd loop.
     """
-    return shared(spark, ("kmeans_assign", sf_dir, k, iters), lambda: (
+    key = ("kmeans_assign", sf_dir, KMEANS_K, KMEANS_ITERS)
+    return shared(spark, key, lambda: (
         _nearest(_kmeans_input(spark, sf_dir),
-                 _kmeans_centroids(spark, sf_dir, k, iters))
+                 _kmeans_centroids(spark, sf_dir))
         .select("vec_id", "label", "cluster")))
 
 
@@ -350,15 +348,14 @@ def _nearest(df: DataFrame, cent: np.ndarray) -> DataFrame:
     return df.withColumn("cluster", nearest("e"))
 
 
-def _kmeans_centroids(spark: SparkSession, sf_dir: str, k: int,
-                      iters: int) -> np.ndarray:
+def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """The k x dim centroids of the final assignment round: a shared
     driver value keyed on the embeddings file's stamp."""
     def build():
         emb = _kmeans_input(spark, sf_dir).persist()
         try:
             cent = np.array([r["e"] for r in
-                             emb.orderBy("vec_id").limit(k).collect()],
+                             emb.orderBy("vec_id").limit(KMEANS_K).collect()],
                             dtype=np.float64)
             # Centroid update: ONE hash aggregate with `dim` positional
             # avg buffers per cluster (round 12, guide §2.3 — the same
@@ -375,7 +372,7 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str, k: int,
                 "array(" + ",".join(
                     f"round(avg(e[{i}]), {_KMEANS_ROUND})"
                     for i in range(cent.shape[1])) + ")")
-            for _ in range(iters - 1):
+            for _ in range(KMEANS_ITERS - 1):
                 means = _nearest(emb, cent).groupBy("cluster").agg(
                     mean_arr.alias("c")).collect()
                 cent = cent.copy()
@@ -387,8 +384,8 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str, k: int,
             emb.unpersist()
 
     path = os.path.join(sf_dir, "embeddings.parquet")
-    return shared(spark, ("kmeans_centroids", file_stamp(path), k, iters),
-                  build)
+    return shared(spark, ("kmeans_centroids", file_stamp(path), KMEANS_K,
+                          KMEANS_ITERS), build)
 
 
 # ---------------------------------------------------------- sharding
@@ -400,8 +397,7 @@ _SHARD_HASH_A = 2654435761
 _SHARD_HASH_MOD = 1 << 32
 
 
-def shard_manifest(spark: SparkSession, sf_dir: str,
-                   n_shards: int = N_SHARDS) -> DataFrame:
+def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic output-shard plan — the balancing step before
     writing a corpus as n fixed shards: each document is assigned by
     a multiplicative hash of doc_id (engine-independent integer
@@ -411,11 +407,11 @@ def shard_manifest(spark: SparkSession, sf_dir: str,
     straggler task there).
 
     One hash aggregate, map-side combined; the subsequent write would
-    be repartition(n_shards, shard) with each task streaming one file.
+    be repartition(N_SHARDS, shard) with each task streaming one file.
     """
     docs = read_table(spark, sf_dir, "documents")
     shard = F.pmod((F.col("doc_id") * _SHARD_HASH_A) % _SHARD_HASH_MOD,
-                   F.lit(n_shards))
+                   F.lit(N_SHARDS))
     n_tok = F.size(tokens_col(F.col("text"))).cast("long")
     return (
         docs.select(shard.alias("shard"), n_tok.alias("n"),
@@ -431,8 +427,7 @@ def shard_manifest(spark: SparkSession, sf_dir: str,
 N_QUALITY_BINS = 10
 
 
-def quality_bins(spark: SparkSession, sf_dir: str,
-                 n_bins: int = N_QUALITY_BINS) -> DataFrame:
+def quality_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum/quality binning: ntile over the corpus quality score
     (deterministic ordering: score then doc_id), the step that turns a
     continuous quality signal into sampling strata for data mixing or
@@ -473,7 +468,7 @@ def quality_bins(spark: SparkSession, sf_dir: str,
         key_bounds=(0.0, 1.0))
     return ranked.select(
         "doc_id", "quality_score",
-        ntile_from_rank(F.col("__r"), F.col("__n"), n_bins)
+        ntile_from_rank(F.col("__r"), F.col("__n"), N_QUALITY_BINS)
         .alias("quality_bin"),
     )
 
@@ -920,10 +915,9 @@ ORACLE_SQL["user_level_split"] = f"""
 STRAT_QUOTA = 40
 
 
-def stratified_exact_sample(spark: SparkSession, sf_dir: str,
-                            quota: int = STRAT_QUOTA) -> DataFrame:
+def stratified_exact_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-size stratified sampling: from every language stratum,
-    keep EXACTLY min(quota, |stratum|) documents — the per-stratum
+    keep EXACTLY min(STRAT_QUOTA, |stratum|) documents — the per-stratum
     rank of a deterministic multiplicative-hash ticket (ties by
     doc_id) decides membership. Bernoulli sampling
     (corpus_mix_sample) only hits its fraction in expectation; eval
@@ -947,7 +941,7 @@ def stratified_exact_sample(spark: SparkSession, sf_dir: str,
     return (
         docs.withColumn("rank_in_stratum",
                         F.row_number().over(w).cast("int"))
-        .filter(F.col("rank_in_stratum") <= quota)
+        .filter(F.col("rank_in_stratum") <= STRAT_QUOTA)
         .select("doc_id", "lang", "source", "rank_in_stratum")
     )
 
@@ -1029,10 +1023,9 @@ NEG_STEP = 40503          # DuckDB (int128) compute identical tickets
 NEG_RING = 4294967296
 
 
-def negative_samples(spark: SparkSession, sf_dir: str,
-                     k: int = NEG_K) -> DataFrame:
+def negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive negative sampling (two-tower / recommender
-    training prep): for every customer with purchase history, `k`
+    training prep): for every customer with purchase history, NEG_K
     deterministic pseudo-random candidate parts, REJECTING any part
     the customer actually bought (the accidental-positive filter).
     Rejected slots are dropped, not resampled — at corpus scale the
@@ -1067,7 +1060,7 @@ def negative_samples(spark: SparkSession, sf_dir: str,
     cands = (
         purchasers.crossJoin(F.broadcast(n_parts))
         .select("o_custkey", "__n_parts",
-                F.explode(F.sequence(F.lit(0), F.lit(k - 1)))
+                F.explode(F.sequence(F.lit(0), F.lit(NEG_K - 1)))
                  .alias("sample_idx"))
         .withColumn("neg_partkey", ticket % F.col("__n_parts"))
     )
@@ -1113,9 +1106,8 @@ ORACLE_SQL["negative_samples"] = f"""
 TOKEN_SAMPLE_K = 50
 
 
-def token_weighted_sample(spark: SparkSession, sf_dir: str,
-                          k: int = TOKEN_SAMPLE_K) -> DataFrame:
-    """Length-proportional systematic sampling: pick ~k documents
+def token_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Length-proportional systematic sampling: pick ~TOKEN_SAMPLE_K documents
     with probability proportional to token count — the eval-set /
     inspection sampler that doesn't under-represent long documents
     the way uniform row sampling does. A document is selected when
@@ -1148,10 +1140,10 @@ def token_weighted_sample(spark: SparkSession, sf_dir: str,
     sel = (cum
            .withColumn(
                "stride_idx",
-               F.floor(F.col("cum") * k / F.col("__total")))
+               F.floor(F.col("cum") * TOKEN_SAMPLE_K / F.col("__total")))
            .withColumn(
                "prev_idx",
-               F.floor((F.col("cum") - F.col("n_tokens")) * k
+               F.floor((F.col("cum") - F.col("n_tokens")) * TOKEN_SAMPLE_K
                        / F.col("__total")))
            .filter(F.col("stride_idx") > F.col("prev_idx")))
     return (sel.select("doc_id", "n_tokens",
@@ -1192,11 +1184,10 @@ PRI_B = 15_487_469
 PRI_SCALE = 1_000_000_000_000
 
 
-def priority_sample_docs(spark: SparkSession, sf_dir: str,
-                         k: int = PRIORITY_SAMPLE_K) -> DataFrame:
+def priority_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority sampling (Duffield-Lund-Thorup): a FIXED-SIZE
-    weighted sample of k documents that still supports unbiased
-    subset-sum estimates. Each doc draws a deterministic 'uniform'
+    weighted sample of PRIORITY_SAMPLE_K documents that still supports
+    unbiased subset-sum estimates. Each doc draws a deterministic 'uniform'
     h/P from an integer hash of doc_id, gets priority q = w/(h/P)
     (token count over uniform), and the k highest-priority docs are
     kept; tau = the (k+1)-th priority. The Horvitz-Thompson
@@ -1233,13 +1224,14 @@ def priority_sample_docs(spark: SparkSession, sf_dir: str,
                f"((((doc_id % {PRI_P}L) * {PRI_A}L + {PRI_B}L) "
                f"% {PRI_P}L) + 1L)").alias("q"))
     ranked = (salted_topk(pri.select("doc_id", "n_tokens", "q"),
-                          [], [F.desc("q"), F.asc("doc_id")], k + 1)
+                          [], [F.desc("q"), F.asc("doc_id")],
+                          PRIORITY_SAMPLE_K + 1)
               .withColumnRenamed("topk_rank", "rn"))
-    tau = (ranked.filter(F.col("rn") == k + 1)
+    tau = (ranked.filter(F.col("rn") == PRIORITY_SAMPLE_K + 1)
            .select(F.expr("q div 1000000L").alias("tau_micro")))
     total = docs.agg(F.sum("n_tokens").cast("bigint")
                      .alias("exact_total_tokens"))
-    return (ranked.filter(F.col("rn") <= k)
+    return (ranked.filter(F.col("rn") <= PRIORITY_SAMPLE_K)
             .crossJoin(F.broadcast(tau))
             .crossJoin(F.broadcast(total))
             .select(
@@ -1297,8 +1289,7 @@ WOE_CUTOFF = "2000-01-01"
 GAINS_N_BINS = 10
 
 
-def woe_encoding(spark: SparkSession, sf_dir: str,
-                 cutoff: str = WOE_CUTOFF) -> DataFrame:
+def woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-of-evidence encoding of a categorical feature against a
     binary target — the credit-scoring-born encoder that turns a
     category into ln(P(cat|pos)/P(cat|neg)), here market segment vs
@@ -1323,7 +1314,8 @@ def woe_encoding(spark: SparkSession, sf_dir: str,
     orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate")
     active = (orders.groupBy("o_custkey")
-              .agg(F.max((F.col("o_orderdate") >= ts_lit(cutoff)).cast("int"))
+              .agg(F.max((F.col("o_orderdate") >= ts_lit(WOE_CUTOFF))
+                         .cast("int"))
                    .alias("is_pos")))
     labeled = (customers
                .join(active,
@@ -1399,9 +1391,7 @@ ORACLE_SQL["woe_encoding"] = f"""
 """
 
 
-def gains_lift_table(spark: SparkSession, sf_dir: str,
-                     cutoff: str = WOE_CUTOFF,
-                     n_bins: int = GAINS_N_BINS) -> DataFrame:
+def gains_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gains/lift table — the standard model-evaluation readout:
     customers are scored by pre-cutoff spend (the 'model'), cut into
     spend deciles, and each decile reports its post-cutoff repeat
@@ -1419,7 +1409,7 @@ def gains_lift_table(spark: SparkSession, sf_dir: str,
     Shape: cheap columnar orders scans feed both sides (pre-cutoff
     spend agg, post-cutoff repeat flags); the ranked frame is
     customer-tier and never crosses an unpartitioned window; the
-    readout is n_bins rows. The split scan is deliberately NOT
+    readout is GAINS_N_BINS rows. The split scan is deliberately NOT
     persisted (round 12, guide §5): the ranking stack's scalar-
     subquery jobs launch concurrently and race an unbuilt cache —
     profiled with the persist, the scan materialized 8x anyway
@@ -1435,7 +1425,7 @@ def gains_lift_table(spark: SparkSession, sf_dir: str,
     orders = (
         read_table(spark, sf_dir, "orders")
         .select("o_custkey", "o_totalprice",
-                (F.col("o_orderdate") < ts_lit(cutoff)).alias("is_pre")))
+                (F.col("o_orderdate") < ts_lit(WOE_CUTOFF)).alias("is_pre")))
     spend = (orders.filter("is_pre")
              .groupBy("o_custkey")
              .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -1452,7 +1442,7 @@ def gains_lift_table(spark: SparkSession, sf_dir: str,
         rank_out="__r", total_rows_out="__n")
     deciled = ranked.select(
         "is_repeat",
-        ntile_from_rank(F.col("__r"), F.col("__n"), n_bins)
+        ntile_from_rank(F.col("__r"), F.col("__n"), GAINS_N_BINS)
         .alias("decile"))
     per = (deciled.groupBy("decile")
            .agg(F.count(F.lit(1)).cast("long").alias("n_customers"),
@@ -1480,29 +1470,28 @@ def gains_lift_table(spark: SparkSession, sf_dir: str,
 QUERIES["gains_lift_table"] = gains_lift_table
 
 
-def gains_lift_oracle(cutoff: str = WOE_CUTOFF,
-                      n_bins: int = GAINS_N_BINS) -> str:
-    """Oracle twin as a BUILDER over the same parameters as the
-    Spark function, so non-default calls can be parity-checked too
+def gains_lift_oracle() -> str:
+    """Oracle twin as a BUILDER over the module constants the Spark
+    function reads (WOE_CUTOFF, GAINS_N_BINS), read at call time, so
+    patched values stay parity-checkable too
     (tests/test_functions.py::test_parameterized_oracle_parity);
-    ORACLE_SQL pins the defaults — identical to the Spark defaults
-    by construction because both sides read the same constants."""
+    ORACLE_SQL pins the import-time values."""
     return f"""
     WITH spend AS (
         SELECT o_custkey,
                sum(CAST(o_totalprice AS DECIMAL(18,2))) AS spend
-        FROM orders WHERE o_orderdate < TIMESTAMP '{cutoff}'
+        FROM orders WHERE o_orderdate < TIMESTAMP '{WOE_CUTOFF}'
         GROUP BY 1
     ), repeat AS (
         SELECT DISTINCT o_custkey, 1 AS is_repeat
-        FROM orders WHERE o_orderdate >= TIMESTAMP '{cutoff}'
+        FROM orders WHERE o_orderdate >= TIMESTAMP '{WOE_CUTOFF}'
     ), scored AS (
         SELECT s.o_custkey, s.spend,
                COALESCE(r.is_repeat, 0) AS is_repeat
         FROM spend s LEFT JOIN repeat r USING (o_custkey)
     ), deciled AS (
         SELECT is_repeat,
-               ntile({n_bins}) OVER
+               ntile({GAINS_N_BINS}) OVER
                    (ORDER BY spend DESC, o_custkey ASC) AS decile
         FROM scored
     ), per AS (
@@ -1630,9 +1619,7 @@ ORACLE_SQL["quantile_normalize_quality"] = f"""
 """
 
 
-def calibration_reliability(spark: SparkSession, sf_dir: str,
-                            cutoff: str = WOE_CUTOFF,
-                            n_bins: int = GAINS_N_BINS) -> DataFrame:
+def calibration_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram + Brier decomposition inputs — the
     calibration readout gains_lift_table's discrimination view
     doesn't cover: a model can rank perfectly (high lift) while its
@@ -1654,14 +1641,14 @@ def calibration_reliability(spark: SparkSession, sf_dir: str,
     projected columnar reads; the round-12 raw-scan persist raced
     its own subqueries and was removed), two-pass distributed rank
     (never an unpartitioned window over the customer tier),
-    ntile_from_rank deciles, one n_bins-row hash aggregate."""
+    ntile_from_rank deciles, one GAINS_N_BINS-row hash aggregate."""
     from simpleetlpipeline_spark.operators.aggregates import (
         ntile_from_rank, two_pass_global_window)
 
     orders = (
         read_table(spark, sf_dir, "orders")
         .select("o_custkey", "o_totalprice",
-                (F.col("o_orderdate") < ts_lit(cutoff)).alias("is_pre")))
+                (F.col("o_orderdate") < ts_lit(WOE_CUTOFF)).alias("is_pre")))
     spend = (orders.filter("is_pre")
              .groupBy("o_custkey")
              .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -1679,7 +1666,7 @@ def calibration_reliability(spark: SparkSession, sf_dir: str,
     p_micro = F.expr("(__n - __r + 1) * 1000000 div __n")
     err = p_micro - F.col("is_repeat").cast("long") * F.lit(1_000_000)
     binned = ranked.select(
-        ntile_from_rank(F.col("__r"), F.col("__n"), n_bins)
+        ntile_from_rank(F.col("__r"), F.col("__n"), GAINS_N_BINS)
         .alias("decile"),
         p_micro.alias("p_micro"),
         F.col("is_repeat").cast("long").alias("y"),
@@ -1702,14 +1689,13 @@ def calibration_reliability(spark: SparkSession, sf_dir: str,
 QUERIES["calibration_reliability"] = calibration_reliability
 
 
-def calibration_oracle(cutoff: str = WOE_CUTOFF,
-                       n_bins: int = GAINS_N_BINS) -> str:
-    """Parameterized oracle twin (same contract as
-    gains_lift_oracle: non-default calls stay parity-checkable)."""
+def calibration_oracle() -> str:
+    """Oracle twin builder (same contract as gains_lift_oracle:
+    patched constants stay parity-checkable)."""
     return f"""
     WITH o AS (
         SELECT o_custkey, o_totalprice,
-               o_orderdate < TIMESTAMP '{cutoff}' AS is_pre
+               o_orderdate < TIMESTAMP '{WOE_CUTOFF}' AS is_pre
         FROM orders
     ), spend AS (
         SELECT o_custkey,
@@ -1727,7 +1713,7 @@ def calibration_oracle(cutoff: str = WOE_CUTOFF,
                row_number() OVER (ORDER BY spend DESC, o_custkey ASC)
                    AS r,
                count(*) OVER () AS n,
-               ntile({n_bins}) OVER
+               ntile({GAINS_N_BINS}) OVER
                    (ORDER BY spend DESC, o_custkey ASC) AS decile
         FROM scored
     ), p AS (

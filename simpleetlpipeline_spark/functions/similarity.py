@@ -156,8 +156,8 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("nrm", l2_norm(F.col("e")))))
 
 
-def _topk_per_probe(scored: DataFrame, k: int = TOP_K) -> DataFrame:
-    """Two-phase top-k per probe: partial top-k inside salt buckets,
+def _topk_per_probe(scored: DataFrame) -> DataFrame:
+    """Two-phase TOP_K per probe: partial top-k inside salt buckets,
     then a final top-k over bands*k survivors.
 
     A single `row_number over (partition by a_id)` would funnel the
@@ -172,13 +172,12 @@ def _topk_per_probe(scored: DataFrame, k: int = TOP_K) -> DataFrame:
     from simpleetlpipeline_spark.operators.aggregates import salted_topk
 
     return salted_topk(
-        scored, ["a_id"], [F.desc("cosine_sim"), F.asc("b_id")], k,
+        scored, ["a_id"], [F.desc("cosine_sim"), F.asc("b_id")], TOP_K,
         n_salts=N_SALTS, salt_source=F.xxhash64("b_id"),
     ).withColumnRenamed("topk_rank", "rank")
 
 
-def ann_topk(spark: SparkSession, sf_dir: str,
-             n_probes: int = N_PROBES, k: int = TOP_K) -> DataFrame:
+def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k against a broadcast probe set.
 
     Plan shape: scan -> broadcast nested-loop join (corpus x probes,
@@ -188,7 +187,7 @@ def ann_topk(spark: SparkSession, sf_dir: str,
     """
     vecs = _vectors(spark, sf_dir)
     probes = (
-        vecs.filter(F.col("vec_id") < n_probes)
+        vecs.filter(F.col("vec_id") < N_PROBES)
         .select(F.col("vec_id").alias("a_id"), F.col("e").alias("a_e"),
                 F.col("nrm").alias("a_nrm"))
     )
@@ -202,7 +201,7 @@ def ann_topk(spark: SparkSession, sf_dir: str,
                        F.col("a_nrm"), F.col("b_nrm")).alias("cosine_sim"))
     )
     return (
-        _topk_per_probe(scored, k)
+        _topk_per_probe(scored)
         .select("a_id", "b_id", "rank", "cosine_sim")
     )
 
@@ -249,19 +248,17 @@ def _lsh_bucket_udf(planes: int = LSH_PLANES, bands: int = LSH_BANDS,
     return _bb
 
 
-def ann_lsh_topk(spark: SparkSession, sf_dir: str,
-                 n_probes: int = N_PROBES, k: int = TOP_K,
-                 bucket_cap: int = ANN_BUCKET_CAP) -> DataFrame:
+def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN: probe and corpus vectors meet only when they
     share a (band, bucket) key, then exact cosine re-ranks candidates.
 
     The scale path: candidate generation is an equi-join on bucket
     keys (uniformly distributed sign patterns), so shuffle volume is
     ~bands x corpus rows regardless of probe count — no quadratic
-    stage anywhere; bucket membership is capped at bucket_cap (see
+    stage anywhere; bucket membership is capped at ANN_BUCKET_CAP (see
     ANN_BUCKET_CAP) so a hot near-identical cluster cannot flood one
     bucket's candidate fan-out. The cap keeps the SMALLEST vec_ids,
-    so probe rows (vec_id < n_probes) are never evicted. Recall
+    so probe rows (vec_id < N_PROBES) are never evicted. Recall
     tuned by (planes, bands); verified against ann_topk in
     tests/test_similarity.py.
     """
@@ -277,8 +274,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str,
     # vector crosses the wire once, keyed by its own id.
     bands = vecs.select(
         "vec_id", F.explode(bucketer(F.col("e"))).alias("bb"))
-    bands = cap_bucket_members(bands, ["bb"], "vec_id", bucket_cap)
-    probe_bands = (bands.filter(F.col("vec_id") < n_probes)
+    bands = cap_bucket_members(bands, ["bb"], "vec_id", ANN_BUCKET_CAP)
+    probe_bands = (bands.filter(F.col("vec_id") < N_PROBES)
                    .select(F.col("vec_id").alias("a_id"), "bb"))
     cand = (
         bands.select(F.col("vec_id").alias("b_id"), "bb")
@@ -287,7 +284,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str,
         .select("a_id", "b_id")
         .distinct()
     )
-    probes = vecs.filter(F.col("vec_id") < n_probes).select(
+    probes = vecs.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("a_id"), F.col("e").alias("a_e"),
         F.col("nrm").alias("a_nrm"))
     # Candidates are probe-bounded (<= probes x bucket sizes), so
@@ -305,27 +302,27 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str,
                        F.col("a_nrm"), F.col("b_nrm")).alias("cosine_sim"))
     )
     return (
-        _topk_per_probe(scored, k)
+        _topk_per_probe(scored)
         .select("a_id", "b_id", "rank", "cosine_sim")
     )
 
 
-def embedding_neardup(spark: SparkSession, sf_dir: str,
-                      threshold: float = NEARDUP_THRESHOLD,
-                      max_bytes: int = EXACT_NEARDUP_MAX_BYTES) -> DataFrame:
-    """Exact all-pairs cosine near-dup (a_id < b_id, sim >= t).
+def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact all-pairs cosine near-dup (a_id < b_id,
+    sim >= NEARDUP_THRESHOLD).
 
     Quadratic by construction — the oracle-checkable ground truth at
     test scale. At 100 TB use embedding_neardup_lsh: same output
     contract, LSH-blocked candidate generation. Guarded: the corpus
-    is the broadcast build side, so past max_bytes this refuses to
-    plan rather than OOM an executor mid-stage.
+    is the broadcast build side, so past EXACT_NEARDUP_MAX_BYTES this
+    refuses to plan rather than OOM an executor mid-stage.
     """
     n_bytes = _table_bytes(sf_dir, "embeddings")
-    if n_bytes > max_bytes:
+    if n_bytes > EXACT_NEARDUP_MAX_BYTES:
         raise ValueError(
             f"embedding_neardup is exact/quadratic and broadcasts the "
-            f"full corpus ({n_bytes} bytes > max_bytes={max_bytes}); "
+            f"full corpus ({n_bytes} bytes > EXACT_NEARDUP_MAX_BYTES="
+            f"{EXACT_NEARDUP_MAX_BYTES}); "
             f"use embedding_neardup_lsh (same output contract, "
             f"LSH-blocked, linear shuffle) at this scale")
     vecs = _vectors(spark, sf_dir)
@@ -341,13 +338,11 @@ def embedding_neardup(spark: SparkSession, sf_dir: str,
         .select("a_id", "b_id",
                 cosine(F.col("a_e"), F.col("b_e"),
                        F.col("a_nrm"), F.col("b_nrm")).alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= NEARDUP_THRESHOLD)
     )
 
 
-def embedding_neardup_lsh(spark: SparkSession, sf_dir: str,
-                          threshold: float = NEARDUP_THRESHOLD,
-                          bucket_cap: int = ANN_BUCKET_CAP) -> DataFrame:
+def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-blocked near-dup: pairs meet only in shared (band, bucket)
     groups; exact cosine verifies candidates. Linear shuffle; the
     self-join fan-out per bucket is corpus/2^bits_per_band on random
@@ -361,7 +356,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str,
     cosine_sim 1.0 — the mathematically exact value for identical
     vectors, bypassing the 4dp-floored float fold. Residual
     near-identical (non-bit-identical) skew is bounded by the
-    bucket_cap membership cap.
+    ANN_BUCKET_CAP membership cap.
 
     Candidates enumerate in-array per bucket posting list (round 12,
     see dedup.band_candidates): one SRP-kernel pass, one exchange on
@@ -413,7 +408,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str,
     bands = cap_bucket_members(
         vecs.select("vec_id",
                     F.explode(bucketer(F.col("e"))).alias("bb")),
-        ["bb"], "vec_id", bucket_cap)
+        ["bb"], "vec_id", ANN_BUCKET_CAP)
     # Round 12: in-array pair enumeration over per-bucket posting
     # lists replaces the band self-join (Catalyst cannot share a
     # subtree across a self-join's sides, so the SRP kernel ran once
@@ -470,7 +465,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str,
         out = (
             raw_pairs
             .withColumn("cosine_sim", pair_cos("a_id", "b_id"))
-            .filter(F.col("cosine_sim") >= threshold)
+            .filter(F.col("cosine_sim") >= NEARDUP_THRESHOLD)
             .dropDuplicates(["a_id", "b_id"])
         )
         return out.unionByName(star) if star is not None else out
@@ -489,7 +484,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str,
         .select("a_id", "b_id",
                 cosine(F.col("a_e"), F.col("b_e"),
                        F.col("a_nrm"), F.col("b_nrm")).alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= NEARDUP_THRESHOLD)
         .unionByName(star)
     )
 
@@ -530,9 +525,7 @@ HYBRID_RRF_K = 60
 HYBRID_TOP_K = 10
 
 
-def hybrid_rrf_search(spark: SparkSession, sf_dir: str,
-                      k: int = HYBRID_TOP_K,
-                      pool: int = HYBRID_POOL) -> DataFrame:
+def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: BM25 lexical ranking fused with exact-cosine
     vector ranking by Reciprocal Rank Fusion — the standard RAG
     retrieval stack (sparse + dense legs, rank-level fusion so the
@@ -559,12 +552,12 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str,
     below the agg, TakeOrderedAndProject pool); the dense leg is one
     broadcast of the single probe vector against the corpus scan and
     a TakeOrdered pool. The full-outer fusion join and the rank
-    windows run on <= 2*pool rows (constant, driver-tier by
+    windows run on <= 2*HYBRID_POOL rows (constant, driver-tier by
     construction) — at 100 TB both legs stay linear single-pass and
     the fusion cost is unchanged."""
     from simpleetlpipeline_spark.functions.text import bm25_doc_ranking
 
-    lex_pool = bm25_doc_ranking(spark, sf_dir, k=pool)
+    lex_pool = bm25_doc_ranking(spark, sf_dir, k=HYBRID_POOL)
     w_lex = Window.orderBy(F.desc("score_micro"), F.asc("doc_id"))
     lex = lex_pool.select(
         "doc_id", F.row_number().over(w_lex).cast("int").alias("r_lex"))
@@ -579,7 +572,7 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str,
                              F.col("a_nrm"), F.col("nrm"))
                       .alias("cosine_sim")))
     vec_pool = (scored.orderBy(F.desc("cosine_sim"), F.asc("doc_id"))
-                .limit(pool))
+                .limit(HYBRID_POOL))
     w_vec = Window.orderBy(F.desc("cosine_sim"), F.asc("doc_id"))
     vec = vec_pool.select(
         "doc_id", F.row_number().over(w_vec).cast("int").alias("r_vec"))
@@ -593,7 +586,7 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str,
                     F.floor((leg(F.col("r_lex")) + leg(F.col("r_vec")))
                             * 1e9).cast("long").alias("rrf_nano"))
             .orderBy(F.desc("rrf_nano"), F.asc("doc_id"))
-            .limit(k))
+            .limit(HYBRID_TOP_K))
 
 
 QUERIES = {
@@ -651,15 +644,14 @@ _COS_ARR_SQL = """
         / 10000
 """
 
-def _hybrid_rrf_oracle(k: int = HYBRID_TOP_K,
-                       pool: int = HYBRID_POOL) -> str:
+def _hybrid_rrf_oracle() -> str:
     from simpleetlpipeline_spark.functions.text import BM25_SCORED_CTES
 
     return f"""
     WITH {BM25_SCORED_CTES},
     lexpool AS (
         SELECT doc_id, score_micro FROM bm25_docs
-        ORDER BY score_micro DESC, doc_id ASC LIMIT {pool}
+        ORDER BY score_micro DESC, doc_id ASC LIMIT {HYBRID_POOL}
     ), lex AS (
         SELECT doc_id,
                CAST(row_number() OVER (ORDER BY score_micro DESC,
@@ -673,7 +665,7 @@ def _hybrid_rrf_oracle(k: int = HYBRID_TOP_K,
         WHERE b.vec_id != {HYBRID_PROBE_ID}
     ), vecpool AS (
         SELECT * FROM scoredv
-        ORDER BY cosine_sim DESC, doc_id ASC LIMIT {pool}
+        ORDER BY cosine_sim DESC, doc_id ASC LIMIT {HYBRID_POOL}
     ), vec AS (
         SELECT doc_id,
                CAST(row_number() OVER (ORDER BY cosine_sim DESC,
@@ -690,7 +682,7 @@ def _hybrid_rrf_oracle(k: int = HYBRID_TOP_K,
                                          + CAST(r_vec AS DOUBLE)), 0.0))
                       * 1e9) AS BIGINT) AS rrf_nano
     FROM fused
-    ORDER BY rrf_nano DESC, doc_id ASC LIMIT {k}
+    ORDER BY rrf_nano DESC, doc_id ASC LIMIT {HYBRID_TOP_K}
 """
 
 
@@ -805,15 +797,16 @@ def _assign_cells(vecs: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
     )
 
 
-def ann_ivf_topk(spark: SparkSession, sf_dir: str,
-                 n_probes: int = N_PROBES, k: int = TOP_K,
-                 nprobe: int = 3) -> DataFrame:
+IVF_NPROBE = 3
+
+
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: corpus vectors live in their nearest-centroid
-    cell (inverted list); each probe searches only its `nprobe`
+    cell (inverted list); each probe searches only its IVF_NPROBE
     nearest cells, then exact cosine re-ranks the candidates.
 
     The other classic ANN scale path next to LSH: candidate volume is
-    ~corpus * nprobe/|cells| per probe, an equi-join on cell id —
+    ~corpus * IVF_NPROBE/|cells| per probe, an equi-join on cell id —
     never all-pairs. Recall vs the exact ann_topk is unit-tested.
 
     Round-12 note (optimization guide §1): persisting `vecs` was
@@ -828,7 +821,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str,
         F.col("vec_id").alias("b_id"), F.col("e").alias("b_e"),
         F.col("nrm").alias("b_nrm"), "cell")
     probe_cells = _assign_cells(
-        vecs.filter(F.col("vec_id") < n_probes), cents, nprobe=nprobe
+        vecs.filter(F.col("vec_id") < N_PROBES), cents, nprobe=IVF_NPROBE
     ).select(F.col("vec_id").alias("a_id"), F.col("e").alias("a_e"),
              F.col("nrm").alias("a_nrm"), "cell")
     scored = (
@@ -839,7 +832,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str,
                        F.col("a_nrm"), F.col("b_nrm")).alias("cosine_sim"))
         .dropDuplicates(["a_id", "b_id"])
     )
-    return _topk_per_probe(scored, k).select("a_id", "b_id", "rank", "cosine_sim")
+    return _topk_per_probe(scored).select("a_id", "b_id", "rank",
+                                          "cosine_sim")
 
 
 QUERIES["ann_ivf_topk"] = ann_ivf_topk
@@ -891,7 +885,7 @@ ORACLE_SQL["ann_ivf_topk"] = f"""
         FROM ranked_cells WHERE cr = 1
     ), probes AS (
         SELECT vec_id AS a_id, e AS a_e, nrm AS a_nrm, cell
-        FROM ranked_cells WHERE vec_id < {N_PROBES} AND cr <= 3
+        FROM ranked_cells WHERE vec_id < {N_PROBES} AND cr <= {IVF_NPROBE}
     ), scored AS (
         SELECT a_id, b_id,
                floor(
@@ -983,10 +977,7 @@ ORACLE_SQL["embedding_quantize"] = f"""
 """
 
 
-def _exact_pairs_blocked(spark: SparkSession, sf_dir: str,
-                         threshold: float,
-                         max_bytes: int = EXACT_NEARDUP_MAX_BYTES
-                         ) -> DataFrame:
+def _exact_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs threshold edges via blocked matrix product:
     the corpus matrix broadcasts (size-gated, same contract as
     embedding_neardup), each task scores an Arrow batch of row ids
@@ -1003,10 +994,11 @@ def _exact_pairs_blocked(spark: SparkSession, sf_dir: str,
     for any threshold not sitting inside the two folds' noise band.
     """
     n_bytes = _table_bytes(sf_dir, "embeddings")
-    if n_bytes > max_bytes:
+    if n_bytes > EXACT_NEARDUP_MAX_BYTES:
         raise ValueError(
             f"exact all-pairs scoring broadcasts the full corpus "
-            f"({n_bytes} bytes > max_bytes={max_bytes}); use "
+            f"({n_bytes} bytes > EXACT_NEARDUP_MAX_BYTES="
+            f"{EXACT_NEARDUP_MAX_BYTES}); use "
             f"embedding_neardup_lsh-shaped blocking at this scale")
     vecs = _vectors(spark, sf_dir)
     pdf = (vecs.select("vec_id", "e", "nrm").toPandas()
@@ -1022,7 +1014,7 @@ def _exact_pairs_blocked(spark: SparkSession, sf_dir: str,
             row_ids = pdf_b["vec_id"].to_numpy()
             ia = np.searchsorted(ids_b, row_ids)
             sims = m[ia] @ m.T
-            bi, bj = np.nonzero(sims >= threshold)
+            bi, bj = np.nonzero(sims >= NEARDUP_THRESHOLD)
             keep = ids_b[bj] > row_ids[bi]
             yield pd.DataFrame({"a_id": row_ids[bi][keep],
                                 "b_id": ids_b[bj][keep]})
@@ -1031,8 +1023,7 @@ def _exact_pairs_blocked(spark: SparkSession, sf_dir: str,
         score, "a_id long, b_id long")
 
 
-def semantic_dedup_clusters(spark: SparkSession, sf_dir: str,
-                            threshold: float = NEARDUP_THRESHOLD) -> DataFrame:
+def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-shaped semantic dedup: cluster the embedding near-dup
     pair graph into connected components and emit the keep/drop
     manifest (canonical = min vec_id per component, full sorted
@@ -1052,7 +1043,7 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str,
     """
     from simpleetlpipeline_spark.functions.dedup import connected_components
 
-    pairs = _exact_pairs_blocked(spark, sf_dir, threshold)
+    pairs = _exact_pairs_blocked(spark, sf_dir)
     comps = connected_components(pairs)
     return (
         comps.groupBy("component")
@@ -1139,9 +1130,8 @@ ORACLE_SQL["semantic_dedup_clusters"] = f"""
 OUTLIER_TOP_K = 5
 
 
-def embedding_outliers(spark: SparkSession, sf_dir: str,
-                       top_k: int = OUTLIER_TOP_K) -> DataFrame:
-    """Per-label embedding outliers: the `top_k` vectors farthest
+def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label embedding outliers: the OUTLIER_TOP_K vectors farthest
     (squared L2) from their label's centroid — the embedding-space QA
     scan that surfaces mislabeled or corrupted vectors before they
     poison a classifier or contaminate a semantic-dedup threshold.
@@ -1192,7 +1182,7 @@ def embedding_outliers(spark: SparkSession, sf_dir: str,
         F.desc("dist2"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= OUTLIER_TOP_K)
         .select("label", "vec_id", "dist2",
                 F.col("rank").cast("int").alias("rank"))
     )
@@ -1243,13 +1233,12 @@ SEMDECON_THRESHOLD = 0.4
 SEMDECON_N_PROBES = 20
 
 
-def semantic_decontaminate(spark: SparkSession, sf_dir: str,
-                           threshold: float = SEMDECON_THRESHOLD,
-                           n_probes: int = SEMDECON_N_PROBES) -> DataFrame:
+def semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space benchmark decontamination: flag corpus vectors
     whose cosine similarity to ANY held-out probe (vec_id <
-    n_probes) reaches `threshold` — the semantic sibling of the
-    n-gram `decontaminate` (curation.py), catching paraphrased or
+    SEMDECON_N_PROBES) reaches SEMDECON_THRESHOLD — the semantic
+    sibling of the n-gram `decontaminate` (curation.py), catching
+    paraphrased or
     reformatted benchmark leakage that exact n-gram overlap misses.
     Output is the contaminated manifest: each flagged vector, its
     closest probe, and the similarity (max over probes, ties to the
@@ -1269,12 +1258,12 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str,
     """
     vecs = _vectors(spark, sf_dir)
     probes = (
-        vecs.filter(F.col("vec_id") < n_probes)
+        vecs.filter(F.col("vec_id") < SEMDECON_N_PROBES)
         .select(F.col("vec_id").alias("probe_id"),
                 F.col("e").alias("p_e"), F.col("nrm").alias("p_nrm"))
     )
     corpus = (
-        vecs.filter(F.col("vec_id") >= n_probes)
+        vecs.filter(F.col("vec_id") >= SEMDECON_N_PROBES)
         .select(F.col("vec_id"), F.col("e"), F.col("nrm"))
     )
     scored = (
@@ -1282,7 +1271,7 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str,
         .select("vec_id", "probe_id",
                 cosine(F.col("p_e"), F.col("e"),
                        F.col("p_nrm"), F.col("nrm")).alias("sim"))
-        .filter(F.col("sim") >= threshold)
+        .filter(F.col("sim") >= SEMDECON_THRESHOLD)
     )
     best = F.max(F.struct(F.col("sim"),
                           (-F.col("probe_id")).alias("neg_probe")))
@@ -1331,9 +1320,7 @@ PQ_N_PROBES = 10
 PQ_TOP_K = 10
 
 
-def pq_ann_topk(spark: SparkSession, sf_dir: str,
-                n_probes: int = PQ_N_PROBES,
-                k: int = PQ_TOP_K) -> DataFrame:
+def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN — the third classic ANN family next
     to IVF (ann_ivf_topk) and LSH (ann_lsh_topk): every corpus
     vector compresses to PQ_M one-byte codes (its nearest codebook
@@ -1356,11 +1343,11 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str,
     crossJoin(broadcast(createDataFrame(rows))) paid a 32-task
     pickled-RDD job to ship 10 driver rows plus a BroadcastExchange
     job, both pure fixed cost); top-k is a per-probe window over
-    n_probes tiny groups. The codebook and probe collects share one
-    TakeOrdered job: every vec_id < n_probes row is by construction
-    among the PQ_K lowest vec_ids (unique ids, n_probes <= PQ_K).
+    PQ_N_PROBES tiny groups. The codebook and probe collects share one
+    TakeOrdered job: every vec_id < PQ_N_PROBES row is by construction
+    among the PQ_K lowest vec_ids (unique ids, PQ_N_PROBES <= PQ_K).
     """
-    assert n_probes <= PQ_K, "probe rows must lie within the codebook rows"
+    assert PQ_N_PROBES <= PQ_K, "probe rows must lie within the codebook rows"
     head = (read_table(spark, sf_dir, "embeddings")
             .orderBy("vec_id").limit(PQ_K)
             .select("vec_id", as_double_vec(F.col("embedding")).alias("e"))
@@ -1393,7 +1380,7 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str,
 
     table_rows = []
     for p in head:
-        if p["vec_id"] >= n_probes:
+        if p["vec_id"] >= PQ_N_PROBES:
             continue
         pe = list(p["e"])
         flat = []
@@ -1410,7 +1397,7 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str,
         return driver_rows_df(
             spark, [], "a_id long, b_id long, rank int, dist9 long")
     # One parsed literal (a single py4j round-trip, like the kmeans
-    # positional-avg aggregate): n_probes structs of (a_id, 128-long
+    # positional-avg aggregate): PQ_N_PROBES structs of (a_id, 128-long
     # ADC table), exploded per corpus row — the in-row form of the
     # former broadcast crossJoin.
     tables_lit = F.expr("array(" + ",".join(
@@ -1435,7 +1422,7 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str,
     w = Window.partitionBy("a_id").orderBy(F.asc("dist9"), F.asc("b_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= PQ_TOP_K)
         .select("a_id", "b_id", F.col("rank").cast("int").alias("rank"),
                 "dist9")
     )
@@ -1497,13 +1484,9 @@ ORACLE_SQL["pq_ann_topk"] = f"""
 """
 
 
-RECALL_K = 10
-
-
-def ann_recall_report(spark: SparkSession, sf_dir: str,
-                      k: int = RECALL_K) -> DataFrame:
+def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The evaluation every ANN deployment runs before trusting an
-    index: recall@k of each approximate method (IVF, LSH; PQ ranks
+    index: recall@TOP_K of each approximate method (IVF, LSH; PQ ranks
     a disjoint corpus universe — codebook vectors excluded — so its
     recall is covered by its own planted-copy test instead)
     against the exact cosine top-k, on the same probes — one row per
@@ -1514,14 +1497,14 @@ def ann_recall_report(spark: SparkSession, sf_dir: str,
     Rows-only in the gate (the LSH band hashes are seeded
     engine-specific state); the pytest pins exact==1.0, bounds, and
     that every method returns all probes. Scale: each method's
-    top-k frame is |probes| x k; the join+agg here is trivial
+    top-k frame is |probes| x TOP_K; the join+agg here is trivial
     against the index costs themselves.
     """
     # the exact scorer is the expensive stage; persist ONE copy and
     # reuse it both as ground truth (probed once per method) and as
     # the self-check method row — without this the O(|probes| x n)
     # crossJoin pipeline re-ran from the scan ~4x for identical rows
-    exact_topk = track(ann_topk(spark, sf_dir, k=k).persist())
+    exact_topk = track(ann_topk(spark, sf_dir).persist())
     # disjoint column names on each side: the exact method row joins
     # the persisted frame with ITSELF, and same-lineage a_id == a_id
     # would resolve trivially true instead of as the probe equi-join
@@ -1529,8 +1512,8 @@ def ann_recall_report(spark: SparkSession, sf_dir: str,
                               F.col("b_id").alias("truth"))
     methods = {
         "exact": exact_topk,
-        "ivf": ann_ivf_topk(spark, sf_dir, k=k),
-        "lsh": ann_lsh_topk(spark, sf_dir, k=k),
+        "ivf": ann_ivf_topk(spark, sf_dir),
+        "lsh": ann_lsh_topk(spark, sf_dir),
     }
     reports = []
     for name, df in methods.items():
@@ -1541,7 +1524,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str,
                 .groupBy("t_aid").agg(F.count(F.lit(1)).alias("h")))
         per_probe = (exact.select("t_aid").distinct()
                      .join(hits, "t_aid", "left")
-                     .select((F.coalesce("h", F.lit(0)) / k).alias("r")))
+                     .select((F.coalesce("h", F.lit(0)) / TOP_K).alias("r")))
         reports.append(per_probe.agg(
             F.lit(name).alias("method"),
             F.count(F.lit(1)).alias("n_probes"),
@@ -1558,9 +1541,7 @@ QUERIES["ann_recall_report"] = ann_recall_report  # rows-only (LSH seeds)
 INCR_BATCH_MOD = 10  # vec_id % 10 == 0 plays the newly-appended batch
 
 
-def ann_incremental_topk(spark: SparkSession, sf_dir: str,
-                         n_probes: int = N_PROBES,
-                         k: int = TOP_K) -> DataFrame:
+def ann_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental top-k maintenance (the interactive-session top-k
     idea from the EDBT'20 incremental-similarity line): the corpus
     splits into a BASE and a newly-appended BATCH (vec_id %
@@ -1579,7 +1560,7 @@ def ann_incremental_topk(spark: SparkSession, sf_dir: str,
     self-contained and stateless under the gate)."""
     vecs = _vectors(spark, sf_dir)
     probes = (
-        vecs.filter(F.col("vec_id") < n_probes)
+        vecs.filter(F.col("vec_id") < N_PROBES)
         .select(F.col("vec_id").alias("a_id"), F.col("e").alias("a_e"),
                 F.col("nrm").alias("a_nrm"))
     )
@@ -1598,13 +1579,13 @@ def ann_incremental_topk(spark: SparkSession, sf_dir: str,
         )
 
     base_top = _topk_per_probe(
-        scored(vecs.filter(F.col("vec_id") % INCR_BATCH_MOD != 0)), k)
+        scored(vecs.filter(F.col("vec_id") % INCR_BATCH_MOD != 0)))
     batch_top = _topk_per_probe(
-        scored(vecs.filter(F.col("vec_id") % INCR_BATCH_MOD == 0)), k)
+        scored(vecs.filter(F.col("vec_id") % INCR_BATCH_MOD == 0)))
     merged = base_top.select("a_id", "b_id", "cosine_sim").unionByName(
         batch_top.select("a_id", "b_id", "cosine_sim"))
     return (
-        _topk_per_probe(merged, k)
+        _topk_per_probe(merged)
         .select("a_id", "b_id", "rank", "cosine_sim")
     )
 

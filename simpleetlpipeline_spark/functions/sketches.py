@@ -25,11 +25,10 @@ the engine per the build brief's scale mandate.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simpleetlpipeline_spark.io import read_table
+from simpleetlpipeline_spark.io import driver_rows_df, read_table
 
 #: HLL relative standard deviation; the _ok bound allows 3 sigma.
 HLL_RSD = 0.02
@@ -133,10 +132,9 @@ HH_SUPPORT = 1e-4
 HH_SUPPORT_FLOOR = 1e-4
 
 
-def heavy_hitter_users(spark: SparkSession, sf_dir: str,
-                       k: int = HH_TOP_K) -> DataFrame:
-    """Frequent-items (heavy hitters): the exact top-k users by event
-    count (hash-checked, deterministic tie-break) plus a boolean
+def heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequent-items (heavy hitters): the exact top HH_TOP_K (k)
+    users by event count (hash-checked, deterministic tie-break) plus a boolean
     asserting each appears in the freqItems misra-gries-style sketch.
 
     freqItems' no-false-negative guarantee only covers items with
@@ -160,7 +158,7 @@ def heavy_hitter_users(spark: SparkSession, sf_dir: str,
         events.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .orderBy(F.desc("n_events"), F.asc("user_id"))
-        .limit(k)
+        .limit(HH_TOP_K)
     )
     top_rows = top.collect()
     total = events.count()
@@ -177,16 +175,13 @@ def heavy_hitter_users(spark: SparkSession, sf_dir: str,
     # small collect above); returning `top` would re-run the whole
     # groupBy + TakeOrdered when the caller acts on it (round 13,
     # guide §1 — two jobs re-deriving 10 known rows). Re-enter
-    # through pandas/Arrow and check sketch membership in Python —
-    # identical rows, identical sketch_ok semantics.
-    pdf = pd.DataFrame({
-        "user_id": [r["user_id"] for r in top_rows],
-        "n_events": [r["n_events"] for r in top_rows],
-        "sketch_ok": [sketch is None or r["user_id"] in sketch
-                      for r in top_rows],
-    })
-    return spark.createDataFrame(
-        pdf, "user_id long, n_events long, sketch_ok boolean")
+    # through io.driver_rows_df and check sketch membership in
+    # Python — identical rows, identical sketch_ok semantics.
+    return driver_rows_df(
+        spark,
+        [(r["user_id"], r["n_events"],
+          sketch is None or r["user_id"] in sketch) for r in top_rows],
+        "user_id long, n_events long, sketch_ok boolean")
 
 
 QUERIES["heavy_hitter_users"] = heavy_hitter_users
@@ -205,8 +200,7 @@ HLL_SHARDS = 4
 HLL_LGK = 14  # DataSketches lgConfigK: rsd ~ 1.04/sqrt(2^14) ~ 0.8%
 
 
-def hll_shard_merge(spark: SparkSession, sf_dir: str,
-                    n_shards: int = HLL_SHARDS) -> DataFrame:
+def hll_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The property the 100 TB swap-ins in this repo lean on, proven
     in-plan: HLL sketches are mergeable — per-shard sketches unioned
     estimate the same cardinality as one pass over all the data, so
@@ -237,14 +231,14 @@ def hll_shard_merge(spark: SparkSession, sf_dir: str,
     possible.
 
     Plan: one shard-local sketch agg (map-side partials — a sketch
-    IS the partial state), one union agg of n_shards tiny binaries,
+    IS the partial state), one union agg of HLL_SHARDS tiny binaries,
     one exact distinct for the audit column. At 100 TB you keep the
     per-shard sketches as a materialized rollup and drop the exact
     pass — the booleans here are the evidence that's safe.
     """
     events = read_table(spark, sf_dir, "events").select(
         "event_type", "user_id",
-        (F.col("user_id") % n_shards).alias("shard"))
+        (F.col("user_id") % HLL_SHARDS).alias("shard"))
     per_shard = (
         events.groupBy("event_type", "shard")
         .agg(F.hll_sketch_agg("user_id", F.lit(HLL_LGK)).alias("sk")))
@@ -413,8 +407,10 @@ def _cms_pos(key, a: int, b: int):
     return ((key % _CMS_P) * a + b) % _CMS_P % _CMS_W
 
 
-def cms_user_event_counts(spark: SparkSession,
-                          sf_dir: str, k: int = 20) -> DataFrame:
+CMS_TOP_K = 20
+
+
+def cms_user_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch point queries: build a 3x1024 integer CMS
     over per-user event occurrences, then for the top-k users by
     exact count report the exact count, the CMS estimate
@@ -455,7 +451,7 @@ def cms_user_event_counts(spark: SparkSession,
     top = (ev.groupBy("u")
            .agg(F.count(F.lit(1)).cast("bigint").alias("exact_cnt"))
            .orderBy(F.desc("exact_cnt"), F.asc("u"))
-           .limit(k))
+           .limit(CMS_TOP_K))
     probe = top
     for j, (a, b) in enumerate(_CMS_HASHES):
         side = (counters.filter(F.col("j") == j)
@@ -475,7 +471,7 @@ def cms_user_event_counts(spark: SparkSession,
 
 QUERIES["cms_user_event_counts"] = cms_user_event_counts
 
-ORACLE_SQL["cms_user_event_counts"] = """
+ORACLE_SQL["cms_user_event_counts"] = f"""
     WITH ev AS (
         SELECT CAST(user_id AS BIGINT) AS u FROM events
     ), entries AS (
@@ -493,7 +489,7 @@ ORACLE_SQL["cms_user_event_counts"] = """
     ), top AS (
         SELECT u, CAST(count(*) AS BIGINT) AS exact_cnt
         FROM ev GROUP BY u
-        ORDER BY exact_cnt DESC, u LIMIT 20
+        ORDER BY exact_cnt DESC, u LIMIT {CMS_TOP_K}
     )
     SELECT t.u AS user_id, t.exact_cnt,
            least(c0.c, c1.c, c2.c) AS cms_est,

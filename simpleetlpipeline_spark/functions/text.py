@@ -354,9 +354,11 @@ ORACLE_SQL = {
 }
 
 
-def term_frequencies(spark: SparkSession, sf_dir: str,
-                     top_n: int = 100) -> DataFrame:
-    """Corpus term frequencies, top-N by count (deterministic token
+TF_TOP_N = 100
+
+
+def term_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus term frequencies, top TF_TOP_N by count (deterministic token
     tie-break). explode -> hash agg: map-side combine collapses each
     partition to its vocabulary before the shuffle, so shuffle volume
     is vocab-sized, not token-sized; the top-N plans as
@@ -372,12 +374,15 @@ def term_frequencies(spark: SparkSession, sf_dir: str,
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .orderBy(F.desc("n_occurrences"), F.asc("token"))
-        .limit(top_n)
+        .limit(TF_TOP_N)
     )
 
 
-def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    """Per-document top-k terms by TF-IDF (tf * ln(N/df)).
+TFIDF_TOP_K = 5
+
+
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document top TFIDF_TOP_K terms by TF-IDF (tf * ln(N/df)).
 
     Shape: tokenize+explode -> (doc, token) hash agg (tf) -> token
     hash agg (df, one row per distinct doc-token so a plain count is
@@ -421,7 +426,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("token"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_TOP_K)
         .select("doc_id", "token", "term_count", "doc_freq", "rank", "tfidf")
     )
 
@@ -432,20 +437,18 @@ CHUNK_CTX = 64
 CHUNK_STRIDE = 48
 
 
-def doc_chunk(spark: SparkSession, sf_dir: str,
-              ctx: int = CHUNK_CTX,
-              stride: int = CHUNK_STRIDE) -> DataFrame:
+def doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding token-window chunking manifest — the doc→chunk explode
     an embedding/RAG indexing pipeline runs before encoding.
 
-    One chunk starts every `stride` tokens (last start <= n_tokens-1),
-    each spanning min(ctx, n - start) tokens; consecutive chunks
-    overlap by ctx - stride. Emits per chunk: index, token offset,
+    One chunk starts every CHUNK_STRIDE tokens (last start <= n_tokens-1),
+    each spanning min(CHUNK_CTX, n - start) tokens; consecutive chunks
+    overlap by CHUNK_CTX - CHUNK_STRIDE. Emits per chunk: index, token offset,
     length, and an md5 of the space-joined chunk text so the oracle
     verifies the actual chunk CONTENT, not just the arithmetic.
 
     Scale: narrow generate (sequence + explode) — each task expands
-    its own rows ~n/stride-fold with no shuffle; the natural shape for
+    its own rows ~n/CHUNK_STRIDE-fold with no shuffle; the natural shape for
     chunking 100 TB of text.
     """
     from simpleetlpipeline_spark.io import fan_out
@@ -455,12 +458,13 @@ def doc_chunk(spark: SparkSession, sf_dir: str,
     n = F.size(toks).cast("long")
     base = docs.select("doc_id", toks.alias("toks"), n.alias("n_tokens"))
     idx = F.sequence(
-        F.lit(0), F.floor((F.col("n_tokens") - 1) / stride).cast("long"))
+        F.lit(0),
+        F.floor((F.col("n_tokens") - 1) / CHUNK_STRIDE).cast("long"))
     ch = base.select(
         "doc_id", "n_tokens", "toks",
         F.explode(idx).alias("chunk_idx"),
-    ).withColumn("start_tok", F.col("chunk_idx") * stride)
-    chunk_len = F.least(F.lit(ctx).cast("long"),
+    ).withColumn("start_tok", F.col("chunk_idx") * CHUNK_STRIDE)
+    chunk_len = F.least(F.lit(CHUNK_CTX).cast("long"),
                         F.col("n_tokens") - F.col("start_tok"))
     chunk_text = F.concat_ws(
         " ", F.slice("toks", F.col("start_tok").cast("int") + 1,
@@ -472,8 +476,10 @@ def doc_chunk(spark: SparkSession, sf_dir: str,
     )
 
 
-def bpe_merge_pairs(spark: SparkSession, sf_dir: str,
-                    top_n: int = 50) -> DataFrame:
+BPE_MERGE_TOP_N = 50
+
+
+def bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-candidate counting — the inner loop of BPE vocabulary
     induction: count every adjacent token pair across the corpus and
     rank the merge candidates. (Real BPE then merges the top pair and
@@ -495,7 +501,7 @@ def bpe_merge_pairs(spark: SparkSession, sf_dir: str,
         .groupBy("pair")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .orderBy(F.desc("n_occurrences"), F.asc("pair"))
-        .limit(top_n)
+        .limit(BPE_MERGE_TOP_N)
     )
 
 
@@ -528,7 +534,7 @@ ORACLE_SQL["doc_chunk"] = f"""
     FROM c
 """
 
-ORACLE_SQL["bpe_merge_pairs"] = """
+ORACLE_SQL["bpe_merge_pairs"] = f"""
     WITH t AS (
         SELECT string_split_regex(lower(trim(text)), '\\s+') AS toks
         FROM documents
@@ -542,9 +548,9 @@ ORACLE_SQL["bpe_merge_pairs"] = """
     FROM p
     GROUP BY pair
     ORDER BY n_occurrences DESC, pair ASC
-    LIMIT 50
+    LIMIT {BPE_MERGE_TOP_N}
 """
-ORACLE_SQL["tfidf_top_terms"] = """
+ORACLE_SQL["tfidf_top_terms"] = f"""
     WITH terms AS (
         SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS token
         FROM documents
@@ -569,9 +575,9 @@ ORACLE_SQL["tfidf_top_terms"] = """
                AS rank,
            tfidf
     FROM scored
-    QUALIFY rank <= 5
+    QUALIFY rank <= {TFIDF_TOP_K}
 """
-ORACLE_SQL["term_frequencies"] = """
+ORACLE_SQL["term_frequencies"] = f"""
     SELECT t AS token, count(*) AS n_occurrences
     FROM (
         SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t
@@ -580,7 +586,7 @@ ORACLE_SQL["term_frequencies"] = """
     WHERE t != ''
     GROUP BY 1
     ORDER BY n_occurrences DESC, token ASC
-    LIMIT 100
+    LIMIT {TF_TOP_N}
 """
 
 
@@ -588,8 +594,7 @@ ORACLE_SQL["term_frequencies"] = """
 VOCAB_N = 100
 
 
-def tokenize_ids(spark: SparkSession, sf_dir: str,
-                 vocab_n: int = VOCAB_N) -> DataFrame:
+def tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dictionary-encoding tokenization: map every token to its rank
     in the corpus top-N vocabulary (1-based by count desc, token asc;
     out-of-vocabulary -> 0) — the distributed shape of applying a
@@ -615,7 +620,7 @@ def tokenize_ids(spark: SparkSession, sf_dir: str,
         .filter(F.col("token") != "")
         .groupBy("token").agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("token"))
-        .limit(vocab_n)
+        .limit(VOCAB_N)
         .select("token",
                 F.row_number().over(
                     Window.orderBy(F.desc("n"), F.asc("token"))).alias("id"))
@@ -740,9 +745,7 @@ PMI_MIN_COUNT = 10
 PMI_TOP_N = 100
 
 
-def bigram_pmi(spark: SparkSession, sf_dir: str,
-               min_count: int = PMI_MIN_COUNT,
-               top_n: int = PMI_TOP_N) -> DataFrame:
+def bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining: the top-N adjacent token pairs by PMI
     lift — how much more often the pair co-occurs than its unigram
     frequencies predict. The statistical upgrade of bpe_merge_pairs
@@ -758,7 +761,7 @@ def bigram_pmi(spark: SparkSession, sf_dir: str,
     Plan: explode pairs -> hash agg with map-side combine (shuffle is
     pair-vocab-sized), two token-keyed joins against the unigram
     vocabulary (shuffle joins — at 100 TB the vocabulary outgrows a
-    broadcast), one-row totals broadcast. min_count prunes the long
+    broadcast), one-row totals broadcast. PMI_MIN_COUNT prunes the long
     tail BEFORE the joins, so the joined set is the frequent-pair
     vocabulary only. Top-N plans as TakeOrderedAndProject.
     """
@@ -772,7 +775,7 @@ def bigram_pmi(spark: SparkSession, sf_dir: str,
         .filter((F.col("tok_a") != "") & (F.col("tok_b") != ""))
         .groupBy("tok_a", "tok_b")
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .filter(F.col("n_pair") >= min_count)
+        .filter(F.col("n_pair") >= PMI_MIN_COUNT)
     )
     uni = (
         docs.select(F.explode(toks).alias("tok"))
@@ -800,7 +803,7 @@ def bigram_pmi(spark: SparkSession, sf_dir: str,
         .select("tok_a", "tok_b", "n_pair",
                 (F.floor(lift * 10000) / 10000).alias("pmi_lift"))
         .orderBy(F.desc("pmi_lift"), F.asc("tok_a"), F.asc("tok_b"))
-        .limit(top_n)
+        .limit(PMI_TOP_N)
     )
 
 
@@ -1670,8 +1673,7 @@ ORACLE_SQL["language_sampling_weights"] = f"""
 ZIPF_TOP_N = 1000
 
 
-def zipf_term_fit(spark: SparkSession, sf_dir: str,
-                  top_n: int = ZIPF_TOP_N) -> DataFrame:
+def zipf_term_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit over the corpus vocabulary: OLS of ln(count) on
     ln(rank) for the top-N terms — the slope is -alpha, the standard
     sanity statistic for natural-language corpora (alpha ~= 1 for
@@ -1705,7 +1707,7 @@ def zipf_term_fit(spark: SparkSession, sf_dir: str,
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     ranked = salted_topk(vocab, [], [F.desc("cnt"), F.asc("token")],
-                         top_n).withColumnRenamed("topk_rank", "rank")
+                         ZIPF_TOP_N).withColumnRenamed("topk_rank", "rank")
     pts = ranked.select(
         F.floor(F.log(F.col("rank").cast("double")) * 1e7)
         .cast("long").alias("lx"),
@@ -1815,8 +1817,7 @@ ORACLE_SQL["zipf_term_fit"] = f"""
 NOVELTY_N = 5
 
 
-def ngram_novelty_score(spark: SparkSession, sf_dir: str,
-                        n: int = NOVELTY_N) -> DataFrame:
+def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document novelty: the share of a doc's DISTINCT word
     5-grams that appear in no other document — the memorization /
     boilerplate screen (low novelty = the doc is assembled from
@@ -1834,7 +1835,7 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str,
     gram window count over that same stream (the tfidf_top_terms
     one-pass df trick: distinct pairs mean count(*) per gram == df)
     -> per-doc rollup. Two gram-keyed shuffles, both map-side
-    combined; short docs (< n tokens) surface with zero grams."""
+    combined; short docs (< NOVELTY_N tokens) surface with zero grams."""
     from simpleetlpipeline_spark.io import fan_out
 
     from pyspark.sql import Window
@@ -1843,7 +1844,8 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str,
     pairs = (docs
              .withColumn("__toks", tokens_col(F.col("text")))
              .select("doc_id",
-                     F.explode(word_gram_strings_expr(n)).alias("gram"))
+                     F.explode(word_gram_strings_expr(NOVELTY_N))
+                     .alias("gram"))
              .distinct())
     w_gram = Window.partitionBy("gram")
     per_doc = (pairs
@@ -1972,10 +1974,9 @@ ORACLE_SQL["token_fertility_by_source"] = f"""
 BPE_TRAIN_ROUNDS = 8
 
 
-def bpe_train_merges(spark: SparkSession, sf_dir: str,
-                     rounds: int = BPE_TRAIN_ROUNDS) -> DataFrame:
+def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative BPE vocabulary induction — the actual training loop
-    bpe_merge_pairs only runs one round of: learn `rounds` merges,
+    bpe_merge_pairs only runs one round of: learn BPE_TRAIN_ROUNDS merges,
     each round counting adjacent symbol pairs (weighted by word
     frequency), picking the argmax (ties: lexicographically smallest
     pair, so the learned vocabulary is fully deterministic), and
@@ -2031,7 +2032,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str,
 
     learned = []
     vocab = base
-    for rank in range(1, rounds + 1):
+    for rank in range(1, BPE_TRAIN_ROUNDS + 1):
         syms = F.split(F.col("s").substr(
             F.lit(2), F.length("s") - 2), g + g)
         n = F.size(syms)

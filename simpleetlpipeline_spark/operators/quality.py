@@ -178,12 +178,12 @@ def content_hash(df: DataFrame) -> str:
 K_ANONYMITY_K = 5
 
 
-def k_anonymity_report(spark, sf_dir: str, k: int = K_ANONYMITY_K):
+def k_anonymity_report(spark, sf_dir: str):
     """Privacy QA for training/analytics data: k-anonymity audit of
     the customer dimension under a generalization ladder of
     quasi-identifiers — level 'nation+segment' (the full QI set) and
     level 'nation' (segment suppressed). For each level: equivalence
-    classes, the smallest class, how many classes fall below `k`,
+    classes, the smallest class, how many classes fall below K_ANONYMITY_K,
     and how many ROWS sit in those identifiable classes — the number
     a release review actually gates on. Rows-at-risk shrinking as
     the ladder generalizes is the monotonicity the suppression
@@ -209,9 +209,10 @@ def k_anonymity_report(spark, sf_dir: str, k: int = K_ANONYMITY_K):
             F.lit(name).alias("qi_level"),
             F.count(F.lit(1)).alias("n_classes"),
             F.min("n").alias("min_class_size"),
-            F.sum(F.when(F.col("n") < k, 1).otherwise(0))
+            F.sum(F.when(F.col("n") < K_ANONYMITY_K, 1).otherwise(0))
             .alias("n_violating_classes"),
-            F.sum(F.when(F.col("n") < k, F.col("n")).otherwise(F.lit(0)))
+            F.sum(F.when(F.col("n") < K_ANONYMITY_K, F.col("n"))
+                  .otherwise(F.lit(0)))
             .alias("n_rows_at_risk"))
 
     return (level("nation+segment", ["c_nationkey", "c_mktsegment"])
@@ -219,22 +220,12 @@ def k_anonymity_report(spark, sf_dir: str, k: int = K_ANONYMITY_K):
             .orderBy("qi_level"))
 
 
-def table_stats_profile(spark, sf_dir: str, ndv_mode: str = "exact"):
+def table_stats_profile(spark, sf_dir: str):
     """ANALYZE-style column statistics for the orders table: one row
     per column with row/null counts, distinct count, and
     type-canonical min/max — the optimizer-statistics collection
     (ndv, null fraction, bounds) every cost-based planner and data
     catalog runs after a load.
-
-    ``ndv_mode`` (r7 verdict task #5 — the 100 TB swap-in is now a
-    parameter, not a comment): ``"exact"`` (default; the oracle's
-    form) plans the multi-column count(DISTINCT) as Spark's Expand —
-    5x the scan into one shuffle; ``"approx"`` swaps each NDV for
-    approx_count_distinct (HLL++, mergeable sketches, no Expand),
-    which is what you run at 100 TB where a 5x row multiplication
-    of the fact scan is real money and +-2% NDV error is free. Only
-    the exact mode is oracle-compared; the approx mode is pinned by
-    a relative-error pytest (tests/test_stats_ops.py).
 
     Canonical-exact contract (no engine repr leaks): numeric bounds
     are BIGINT (cents for the money column, epoch micros for the
@@ -254,15 +245,9 @@ def table_stats_profile(spark, sf_dir: str, ndv_mode: str = "exact"):
 
     from simpleetlpipeline_spark.io import read_table
 
-    assert ndv_mode in ("exact", "approx"), ndv_mode
     orders = read_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("long")
     micros = (F.unix_micros(F.col("o_orderdate"))).cast("long")
-
-    def ndv(col):
-        if ndv_mode == "approx":
-            return F.approx_count_distinct(col)
-        return F.count_distinct(col)
 
     profiled = (
         ("o_orderkey", F.col("o_orderkey")),
@@ -279,7 +264,7 @@ def table_stats_profile(spark, sf_dir: str, ndv_mode: str = "exact"):
     # the split form at sf1). The cheap stats run in their own
     # single-replica pass and the two one-row results cross-join.
     ndvs = orders.agg(*[
-        ndv(col).cast("long").alias(f"nd_{name}")
+        F.count_distinct(col).cast("long").alias(f"nd_{name}")
         for name, col in profiled])
     cheap = orders.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -385,14 +370,14 @@ def expectation_suite_report(spark, sf_dir: str):
 L_DIVERSITY_L = 3
 
 
-def l_diversity_report(spark, sf_dir: str, l_min: int = L_DIVERSITY_L):
+def l_diversity_report(spark, sf_dir: str):
     """Distinct l-diversity audit — the k-anonymity companion
     (k_anonymity_report, same QI ladder philosophy): k-anonymity
     bounds re-identification by class SIZE, but a class where every
     member shares one sensitive value (here c_mktsegment) leaks the
     attribute even at size >= k. Per QI level: class count, the
     minimum distinct-sensitive-value count over classes, classes
-    below `l_min`, and rows in those homogeneous classes.
+    below L_DIVERSITY_L, and rows in those homogeneous classes.
 
     QI ladder: 'nation+balance_band' (nation key + $2000 account-
     balance band over exact cents — BIGINT `div`, truncating like
@@ -424,9 +409,9 @@ def l_diversity_report(spark, sf_dir: str, l_min: int = L_DIVERSITY_L):
             F.lit(name).alias("qi_level"),
             F.count(F.lit(1)).alias("n_classes"),
             F.min("l").cast("long").alias("min_l"),
-            F.sum(F.when(F.col("l") < l_min, 1).otherwise(0))
+            F.sum(F.when(F.col("l") < L_DIVERSITY_L, 1).otherwise(0))
             .cast("long").alias("n_homogeneous_classes"),
-            F.sum(F.when(F.col("l") < l_min, F.col("n"))
+            F.sum(F.when(F.col("l") < L_DIVERSITY_L, F.col("n"))
                   .otherwise(F.lit(0)))
             .cast("long").alias("n_rows_at_risk"))
 
@@ -440,8 +425,7 @@ def l_diversity_report(spark, sf_dir: str, l_min: int = L_DIVERSITY_L):
 DP_EPSILON_MILLI = 1000
 
 
-def dp_noisy_nation_counts(spark, sf_dir: str,
-                           epsilon_milli: int = DP_EPSILON_MILLI):
+def dp_noisy_nation_counts(spark, sf_dir: str):
     """Differentially-private count release (epsilon-DP Laplace
     mechanism) over per-nation customer counts — the fourth pillar
     of the governance family (k-anonymity, l-diversity, erasure, and
@@ -479,7 +463,7 @@ def dp_noisy_nation_counts(spark, sf_dir: str,
     h = F.expr("conv(substring(md5(cast(c_nationkey as string)), 1, 8),"
                " 16, 10)").cast("long")
     u = (h.cast("double") + 0.5) / F.lit(4294967296.0)
-    b = F.lit(1000.0) / F.lit(float(epsilon_milli))
+    b = F.lit(1000.0) / F.lit(float(DP_EPSILON_MILLI))
     centered = u - 0.5
     noise = (-b * F.signum(centered)
              * F.log(1.0 - 2.0 * F.abs(centered)))

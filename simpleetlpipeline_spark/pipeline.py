@@ -60,8 +60,8 @@ LAST_RUN_METRICS: "RunMetrics | None" = None
 class ETLConfig:
     """Engine config (reference ETLConfig, main.py:21-28).
 
-    batch_size survives only as the JDBC-sink batch hint; parquet
-    writes batch per-partition naturally. parallel_tables makes the
+    The reference's batch_size has no field: parquet writes batch
+    per-partition naturally. parallel_tables makes the
     reference's declared-but-never-used parallelism (ThreadPoolExecutor
     imported main.py:12, parallel_threads=4 main.py:27, execution
     actually serial under a global lock main.py:84) real: the four
@@ -70,27 +70,18 @@ class ETLConfig:
     the scheduler interleaves across executors.
     """
     warehouse_dir: str = "warehouse"
-    batch_size: int = 1000
     retention_days: int = 365
     parallel_tables: int = 4
-    #: data_quality.minimum_quality_score (y:32) — the load-report
-    #: gate level quality_summary/pipeline_status health derives from.
+    #: data_quality.minimum_quality_score (y:32) — the average
+    #: quality level below which pipeline_status reports "degraded".
     min_quality_score: float = 80.0
-    #: data_quality.quality_thresholds (y:36-40): per-table override.
-    quality_thresholds: dict = field(default_factory=dict)
     #: business_rules.orders[valid_total_calculation].tolerance (y:81)
-    #: — the F5/F6 money tolerance; also drives the optional
-    #: total_mismatch rule in plans.analytics.validation_rules.
+    #: — read only by the optional total_mismatch rule in
+    #: plans.analytics.validation_rules. The load filters use
+    #: transforms.MONEY_TOLERANCE, which the ETL oracle replays.
     money_tolerance: float = 0.01
     #: sample_data.{customers,products,orders}.count (y:43-67).
     sample_sizes: dict = field(default_factory=dict)
-    #: database.pragma_settings (y:7-11), kept verbatim. SQLite
-    #: pragmas have no per-query Spark action — the analog conf
-    #: (AQE, shuffle partitions, UTC) is session-level
-    #: (session._RUNTIME_CONF); recorded here so a migrated config
-    #: round-trips losslessly, same documented-no-op stance as
-    #: secondary indexes (io.create_index).
-    pragmas: dict = field(default_factory=dict)
 
     @classmethod
     def from_yaml(cls, path: str, **overrides) -> "ETLConfig":
@@ -100,16 +91,17 @@ class ETLConfig:
         there is no loader behavior to match, only the keys a
         migrating user actually holds).
 
-        Key map: etl.batch_size -> batch_size, etl.parallel_threads
-        -> parallel_tables, etl.data_retention_days ->
-        retention_days, data_quality.* -> quality fields,
+        Key map: etl.parallel_threads -> parallel_tables,
+        etl.data_retention_days -> retention_days,
+        data_quality.minimum_quality_score -> min_quality_score,
         business_rules.orders[].tolerance -> money_tolerance,
-        sample_data.*.count -> sample_sizes, database.pragma_settings
-        -> pragmas. Unknown sections (logging, visualization,
-        notifications, ...) are process-level concerns with no engine
-        surface and are ignored. kwargs override parsed values
-        (warehouse_dir in particular — the YAML has no warehouse
-        concept; SQLite had one file, we have a directory).
+        sample_data.*.count -> sample_sizes. Keys with no engine
+        reader (etl.batch_size, data_quality.quality_thresholds,
+        database.pragma_settings) and process-level sections
+        (logging, visualization, notifications, ...) are ignored.
+        kwargs override parsed values (warehouse_dir in particular —
+        the YAML has no warehouse concept; SQLite had one file, we
+        have a directory).
         """
         import yaml
 
@@ -128,20 +120,14 @@ class ETLConfig:
             if isinstance(spec, dict) and "count" in spec
         }
         kwargs = dict(
-            batch_size=int(etl.get("batch_size", cls.batch_size)),
             parallel_tables=int(etl.get("parallel_threads",
                                         cls.parallel_tables)),
             retention_days=int(etl.get("data_retention_days",
                                        cls.retention_days)),
             min_quality_score=float(dq.get("minimum_quality_score",
                                            cls.min_quality_score)),
-            quality_thresholds={
-                k: float(v)
-                for k, v in (dq.get("quality_thresholds") or {}).items()},
             money_tolerance=tolerance,
             sample_sizes=sample_sizes,
-            pragmas=dict((raw.get("database") or {})
-                         .get("pragma_settings") or {}),
         )
         kwargs.update(overrides)
         return cls(**kwargs)
@@ -526,8 +512,9 @@ def pipeline_status(spark: SparkSession, config: ETLConfig) -> dict:
     latest = [r.asDict() for r in
               meta.orderBy(F.desc("etl_timestamp")).limit(10).collect()]
     quality = agg["avg_quality"]
-    health = ("healthy" if quality is not None and quality >= 80.0
-              else "degraded" if quality is not None else "idle")
+    health = ("idle" if quality is None
+              else "healthy" if quality >= config.min_quality_score
+              else "degraded")
     # Optimizer stats, if analyze_tables has registered + analyzed the
     # warehouse tables in this session (cheap catalog lookups only —
     # no jobs, so the dashboard stays instant).

@@ -48,9 +48,11 @@ from simpleetlpipeline_spark.operators.dates import (
 from simpleetlpipeline_spark.plans.analytics import COMPLETED
 
 
-def customer_order_ranks(spark: SparkSession, sf_dir: str,
-                         k: int = 3) -> DataFrame:
-    """Top-k orders per customer by value: row_number() over a
+ORDER_RANK_K = 3
+
+
+def customer_order_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-ORDER_RANK_K orders per customer by value: row_number() over a
     per-customer window — the grouped generalization of the
     reference's global ORDER BY ... LIMIT top-k (main.py:672-685)."""
     orders = read_table(spark, sf_dir, "orders").select(
@@ -59,7 +61,7 @@ def customer_order_ranks(spark: SparkSession, sf_dir: str,
         F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         orders.withColumn("order_rank", F.row_number().over(w))
-        .filter(F.col("order_rank") <= k)
+        .filter(F.col("order_rank") <= ORDER_RANK_K)
         .select("o_custkey", "o_orderkey", "order_rank", "o_totalprice")
     )
 
@@ -191,15 +193,14 @@ def sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONVERSION_WINDOW_SECS = 4 * 3600  # sparse test events: ~1/user/10h
 
 
-def events_conversion_window(spark: SparkSession, sf_dir: str,
-                             window_secs: int = CONVERSION_WINDOW_SECS) -> DataFrame:
+def events_conversion_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join: (view, purchase) pairs for the same user with
-    0 < purchase_ts - view_ts <= window_secs.
+    0 < purchase_ts - view_ts <= CONVERSION_WINDOW_SECS.
 
     A naive user-equi-join computes every (view, purchase) pair per
     user before filtering — quadratic in per-user activity, and one
     hot user melts a reducer. This version blocks by time bucket of
-    width window_secs: a qualifying pair's purchase lands in the
+    width CONVERSION_WINDOW_SECS: a qualifying pair's purchase lands in the
     view's bucket or the next one, so each view joins exactly two
     (user, bucket) keys. Shuffle volume is 2x events, per-key groups
     are bounded by per-bucket activity, and the same blocking works
@@ -211,19 +212,19 @@ def events_conversion_window(spark: SparkSession, sf_dir: str,
     views = events.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_event_id"),
         "user_id", F.col("ts").alias("view_ts"),
-        F.floor(F.unix_micros("ts") / (window_secs * 1_000_000))
+        F.floor(F.unix_micros("ts") / (CONVERSION_WINDOW_SECS * 1_000_000))
         .alias("bucket"))
     views = views.withColumn(
         "bucket", F.explode(F.array(F.col("bucket"), F.col("bucket") + 1)))
     purchases = events.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_event_id"),
         "user_id", F.col("ts").alias("purchase_ts"),
-        F.floor(F.unix_micros("ts") / (window_secs * 1_000_000))
+        F.floor(F.unix_micros("ts") / (CONVERSION_WINDOW_SECS * 1_000_000))
         .alias("bucket"))
     delta = F.unix_micros("purchase_ts") - F.unix_micros("view_ts")
     return (
         views.join(purchases, ["user_id", "bucket"])
-        .filter((delta > 0) & (delta <= window_secs * 1_000_000))
+        .filter((delta > 0) & (delta <= CONVERSION_WINDOW_SECS * 1_000_000))
         .select("user_id", "view_event_id", "purchase_event_id",
                 delta.alias("micros_to_purchase"))
         .dropDuplicates(["view_event_id", "purchase_event_id"])
@@ -245,8 +246,10 @@ def repeat_status_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def revenue_by_nation(spark: SparkSession, sf_dir: str,
-                      region: str = "EUROPE") -> DataFrame:
+NATION_REGION = "EUROPE"
+
+
+def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-shaped 6-table star: revenue from fulfilled orders
     where the supplier is in the customer's nation, by nation, for
     one region — the multi-dimension join the reference never needed
@@ -262,7 +265,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str,
     nations = (
         read_table(spark, sf_dir, "nation")
         .join(F.broadcast(read_table(spark, sf_dir, "region")
-                          .filter(F.col("r_name") == region)),
+                          .filter(F.col("r_name") == NATION_REGION)),
               F.col("n_regionkey") == F.col("r_regionkey"))
         .select("n_nationkey", "n_name")
     )
@@ -337,7 +340,7 @@ ORACLE_SQL = {
         FROM events
         GROUP BY 1
     """,
-    "revenue_by_nation": """
+    "revenue_by_nation": f"""
         SELECT n.n_name,
                round(sum(l.l_extendedprice * (1 - l.l_discount)), 2)
                    AS revenue,
@@ -349,7 +352,7 @@ ORACLE_SQL = {
                        AND c.c_nationkey = s.s_nationkey
         JOIN nation n   ON s.s_nationkey = n.n_nationkey
         JOIN region r   ON n.n_regionkey = r.r_regionkey
-        WHERE r.r_name = 'EUROPE' AND o.o_orderstatus = 'F'
+        WHERE r.r_name = '{NATION_REGION}' AND o.o_orderstatus = 'F'
         GROUP BY n.n_name
         ORDER BY revenue DESC, n_name ASC
     """,
@@ -386,7 +389,7 @@ ORACLE_SQL = {
         FROM orders
         GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
     """,
-    "customer_order_ranks": """
+    "customer_order_ranks": f"""
         SELECT o_custkey, o_orderkey,
                CAST(row_number() OVER (
                    PARTITION BY o_custkey
@@ -394,7 +397,7 @@ ORACLE_SQL = {
                    AS order_rank,
                o_totalprice
         FROM orders
-        QUALIFY order_rank <= 3
+        QUALIFY order_rank <= {ORDER_RANK_K}
     """,
     "monthly_revenue_running": """
         WITH m AS (
@@ -433,8 +436,10 @@ ORACLE_SQL = {
 }
 
 
-def events_anomaly(spark: SparkSession, sf_dir: str,
-                   z_threshold: float = 3.0) -> DataFrame:
+ANOMALY_Z = 3.0
+
+
+def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type z-score outlier detection over event values — the
     telemetry anomaly scan a monitoring pipeline runs after rollups.
 
@@ -454,7 +459,7 @@ def events_anomaly(spark: SparkSession, sf_dir: str,
     z = (F.col("value") - F.col("__mean")) / F.col("__std")
     return (
         events.join(F.broadcast(stats), "event_type")
-        .filter(F.abs(z) >= z_threshold)
+        .filter(F.abs(z) >= ANOMALY_Z)
         .select("event_id", "event_type", "value",
                 (F.floor(z * 10000) / 10000).alias("z_score"))
     )
@@ -462,7 +467,7 @@ def events_anomaly(spark: SparkSession, sf_dir: str,
 
 QUERIES["events_anomaly"] = events_anomaly
 
-ORACLE_SQL["events_anomaly"] = """
+ORACLE_SQL["events_anomaly"] = f"""
     WITH s AS (
         SELECT event_type,
                avg(value) AS m,
@@ -472,15 +477,17 @@ ORACLE_SQL["events_anomaly"] = """
     SELECT e.event_id, e.event_type, e.value,
            floor((e.value - s.m) / s.sd * 10000) / 10000 AS z_score
     FROM events e JOIN s USING (event_type)
-    WHERE abs((e.value - s.m) / s.sd) >= 3.0
+    WHERE abs((e.value - s.m) / s.sd) >= {ANOMALY_Z}
 """
 
 
-def fuzzy_name_neighbors(spark: SparkSession, sf_dir: str,
-                         max_lev: int = 2) -> DataFrame:
+FUZZY_MAX_LEV = 2
+
+
+def fuzzy_name_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy string-match self-join over part names: for every
     part, how many other parts sit within Levenshtein distance
-    `max_lev`, and the deterministic nearest one (min distance, ties
+    FUZZY_MAX_LEV, and the deterministic nearest one (min distance, ties
     to the lower key) — the entity-resolution shape (candidate
     blocking -> cheap prefilter -> exact edit distance -> per-entity
     aggregate).
@@ -494,8 +501,8 @@ def fuzzy_name_neighbors(spark: SparkSession, sf_dir: str,
       = cnt-1, nearest = the name's min id (or 2nd-min when I AM the
       min). Different names have lev >= 1, so lev-0 always wins.
     - other-name neighbors: for a qualifying name pair (same block,
-      |len diff| <= max_lev, lev <= max_lev) EVERY row of the other
-      name is a neighbor at the same lev -> count = sum(cnt), and
+      |len diff| <= FUZZY_MAX_LEV, lev <= FUZZY_MAX_LEV) EVERY row of
+      the other name is a neighbor at the same lev -> count = sum(cnt), and
       the (lev, id)-min over its rows is (lev, its min id).
 
     The round-5 form self-joined ROWS within blocks: with a small
@@ -535,9 +542,9 @@ def fuzzy_name_neighbors(spark: SparkSession, sf_dir: str,
     npairs = (
         a.join(b, "blk")
         .filter((F.col("a_name") != F.col("b_name"))
-                & (F.abs(F.col("a_ln") - F.col("b_ln")) <= max_lev))
+                & (F.abs(F.col("a_ln") - F.col("b_ln")) <= FUZZY_MAX_LEV))
         .withColumn("lev", F.levenshtein("a_name", "b_name"))
-        .filter(F.col("lev") <= max_lev)
+        .filter(F.col("lev") <= FUZZY_MAX_LEV)
     )
     other = npairs.groupBy("a_name").agg(
         F.sum("b_cnt").alias("n_other"),
@@ -576,7 +583,7 @@ QUERIES["fuzzy_name_neighbors"] = fuzzy_name_neighbors
 # quadratic-oracle skips). Parity with the round-5 row-level
 # quadratic form is pinned by tests/test_plans.py::
 # test_fuzzy_name_level_equals_row_level.
-ORACLE_SQL["fuzzy_name_neighbors"] = """
+ORACLE_SQL["fuzzy_name_neighbors"] = f"""
     WITH p AS (
         SELECT p_partkey, p_name,
                string_split(p_name, ' ')[1] AS blk,
@@ -597,8 +604,8 @@ ORACLE_SQL["fuzzy_name_neighbors"] = """
                b.cnt AS b_cnt, b.min_id AS b_min
         FROM names a JOIN names b
           ON a.blk = b.blk AND a.p_name != b.p_name
-        WHERE abs(a.ln - b.ln) <= 2
-          AND levenshtein(a.p_name, b.p_name) <= 2
+        WHERE abs(a.ln - b.ln) <= {FUZZY_MAX_LEV}
+          AND levenshtein(a.p_name, b.p_name) <= {FUZZY_MAX_LEV}
     ), other AS (
         SELECT a_name, sum(b_cnt) AS n_other,
                min(struct_pack(lev := lev, b_id := b_min)) AS best
@@ -626,8 +633,7 @@ ORACLE_SQL["fuzzy_name_neighbors"] = """
 HIST_BUCKETS = 20
 
 
-def events_value_histogram(spark: SparkSession, sf_dir: str,
-                           n_buckets: int = HIST_BUCKETS) -> DataFrame:
+def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equal-width histogram of event values per event type — the
     distribution profile behind any monitoring chart or data-quality
     drift check.
@@ -644,13 +650,13 @@ def events_value_histogram(spark: SparkSession, sf_dir: str,
     events = read_table(spark, sf_dir, "events")
     rng = (events.groupBy("event_type")
            .agg(F.min("value").alias("__lo"), F.max("value").alias("__hi")))
-    width = (F.col("__hi") - F.col("__lo")) / n_buckets
+    width = (F.col("__hi") - F.col("__lo")) / HIST_BUCKETS
     # Constant-valued type: width would be 0 and 0.0/0.0 is
     # engine-dependent (NaN vs NULL); a guarded width puts every row
     # in bucket 0 in both engines by construction (v - lo = 0).
     safe_width = F.when(width == 0, F.lit(1.0)).otherwise(width)
     bucket = F.least(
-        F.lit(n_buckets - 1),
+        F.lit(HIST_BUCKETS - 1),
         F.floor((F.col("value") - F.col("__lo")) / safe_width).cast("int"))
     return (
         events.join(F.broadcast(rng), "event_type")
@@ -1094,8 +1100,7 @@ def _shift_sql(expr: str, n: int) -> str:
     return f"CAST(floor({expr} / {1 << -n}) AS BIGINT)"
 
 
-def zorder_layout_manifest(spark: SparkSession, sf_dir: str,
-                           n_files: int = ZORDER_FILES) -> DataFrame:
+def zorder_layout_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton-curve) layout plan for the events table — the
     data-layout job behind min/max data skipping: interleave the
     bits of (user_id, hour) so rows close in BOTH dimensions land in
@@ -1149,7 +1154,7 @@ def zorder_layout_manifest(spark: SparkSession, sf_dir: str,
     return (
         ranked
         .withColumn("file_id",
-                    ntile_from_rank(F.col("__r"), F.col("__n"), n_files))
+                    ntile_from_rank(F.col("__r"), F.col("__n"), ZORDER_FILES))
         .groupBy("file_id")
         .agg(F.count(F.lit(1)).alias("n_rows"),
              F.min("z").alias("z_min"), F.max("z").alias("z_max"),
@@ -1234,13 +1239,12 @@ ORACLE_SQL["events_unpivot_daily"] = f"""
 RFM_BINS = 5
 
 
-def customer_rfm_segments(spark: SparkSession, sf_dir: str,
-                          n_bins: int = RFM_BINS) -> DataFrame:
+def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation — the classic customer scoring every CRM
     migration asks for on week one: per customer, Recency (days
     since last order, anchored at the corpus max date for
     determinism), Frequency (order count) and Monetary (exact
-    decimal spend), each ntiled into `n_bins` quintiles with
+    decimal spend), each ntiled into RFM_BINS quintiles with
     deterministic tie-breaks, plus the composite RFM code.
 
     One pass over orders (map-side partials to |customers| rows) —
@@ -1291,12 +1295,12 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str,
     nn = F.col("__nn")
     return ranked.select(
         "custkey", "recency_days", "frequency", "monetary",
-        ntile_from_rank(F.col("__rk_r"), nn, n_bins).alias("r_score"),
-        ntile_from_rank(F.col("__rk_f"), nn, n_bins).alias("f_score"),
-        ntile_from_rank(F.col("__rk_m"), nn, n_bins).alias("m_score"),
-        (ntile_from_rank(F.col("__rk_r"), nn, n_bins) * 100
-         + ntile_from_rank(F.col("__rk_f"), nn, n_bins) * 10
-         + ntile_from_rank(F.col("__rk_m"), nn, n_bins))
+        ntile_from_rank(F.col("__rk_r"), nn, RFM_BINS).alias("r_score"),
+        ntile_from_rank(F.col("__rk_f"), nn, RFM_BINS).alias("f_score"),
+        ntile_from_rank(F.col("__rk_m"), nn, RFM_BINS).alias("m_score"),
+        (ntile_from_rank(F.col("__rk_r"), nn, RFM_BINS) * 100
+         + ntile_from_rank(F.col("__rk_f"), nn, RFM_BINS) * 10
+         + ntile_from_rank(F.col("__rk_m"), nn, RFM_BINS))
         .alias("rfm_code"))
 
 
@@ -1642,8 +1646,7 @@ ROLLING_DAYS = 7
 ROLLING_EPOCH = "1995-01-01"
 
 
-def rolling_7d_revenue(spark: SparkSession, sf_dir: str,
-                       days: int = ROLLING_DAYS) -> DataFrame:
+def rolling_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day revenue per order status — the RANGE-frame
     window (rangeBetween over an integer day number, the one frame
     type no other catalog entry exercises): each day's trailing
@@ -1672,7 +1675,7 @@ def rolling_7d_revenue(spark: SparkSession, sf_dir: str,
                     F.datediff(F.col("day"), F.lit(ROLLING_EPOCH)))
     )
     w = (Window.partitionBy("o_orderstatus").orderBy("day_num")
-         .rangeBetween(-(days - 1), 0))
+         .rangeBetween(-(ROLLING_DAYS - 1), 0))
     return (
         daily.select(
             "o_orderstatus", "day",
@@ -1710,8 +1713,7 @@ ORACLE_SQL["rolling_7d_revenue"] = f"""
 EWMA_ALPHA = 0.3
 
 
-def user_value_ewma(spark: SparkSession, sf_dir: str,
-                    alpha: float = EWMA_ALPHA) -> DataFrame:
+def user_value_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponentially-weighted moving average of event value.
     The recursion y_t = a*x_t + (1-a)*y_{t-1} has the closed form
     y_n = (1-a)^(n-1)*x_1 + Σ_{t=2..n} a*(1-a)^(n-t)*x_t, evaluated
@@ -1760,9 +1762,9 @@ def user_value_ewma(spark: SparkSession, sf_dir: str,
         F.row_number().over(wd).alias("rn"),
         # null ⟺ no earlier event ⟺ this is the series' FIRST row
         F.lead("value", 1).over(wd).alias("earlier"))
-    decay = F.pow(F.lit(1.0 - alpha), F.col("rn") - F.lit(1))
+    decay = F.pow(F.lit(1.0 - EWMA_ALPHA), F.col("rn") - F.lit(1))
     weight = F.when(F.col("earlier").isNull(), decay) \
-        .otherwise(F.lit(alpha) * decay)
+        .otherwise(F.lit(EWMA_ALPHA) * decay)
     agg = ranked.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.max(F.when(F.col("rn") == 1, F.col("value")))
@@ -1803,11 +1805,10 @@ ORACLE_SQL["user_value_ewma"] = f"""
 TOPK_PER_USER = 3
 
 
-def top_events_per_user(spark: SparkSession, sf_dir: str,
-                        k: int = TOPK_PER_USER) -> DataFrame:
+def top_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k highest-value events per user — computed with the
     skew-proof two-phase salted window (operators.aggregates.
-    salted_topk: rank within (user, salt), keep k, re-rank the
+    salted_topk: rank within (user, salt), keep TOPK_PER_USER, re-rank the
     bounded survivors) and gate-PROVED equivalent to the single
     global window the DuckDB oracle runs. The ordering is total
     (value DESC, event_id ASC tiebreaker), which is exactly the
@@ -1821,7 +1822,7 @@ def top_events_per_user(spark: SparkSession, sf_dir: str,
         "user_id", "event_id", "event_type", "value")
     out = salted_topk(
         ev, ["user_id"],
-        [F.col("value").desc(), F.col("event_id").asc()], k)
+        [F.col("value").desc(), F.col("event_id").asc()], TOPK_PER_USER)
     return (out.select("user_id", "topk_rank", "event_id",
                        "event_type", "value")
             .orderBy("user_id", "topk_rank"))
@@ -1847,8 +1848,7 @@ ORACLE_SQL["top_events_per_user"] = f"""
 PATTERN_CONVERSION = "v[^p]*p"
 
 
-def event_pattern_conversions(spark: SparkSession, sf_dir: str,
-                              pattern: str = PATTERN_CONVERSION) -> DataFrame:
+def event_pattern_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence-pattern matching over per-user event streams — the
     MATCH_RECOGNIZE capability Spark SQL lacks, compiled to a regex
     over the user's event-initial string (the five event types have
@@ -1877,7 +1877,7 @@ def event_pattern_conversions(spark: SparkSession, sf_dir: str,
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), seq.alias("__seq"))
         .select("user_id", "n_events",
-                F.regexp_count(F.col("__seq"), F.lit(pattern))
+                F.regexp_count(F.col("__seq"), F.lit(PATTERN_CONVERSION))
                  .cast("bigint").alias("n_conversions"),
                 F.md5(F.col("__seq")).alias("seq_md5"))
         .orderBy("user_id")
@@ -4054,17 +4054,17 @@ ORACLE_SQL["mann_whitney_u_test"] = """
 EQUIDEPTH_B = 10
 
 
-def order_value_equidepth(spark: SparkSession, sf_dir: str,
-                          b: int = EQUIDEPTH_B) -> DataFrame:
-    """Equi-depth (equal-frequency) histogram of order values: b
-    buckets each holding ~N/b orders, with per-bucket row count,
-    value bounds and revenue mass — the optimizer-statistics /
-    percentile-band view that an equi-WIDTH histogram
+def order_value_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equi-depth (equal-frequency) histogram of order values:
+    EQUIDEPTH_B buckets each holding ~N/EQUIDEPTH_B orders, with
+    per-bucket row count, value bounds and revenue mass — the
+    optimizer-statistics / percentile-band view that an equi-WIDTH
+    histogram
     (events_value_histogram) gets wrong on skewed money data, where
     one wide bin swallows the tail.
 
     Bucket rule: a distinct value belongs wholly to the bucket of
-    its first row — bucket = cum_rows_before * b div N — the
+    its first row — bucket = cum_rows_before * EQUIDEPTH_B div N — the
     classic non-splitting equi-depth: a heavy distinct value may
     overfill its bucket (that imbalance is itself the signal
     optimizers record as the 'high-frequency value' list).
@@ -4076,7 +4076,7 @@ def order_value_equidepth(spark: SparkSession, sf_dir: str,
 
     Shape: one orders scan -> hash agg to the distinct-cents spine
     (domain-bounded, map-side combined) -> one O(spine) ordered
-    window -> b-row rollup. The fact table never sorts globally —
+    window -> EQUIDEPTH_B-row rollup. The fact table never sorts globally —
     the window runs on the spine, which is why this scales where
     ntile() over raw rows (a single-partition global sort) dies."""
     vals = read_table(spark, sf_dir, "orders").select(
@@ -4091,7 +4091,8 @@ def order_value_equidepth(spark: SparkSession, sf_dir: str,
     total = vals.agg(F.count(F.lit(1)).cast("long").alias("n"))
     bucketed = (cum.crossJoin(F.broadcast(total))
                 .select("v", "cnt",
-                        F.expr(f"cumb * {b}L div n").alias("bucket")))
+                        F.expr(f"cumb * {EQUIDEPTH_B}L div n")
+                        .alias("bucket")))
     return (bucketed.groupBy("bucket")
             .agg(F.sum("cnt").cast("bigint").alias("n_orders"),
                  F.min("v").alias("lo_cents"),
@@ -4262,11 +4263,10 @@ ORACLE_SQL["daily_revenue_stl"] = """
 MAD_FENCE_K = 5
 
 
-def robust_outlier_mad(spark: SparkSession, sf_dir: str,
-                       fence_k: int = MAD_FENCE_K) -> DataFrame:
+def robust_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type robust outlier report: median and MAD (median
     absolute deviation) of the value distribution, and how many
-    events sit beyond ``fence_k`` MADs from the median — the robust
+    events sit beyond MAD_FENCE_K MADs from the median — the robust
     z-score screen (Iglewicz-Hoaglin) that mean/stddev anomaly
     detection gets wrong on heavy-tailed money data, where the
     outliers inflate the very sigma meant to catch them.
@@ -4321,7 +4321,7 @@ def robust_outlier_mad(spark: SparkSession, sf_dir: str,
                    F.min("mad").cast("long").alias("mad_cents"),
                    F.sum(F.when(
                        F.abs(F.col("v") - F.col("med"))
-                       > fence_k * F.col("mad"),
+                       > MAD_FENCE_K * F.col("mad"),
                        F.col("cnt")).otherwise(0))
                    .cast("long").alias("n_outliers")))
     return (fenced.select(
@@ -4385,8 +4385,7 @@ ORACLE_SQL["robust_outlier_mad"] = f"""
 STREAK_TOP_N = 20
 
 
-def user_activity_streaks(spark: SparkSession, sf_dir: str,
-                          top_n: int = STREAK_TOP_N) -> DataFrame:
+def user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands: each user's LONGEST run of consecutive
     active days, reporting the top-N streaks — the engagement-streak
     leaderboard (and the canonical islands shape: consecutive-day
@@ -4427,7 +4426,8 @@ def user_activity_streaks(spark: SparkSession, sf_dir: str,
                     F.col("b.start_dayn").alias("streak_start_dayn"),
                     "n_streaks", "n_active_days"))
     return (salted_topk(best, [],
-                        [F.desc("max_streak"), F.asc("user_id")], top_n)
+                        [F.desc("max_streak"), F.asc("user_id")],
+                        STREAK_TOP_N)
             .withColumnRenamed("topk_rank", "rank")
             .select("rank", "user_id", "max_streak",
                     "streak_start_dayn", "n_streaks", "n_active_days"))
@@ -4665,9 +4665,7 @@ SEQ_ENTROPY_MIN_N = 20
 SEQ_ENTROPY_TOP_N = 20
 
 
-def user_sequence_entropy(spark: SparkSession, sf_dir: str,
-                          min_n: int = SEQ_ENTROPY_MIN_N,
-                          top_n: int = SEQ_ENTROPY_TOP_N) -> DataFrame:
+def user_sequence_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Behavioral predictability: the Shannon entropy of each user's
     event-type TRANSITION distribution (consecutive event pairs),
     reporting the most-predictable users — near-zero entropy at high
@@ -4707,25 +4705,25 @@ def user_sequence_entropy(spark: SparkSession, sf_dir: str,
     per_user = (terms.groupBy("user_id")
                 .agg(F.min("n").cast("long").alias("n_transitions"),
                      F.sum("t_lp7").alias("__s"))
-                .filter(F.col("n_transitions") >= min_n)
+                .filter(F.col("n_transitions") >= SEQ_ENTROPY_MIN_N)
                 .select("user_id", "n_transitions",
                         F.expr("-__s div n_transitions")
                         .alias("entropy_lp7")))
     return (salted_topk(per_user, [],
-                        [F.asc("entropy_lp7"), F.asc("user_id")], top_n)
+                        [F.asc("entropy_lp7"), F.asc("user_id")],
+                        SEQ_ENTROPY_TOP_N)
             .withColumnRenamed("topk_rank", "rank")
             .select("rank", "user_id", "n_transitions", "entropy_lp7"))
 
 
 QUERIES["user_sequence_entropy"] = user_sequence_entropy
 
-def user_sequence_entropy_oracle(min_n: int = SEQ_ENTROPY_MIN_N,
-                                 top_n: int = SEQ_ENTROPY_TOP_N) -> str:
-    """Parameterized oracle twin over the SAME params as the Spark
-    function, so non-default (min_n, top_n) calls remain parity-
-    checkable (tests/test_functions.py::
-    test_parameterized_oracle_parity); ORACLE_SQL pins the shared
-    module defaults."""
+def user_sequence_entropy_oracle() -> str:
+    """Oracle twin builder over the module constants the Spark
+    function reads (SEQ_ENTROPY_MIN_N, SEQ_ENTROPY_TOP_N), read at
+    call time, so patched values remain parity-checkable
+    (tests/test_functions.py::test_parameterized_oracle_parity);
+    ORACLE_SQL pins the import-time values."""
     return f"""
     WITH trans AS (
         SELECT user_id,
@@ -4751,14 +4749,14 @@ def user_sequence_entropy_oracle(min_n: int = SEQ_ENTROPY_MIN_N,
                                    * 1e7) AS BIGINT)) AS BIGINT)
                    AS s
         FROM scored GROUP BY 1
-        HAVING CAST(min(n) AS BIGINT) >= {min_n}
+        HAVING CAST(min(n) AS BIGINT) >= {SEQ_ENTROPY_MIN_N}
     )
     SELECT CAST(row_number() OVER (ORDER BY (-s) // n_transitions ASC,
                                    user_id ASC) AS INT) AS rank,
            user_id, n_transitions,
            (-s) // n_transitions AS entropy_lp7
     FROM per_user
-    QUALIFY rank <= {top_n}
+    QUALIFY rank <= {SEQ_ENTROPY_TOP_N}
     ORDER BY rank
 """
 

@@ -102,10 +102,9 @@ def promo_revenue_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 LATE_DAYS = 60
 
 
-def late_ship_orders(spark: SparkSession, sf_dir: str,
-                     late_days: int = LATE_DAYS) -> DataFrame:
+def late_ship_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4-shaped EXISTS: orders having at least one lineitem
-    shipped more than `late_days` days after the order date, counted
+    shipped more than LATE_DAYS days after the order date, counted
     per order priority — the fulfillment-SLA breach report. The
     EXISTS is a LEFT SEMI join (first match wins, no duplication of
     the probe side), the join shape the reference never used."""
@@ -118,7 +117,7 @@ def late_ship_orders(spark: SparkSession, sf_dir: str,
         orders.join(
             lineitem,
             (F.col("o_orderkey") == F.col("l_orderkey"))
-            & (lateness > late_days),
+            & (lateness > LATE_DAYS),
             "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_late_orders"))
@@ -129,10 +128,9 @@ def late_ship_orders(spark: SparkSession, sf_dir: str,
 LARGE_VOLUME_QTY = 250.0
 
 
-def large_volume_orders(spark: SparkSession, sf_dir: str,
-                        min_qty: float = LARGE_VOLUME_QTY) -> DataFrame:
+def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18-shaped agg-then-join: orders whose total lineitem
-    quantity exceeds `min_qty`, with order attributes attached.
+    quantity exceeds LARGE_VOLUME_QTY, with order attributes attached.
     The aggregate runs BEFORE the join so only the ~1% survivor set
     is joined back — the canonical big-fact pattern."""
     orders = read_table(spark, sf_dir, "orders").select(
@@ -142,7 +140,7 @@ def large_volume_orders(spark: SparkSession, sf_dir: str,
         .select("l_orderkey", "l_quantity")
         .groupBy("l_orderkey")
         .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
-        .filter(F.col("total_qty") > min_qty)
+        .filter(F.col("total_qty") > LARGE_VOLUME_QTY)
     )
     return (
         orders.join(big, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -162,9 +160,7 @@ COPURCHASE_TOP_N = 100
 BASKET_CAP = 64
 
 
-def copurchase_pairs(spark: SparkSession, sf_dir: str,
-                     top_n: int = COPURCHASE_TOP_N,
-                     basket_cap: int = BASKET_CAP) -> DataFrame:
+def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket pair mining: the top-N part pairs most often
     bought in the same order.
 
@@ -180,7 +176,7 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str,
         .select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.slice(F.sort_array(F.collect_set("l_partkey")),
-                     1, basket_cap).alias("parts"))
+                     1, BASKET_CAP).alias("parts"))
         .filter(F.size("parts") >= 2)
     )
     pairs = F.flatten(F.transform(
@@ -197,7 +193,7 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str,
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .orderBy(F.desc("n_orders"), F.asc("part_a"), F.asc("part_b"))
-        .limit(top_n)
+        .limit(COPURCHASE_TOP_N)
     )
 
 
@@ -860,15 +856,12 @@ _PR_UNIT = 10**12  # rank fixed-point denominator
 _PR_DAMP_NUM = 85  # damping 0.85 as an integer percentage
 
 
-def copurchase_pagerank(spark: SparkSession, sf_dir: str,
-                        iters: int = PAGERANK_ITERS,
-                        min_orders: int = PAGERANK_MIN_ORDERS,
-                        top_n: int = PAGERANK_TOP_N) -> DataFrame:
+def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative PageRank over the copurchase graph: which parts sit
     at the center of the bought-together network (the 'hub product'
     ranking a recommender or assortment planner starts from). The
     graph is the undirected part-pair graph of orders (pairs bought
-    together in >= `min_orders` orders), and rank runs `iters`
+    together in >= PAGERANK_MIN_ORDERS orders), and rank runs PAGERANK_ITERS
     synchronous power iterations with damping 0.85.
 
     This is the repo's worked example of an ITERATIVE distributed
@@ -876,7 +869,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str,
     one destination-keyed aggregate, the edge/degree tables are
     computed once and cached (released by the caller's cache
     registry), and the loop unrolls into a lineage of bounded depth
-    (iters is small and fixed — for hundreds of iterations you'd
+    (PAGERANK_ITERS is small and fixed — for hundreds of iterations you'd
     checkpoint every ~10 to cut lineage).
 
     Exact-integer contract (fold-order-proof, fully oracle-checkable
@@ -921,7 +914,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str,
              .select("p.pa", "p.pb")
              .groupBy("pa", "pb")
              .agg(F.count(F.lit(1)).alias("n"))
-             .filter(F.col("n") >= min_orders))
+             .filter(F.col("n") >= PAGERANK_MIN_ORDERS))
     edges = track(
         pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
         .unionAll(pairs.select(F.col("pb").alias("src"),
@@ -934,7 +927,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str,
 
     ranks = deg.select(F.col("src").alias("node"),
                        F.lit(base).cast("long").alias("r"))
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         contribs = (
             edges
             .join(ranks, edges["src"] == ranks["node"])
@@ -956,7 +949,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str,
                 F.col("r").alias("rank12"),
                 F.col("d").alias("degree"))
         .orderBy(F.desc("rank12"), F.asc("partkey"))
-        .limit(top_n)
+        .limit(PAGERANK_TOP_N)
     )
 
 
@@ -1358,9 +1351,7 @@ CF_MIN_ORDERS = 3
 CF_TOP_N = 50
 
 
-def item_cooccurrence_cf(spark: SparkSession, sf_dir: str,
-                         min_orders: int = CF_MIN_ORDERS,
-                         top_n: int = CF_TOP_N) -> DataFrame:
+def item_cooccurrence_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item collaborative filtering over the basket graph: the
     top part pairs by cosine association n_ab / sqrt(n_a * n_b) —
     co-purchase count normalized by each item's popularity, so
@@ -1393,7 +1384,7 @@ def item_cooccurrence_cf(spark: SparkSession, sf_dir: str,
              .select("p.part_a", "p.part_b")
              .groupBy("part_a", "part_b")
              .agg(F.count(F.lit(1)).alias("n_ab"))
-             .filter(F.col("n_ab") >= min_orders))
+             .filter(F.col("n_ab") >= CF_MIN_ORDERS))
     item_counts = (
         read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey").distinct()
@@ -1417,7 +1408,7 @@ def item_cooccurrence_cf(spark: SparkSession, sf_dir: str,
         .select("part_a", "part_b", "n_ab", "n_a", "n_b",
                 (F.floor(score * 10000) / 10000).alias("cf_score"))
         .orderBy(F.desc("cf_score"), F.asc("part_a"), F.asc("part_b"))
-        .limit(top_n)
+        .limit(CF_TOP_N)
     )
 
 
@@ -1453,9 +1444,7 @@ RULES_MIN_ORDERS = 3
 RULES_TOP_N = 50
 
 
-def basket_lift_rules(spark: SparkSession, sf_dir: str,
-                      min_orders: int = RULES_MIN_ORDERS,
-                      top_n: int = RULES_TOP_N) -> DataFrame:
+def basket_lift_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules over the basket graph: DIRECTIONAL
     part_a -> part_b rules with support, confidence
     (P(b in basket | a in basket)) and lift — the
@@ -1502,7 +1491,7 @@ def basket_lift_rules(spark: SparkSession, sf_dir: str,
              .select("p.pa", "p.pb")
              .groupBy("pa", "pb")
              .agg(F.count(F.lit(1)).alias("n_ab"))
-             .filter(F.col("n_ab") >= min_orders))
+             .filter(F.col("n_ab") >= RULES_MIN_ORDERS))
     # Both rule directions from the a<b pair table — emitted by an
     # in-row explode, NOT a unionAll of two selects over `pairs`
     # (round 12, guide §2.4): Catalyst cannot share a subtree across
@@ -1541,7 +1530,7 @@ def basket_lift_rules(spark: SparkSession, sf_dir: str,
                 (F.floor(lift * 10000) / 10000).alias("lift"))
         .orderBy(F.desc("confidence"), F.asc("antecedent"),
                  F.asc("consequent"))
-        .limit(top_n)
+        .limit(RULES_TOP_N)
     )
 
 
@@ -1579,9 +1568,7 @@ ORACLE_SQL["basket_lift_rules"] = f"""
 TRI_MIN_SUPPORT = 2
 
 
-def copurchase_triangles(spark: SparkSession, sf_dir: str,
-                         min_support: int = TRI_MIN_SUPPORT,
-                         basket_cap: int = BASKET_CAP) -> DataFrame:
+def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle census of the copurchase graph — the third classic
     graph algorithm alongside PageRank (copurchase_pagerank) and
     connected components (dedup clustering): edge/wedge/triangle
@@ -1607,7 +1594,7 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str,
         .select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.slice(F.sort_array(F.collect_set("l_partkey")),
-                     1, basket_cap).alias("parts"))
+                     1, BASKET_CAP).alias("parts"))
         .filter(F.size("parts") >= 2)
     )
     pair_structs = F.flatten(F.transform(
@@ -1623,7 +1610,7 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str,
         .select("p.pa", "p.pb")
         .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= min_support)
+        .filter(F.col("__n") >= TRI_MIN_SUPPORT)
         .select("pa", "pb")
         .persist()
     )
@@ -1697,15 +1684,13 @@ CF_EVAL_CUTOFF = "2000-01-01"
 CF_EVAL_NEIGHBORS = 3
 
 
-def cf_holdout_hitrate(spark: SparkSession, sf_dir: str,
-                       cutoff: str = CF_EVAL_CUTOFF,
-                       n_neighbors: int = CF_EVAL_NEIGHBORS) -> DataFrame:
+def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe recommender evaluation — the harness that turns
     item_cooccurrence_cf from a score table into a measured system:
     TEMPORAL split (train = orders before the cutoff, test = after;
     random splits leak future co-purchases into training), item-item
     association built ONLY from train baskets, each user's
-    recommendation set = the top-`n_neighbors` associates of their
+    recommendation set = the top-CF_EVAL_NEIGHBORS associates of their
     train items minus what they already bought, and the metric is
     hit-rate: the share of held-out test purchases (by users with
     train history) present in their recommendation set.
@@ -1736,7 +1721,8 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str,
     all_items = track(
         orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .select("o_orderkey", "o_custkey", "l_partkey",
-                (F.col("o_orderdate") < ts_lit(cutoff)).alias("is_train"))
+                (F.col("o_orderdate") < ts_lit(CF_EVAL_CUTOFF))
+                .alias("is_train"))
         .persist())
     train_items = all_items.filter("is_train")
     # the distinct user-item set itself has three consumers (the
@@ -1788,11 +1774,11 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str,
     # order within pa, so results are identical to the plain window.
     neighbors = (
         salted_topk(assoc, ["pa"],
-                    [F.desc("n_ab"), F.asc("pb")], k=n_neighbors)
+                    [F.desc("n_ab"), F.asc("pb")], k=CF_EVAL_NEIGHBORS)
         .select("pa", F.col("pb").alias("rec")))
     # neighbors is <= |items| x k skinny int rows; the part table's
     # on-disk footprint bounds |items|, so gate the broadcast on it
-    if _table_bytes(sf_dir, "part") * n_neighbors <= 256 << 20:
+    if _table_bytes(sf_dir, "part") * CF_EVAL_NEIGHBORS <= 256 << 20:
         neighbors = F.broadcast(neighbors)
 
     recs = (train_oi.join(neighbors,
@@ -2094,8 +2080,7 @@ ORACLE_SQL["customer_retention_set_ops"] = f"""
 """
 
 
-def _sym_copurchase_edges(spark: SparkSession, sf_dir: str,
-                          persist: bool = True) -> DataFrame:
+def _sym_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized distinct copurchase edge list (a, b): the
     copurchase_pairs posting-list contract (per-order sorted distinct
     basket, BASKET_CAP slice, positional a<b pairs — one basket
@@ -2110,8 +2095,8 @@ def _sym_copurchase_edges(spark: SparkSession, sf_dir: str,
     basket shuffle + one distinct (plan: 2 scans/4 exchanges -> 1
     scan/2 exchanges), and a<b-distinct ⟺ symmetric-distinct is a
     bijection, so the edge SET is unchanged. Persisted
-    (cache.track-owned) by default since every graph consumer reads
-    it more than once."""
+    (cache.track-owned) since every graph consumer reads it more
+    than once."""
     from simpleetlpipeline_spark.cache import track
 
     baskets = (
@@ -2135,7 +2120,7 @@ def _sym_copurchase_edges(spark: SparkSession, sf_dir: str,
     sym = (baskets.select(F.explode(both).alias("e"))
            .select(F.col("e.a").alias("a"), F.col("e.b").alias("b"))
            .distinct())
-    return track(sym.persist()) if persist else sym
+    return track(sym.persist())
 
 
 def copurchase_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2360,16 +2345,14 @@ TRIPLE_SUPPORT_MILLI = 3
 TRIPLE_TOP_N = 25
 
 
-def brand_triple_rules(spark: SparkSession, sf_dir: str,
-                       support_milli: int = TRIPLE_SUPPORT_MILLI,
-                       top_n: int = TRIPLE_TOP_N) -> DataFrame:
+def brand_triple_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Level-3 market-basket mining with association-rule scoring —
     the A-priori step above copurchase_pairs/basket_lift_rules' pair
     tier: frequent brand TRIPLES {a,b,c} plus the rule {a,b} -> c
     scored by exact confidence = sup(abc)/sup(ab). Top-N triples by
     support (brand-lexicographic tiebreak).
 
-    Support threshold is RELATIVE (>= support_milli per-mille of
+    Support threshold is RELATIVE (>= TRIPLE_SUPPORT_MILLI per-mille of
     baskets, floored at 2): an absolute floor is meaningless across
     scale factors, and the per-mille form is the same number the
     rule consumer reasons about.
@@ -2407,7 +2390,7 @@ def brand_triple_rules(spark: SparkSession, sf_dir: str,
         .persist())
     n_baskets = baskets.agg(F.count(F.lit(1)).alias("__nb"))
     min_sup = F.greatest(
-        F.lit(2), F.expr(f"__nb * {support_milli} div 1000"))
+        F.lit(2), F.expr(f"__nb * {TRIPLE_SUPPORT_MILLI} div 1000"))
     bs, n = F.col("bs"), F.size("bs")
     rest = lambda i: F.slice(  # noqa: E731 — elements after 0-based i
         bs, i + 2, F.greatest(n - i - 1, F.lit(0)))
@@ -2450,7 +2433,7 @@ def brand_triple_rules(spark: SparkSession, sf_dir: str,
             .cast("long").alias("support_rate_micro"))
         .orderBy(F.desc("support"), F.asc("brand_a"),
                  F.asc("brand_b"), F.asc("brand_c"))
-        .limit(top_n)
+        .limit(TRIPLE_TOP_N)
     )
 
 
@@ -2492,8 +2475,7 @@ ORACLE_SQL["brand_triple_rules"] = f"""
 TRIGRAM_TOP_N = 30
 
 
-def frequent_event_trigrams(spark: SparkSession, sf_dir: str,
-                            top_n: int = TRIGRAM_TOP_N) -> DataFrame:
+def frequent_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-order sequence mining: the top contiguous THREE-event
     paths per user (the PrefixSpan-lite depth user_path_transitions'
     first-order matrix can't see — 'view->view->purchase' and
@@ -2541,7 +2523,7 @@ def frequent_event_trigrams(spark: SparkSession, sf_dir: str,
                     (F.floor(cond) / 10000).alias("cond_prob"))
             .orderBy(F.desc("n_trigrams"), F.asc("t1"), F.asc("t2"),
                      F.asc("t3"))
-            .limit(top_n))
+            .limit(TRIGRAM_TOP_N))
 
 
 QUERIES["frequent_event_trigrams"] = frequent_event_trigrams

@@ -183,12 +183,11 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONCENTRATION_FRACTION = 0.04
 
 
-def supplier_value_concentration(
-        spark: SparkSession, sf_dir: str,
-        fraction: float = CONCENTRATION_FRACTION) -> DataFrame:
+def supplier_value_concentration(spark: SparkSession,
+                                 sf_dir: str) -> DataFrame:
     """TPC-H Q11-shaped HAVING-against-global-scalar: nations whose
-    total supplier account balance exceeds `fraction` of the global
-    total. Both sides of the comparison are exact decimal sums, so
+    total supplier account balance exceeds CONCENTRATION_FRACTION of
+    the global total. Both sides of the comparison are exact decimal sums, so
     membership can't flip under re-partitioning."""
     nation = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name")
@@ -206,7 +205,8 @@ def supplier_value_concentration(
         .alias("__total"))
     return (
         per_nation.crossJoin(F.broadcast(total))
-        .filter(F.col("nation_value") > F.col("__total") * fraction)
+        .filter(F.col("nation_value")
+                > F.col("__total") * CONCENTRATION_FRACTION)
         .select("n_name", "nation_value", "n_suppliers",
                 (F.floor(F.col("nation_value") / F.col("__total") * 10000)
                  / 10000).alias("value_share"))
@@ -265,18 +265,15 @@ SMALL_ORDER_BRAND = "Brand#1"
 SMALL_ORDER_FRACTION = 0.5
 
 
-def small_order_part_revenue(
-        spark: SparkSession, sf_dir: str,
-        brand: str = SMALL_ORDER_BRAND,
-        fraction: float = SMALL_ORDER_FRACTION) -> DataFrame:
+def small_order_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17-shaped correlated-average filter: revenue from
     lineitems of one brand's parts whose quantity is below
-    `fraction` × that part's average quantity. The correlated AVG
+    SMALL_ORDER_FRACTION × that part's average quantity. The correlated AVG
     decorrelates into a per-part aggregate joined back. Quantities
     are integral doubles, so the per-part average (exact integer sum
     / count) is one IEEE divide — identical in both engines."""
     part = read_table(spark, sf_dir, "part").filter(
-        F.col("p_brand") == brand).select("p_partkey")
+        F.col("p_brand") == SMALL_ORDER_BRAND).select("p_partkey")
     lineitem = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice")
     branded = lineitem.join(F.broadcast(part),
@@ -287,7 +284,8 @@ def small_order_part_revenue(
     small = (branded.join(F.broadcast(per_part.withColumnRenamed(
                  "p_partkey", "ap_partkey")),
                  F.col("l_partkey") == F.col("ap_partkey"))
-             .filter(F.col("l_quantity") < F.col("avg_qty") * fraction))
+             .filter(F.col("l_quantity")
+                     < F.col("avg_qty") * SMALL_ORDER_FRACTION))
     return small.agg(
         F.count(F.lit(1)).alias("n_small_lineitems"),
         (F.floor(_money_sum(F.col("l_extendedprice")) / 7.0 * 100) / 100)
@@ -328,11 +326,11 @@ def disjunctive_promo_revenue(spark: SparkSession,
 IDLE_DAYS = 365
 
 
-def idle_high_balance_customers(spark: SparkSession, sf_dir: str,
-                                idle_days: int = IDLE_DAYS) -> DataFrame:
+def idle_high_balance_customers(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
     """TPC-H Q22-shaped anti-join + scalar-threshold screen:
     customers whose balance exceeds the average positive balance and
-    who placed NO order in the trailing `idle_days` before the
+    who placed NO order in the trailing IDLE_DAYS before the
     dataset's last order date (anchored at max(o_orderdate) for
     determinism — every test customer has at least one order, so the
     classic 'no orders ever' form would be vacuous). The threshold
@@ -346,7 +344,7 @@ def idle_high_balance_customers(spark: SparkSession, sf_dir: str,
                  .agg((F.sum(F.col("c_acctbal").cast(_DEC)).cast("double")
                        / F.count(F.lit(1))).alias("__thr")))
     cutoff = orders.agg(
-        (F.max(epoch_day("o_orderdate")) - idle_days).alias("__cutoff"))
+        (F.max(epoch_day("o_orderdate")) - IDLE_DAYS).alias("__cutoff"))
     recent = (orders.crossJoin(F.broadcast(cutoff))
               .filter(epoch_day("o_orderdate") > F.col("__cutoff"))
               .select("o_custkey"))
@@ -632,8 +630,7 @@ WAITING_LATE_DAYS = 80
 WAITING_TOP = 20
 
 
-def suppliers_kept_waiting(spark: SparkSession, sf_dir: str,
-                           late_days: int = WAITING_LATE_DAYS) -> DataFrame:
+def suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21-shaped double-correlated EXISTS / NOT EXISTS: the
     suppliers who were the SOLE late shipper on multi-supplier
     orders — 'exists another supplier on the order' AND 'not exists
@@ -678,8 +675,8 @@ def suppliers_kept_waiting(spark: SparkSession, sf_dir: str,
     per_pair = (
         pair_max.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .select("l_orderkey", "l_suppkey",
-                F.when(F.col("max_ship_day") - F.col("o_day") > late_days,
-                       1).otherwise(0).alias("is_late"))
+                F.when(F.col("max_ship_day") - F.col("o_day")
+                       > WAITING_LATE_DAYS, 1).otherwise(0).alias("is_late"))
     )
     per_order = (
         per_pair.groupBy("l_orderkey")

@@ -30,6 +30,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from simpleetlpipeline_spark.functions.sketches import HLL_LGK
 from simpleetlpipeline_spark.io import (
     read_table_version,
     read_version_meta,
@@ -122,8 +123,7 @@ def streaming_totals_to_table(spark: SparkSession, sf_dir: str,
 
 
 
-def hll_merge_batch_fn(spark: SparkSession, table_root: str,
-                       lgk: int):
+def hll_merge_batch_fn(spark: SparkSession, table_root: str):
     """foreachBatch body for the HLL state table, exposed at module
     level so tests can drive the multi-batch MERGE path directly
     (the finite single-file replay only ever produces one batch):
@@ -134,7 +134,8 @@ def hll_merge_batch_fn(spark: SparkSession, table_root: str,
         if meta is not None and meta.get("batch_id", -1) >= batch_id:
             return
         inc = (batch_df.groupBy("event_type")
-               .agg(F.hll_sketch_agg("user_id", F.lit(lgk)).alias("sk")))
+               .agg(F.hll_sketch_agg("user_id", F.lit(HLL_LGK))
+                    .alias("sk")))
         if os.path.exists(os.path.join(table_root, "_CURRENT")):
             cur = read_table_version(spark, table_root).select(
                 "event_type", F.col("sk").alias("sk0"))
@@ -154,8 +155,7 @@ def hll_merge_batch_fn(spark: SparkSession, table_root: str,
 
 
 def streaming_distinct_users_hll(spark: SparkSession, sf_dir: str,
-                                 table_root: str | None = None,
-                                 lgk: int = 14) -> DataFrame:
+                                 table_root: str | None = None) -> DataFrame:
     """Streaming cardinality maintenance: each micro-batch folds its
     per-event-type HLL sketch into a versioned STATE TABLE via
     hll_union (register max-merge — commutative, associative,
@@ -179,7 +179,7 @@ def streaming_distinct_users_hll(spark: SparkSession, sf_dir: str,
     the multi-batch replay live in tests/test_streaming.py."""
     caller_owns_root = table_root is not None
     table_root = table_root or tempfile.mkdtemp(prefix="stream_hll_")
-    merge_batch = hll_merge_batch_fn(spark, table_root, lgk)
+    merge_batch = hll_merge_batch_fn(spark, table_root)
 
     q = (
         read_events_stream(spark, sf_dir)

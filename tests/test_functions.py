@@ -97,21 +97,22 @@ def test_dedup_exact_counts(spark, sf_dir):
     assert agg["g"] <= n_docs
 
 
-def test_minhash_lsh_finds_exact_dups(spark):
+def test_minhash_lsh_finds_exact_dups(spark, monkeypatch):
     """Any pair of identical documents must surface as a candidate
     (identical signatures agree on every band) with jaccard 1.0."""
     from simpleetlpipeline_spark.functions import dedup as D
     import tempfile, os
     rows = [(i, f"unique document number {i} with filler words") for i in range(20)]
     rows.append((100, rows[0][1]))
+    monkeypatch.setattr(D, "JACCARD_THRESHOLD", 0.9)
     with tempfile.TemporaryDirectory() as td:
         _docs(spark, rows).write.parquet(os.path.join(td, "documents.parquet"))
-        out = D.dedup_minhash_lsh(spark, td, threshold=0.9).collect()
+        out = D.dedup_minhash_lsh(spark, td).collect()
     pairs = {(r["a_id"], r["b_id"]): r["jaccard"] for r in out}
     assert pairs.get((0, 100)) == 1.0
 
 
-def test_minhash_lsh_duplicate_heavy_star_not_clique(spark):
+def test_minhash_lsh_duplicate_heavy_star_not_clique(spark, monkeypatch):
     """A duplicate-heavy corpus (the workload dedup exists for) must
     emit O(n) star edges for an n-copy group, never the C(n, 2)
     clique — the quadratic-blowup guard for hot documents. The star
@@ -125,9 +126,10 @@ def test_minhash_lsh_duplicate_heavy_star_not_clique(spark):
     rows += [(10_000 + i, f"totally distinct filler item {i} about "
                           f"topic{i} marker{i * 7} end{i * 13}")
              for i in range(20)]
+    monkeypatch.setattr(D, "JACCARD_THRESHOLD", 0.9)
     with tempfile.TemporaryDirectory() as td:
         _docs(spark, rows).write.parquet(os.path.join(td, "documents.parquet"))
-        out = D.dedup_minhash_lsh(spark, td, threshold=0.9).collect()
+        out = D.dedup_minhash_lsh(spark, td).collect()
     grp = [r for r in out if r["b_id"] < 10_000]
     assert len(grp) == n - 1, "n-copy group must emit n-1 star edges"
     assert all(r["a_id"] == 0 and r["jaccard"] == 1.0 for r in grp)
@@ -270,12 +272,13 @@ def test_connected_components_planted_graph(spark, driver_threshold):
                    1: 1, 2: 1, 7: 1}
 
 
-def test_dedup_clusters_merges_planted_dups(spark):
+def test_dedup_clusters_merges_planted_dups(spark, monkeypatch):
     """Three copies of one doc + two of another -> two clusters with
     the minimum doc_id as canonical."""
     import os
     import tempfile
 
+    from simpleetlpipeline_spark.functions import dedup as D
     from simpleetlpipeline_spark.functions.dedup import (
         dedup_cluster_frame,
         dedup_clusters,
@@ -284,12 +287,13 @@ def test_dedup_clusters_merges_planted_dups(spark):
     rows = [(i, f"totally unique filler document {i} " * 3)
             for i in range(10)]
     rows += [(100, rows[0][1]), (101, rows[0][1]), (200, rows[1][1])]
+    monkeypatch.setattr(D, "JACCARD_THRESHOLD", 0.9)
     with tempfile.TemporaryDirectory() as td:
         _docs(spark, rows).write.parquet(os.path.join(td, "documents.parquet"))
         out = {r["keep_doc_id"]: r for r in
-               dedup_cluster_frame(spark, td, threshold=0.9).collect()}
+               dedup_cluster_frame(spark, td).collect()}
         flat = {r["keep_doc_id"]: r for r in
-                dedup_clusters(spark, td, threshold=0.9).collect()}
+                dedup_clusters(spark, td).collect()}
     assert out[0]["cluster_size"] == 3 and out[0]["members"] == [0, 100, 101]
     assert out[1]["cluster_size"] == 2 and out[1]["members"] == [1, 200]
     # catalog form: same clusters, members serialized for the gate
@@ -425,17 +429,18 @@ def test_ngram_jaccard_planted_pair_matches_string_oracle(spark,
 
 
 def test_dedup_pairs_all_df_cap_drops_stop_shingles(spark, monkeypatch):
-    """A shingle present in > df_cap docs must not generate pairs."""
+    """A shingle present in > DF_CAP docs must not generate pairs."""
     import simpleetlpipeline_spark.functions.dedup as dd
 
     # every doc shares the same 3 tokens -> one universal shingle;
-    # with df_cap=2 and 4 docs it is dropped, so no pairs survive
+    # with DF_CAP=2 and 4 docs it is dropped, so no pairs survive
     rows = [(i, f"common shingle here unique{i} tail{i} end{i}",
              "en", "web") for i in range(4)]
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string")
     monkeypatch.setattr(dd, "read_table", lambda _s, _d, _n: df)
-    assert dd.dedup_pairs_all(spark, "unused", df_cap=2).count() == 0
+    monkeypatch.setattr(dd, "DF_CAP", 2)
+    assert dd.dedup_pairs_all(spark, "unused").count() == 0
 
 
 def test_bigram_logprob_scores_phrases_above_gibberish(spark, monkeypatch):
@@ -493,13 +498,14 @@ def test_compression_quality_orders_text_classes(spark):
     assert out[2] > 0.7, "random noise must stay near-incompressible"
 
 
-def test_segment_dedup_first_occurrence_wins(spark, tmp_path):
+def test_segment_dedup_first_occurrence_wins(spark, tmp_path, monkeypatch):
     """C4-style paragraph dedup: a 3-token segment repeated across
     docs survives only at its first (doc_id, seg_idx) occurrence;
     the rebuilt text drops later copies, and a fully-duplicated doc
     rebuilds to the empty string."""
     import hashlib
 
+    from simpleetlpipeline_spark.functions import dedup as D
     from simpleetlpipeline_spark.functions.dedup import segment_dedup
 
     docs = _docs(spark, [
@@ -508,8 +514,9 @@ def test_segment_dedup_first_occurrence_wins(spark, tmp_path):
         (3, "a b c"),            # fully duplicated -> empty rebuild
     ])
     docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    monkeypatch.setattr(D, "SEGMENT_LEN", 3)
     out = {r["doc_id"]: r for r in
-           segment_dedup(spark, str(tmp_path), seg_len=3).collect()}
+           segment_dedup(spark, str(tmp_path)).collect()}
     assert (out[1]["n_segments"], out[1]["n_kept"]) == (2, 2)
     assert (out[2]["n_segments"], out[2]["n_kept"]) == (2, 1)
     assert (out[3]["n_segments"], out[3]["n_kept"]) == (1, 0)
@@ -535,11 +542,10 @@ def test_minhash_incremental_equals_full_batch_slice(spark, sf_dir):
         return {(r["a_id"], r["b_id"], r["jaccard"])
                 for r in df.collect()}
 
-    full = norm(D.dedup_minhash_lsh(spark, sf_dir, threshold=0.15))
+    full = norm(D.dedup_minhash_lsh(spark, sf_dir))
     full_slice = {(a, b, j) for a, b, j in full
                   if a % D.INCR_MOD == 0 or b % D.INCR_MOD == 0}
-    incr = norm(D.dedup_minhash_incremental(spark, sf_dir,
-                                            threshold=0.15))
+    incr = norm(D.dedup_minhash_incremental(spark, sf_dir))
     assert incr == full_slice
 
     base_text = ("alpha beta gamma delta epsilon zeta eta theta "
@@ -556,11 +562,10 @@ def test_minhash_incremental_equals_full_batch_slice(spark, sf_dir):
     with tempfile.TemporaryDirectory() as td:
         _docs(spark, rows).write.parquet(
             os.path.join(td, "documents.parquet"))
-        f2 = norm(D.dedup_minhash_lsh(spark, td, threshold=0.15))
+        f2 = norm(D.dedup_minhash_lsh(spark, td))
         f2_slice = {(a, b, j) for a, b, j in f2
                     if a % D.INCR_MOD == 0 or b % D.INCR_MOD == 0}
-        i2 = norm(D.dedup_minhash_incremental(spark, td,
-                                              threshold=0.15))
+        i2 = norm(D.dedup_minhash_incremental(spark, td))
     assert i2 == f2_slice
     assert len(i2) >= 12, "cross-split near-dups must be found"
     # and at least one base-x-base pair exists in full but NOT in the
@@ -614,17 +619,20 @@ def test_bpe_train_merges_matches_python(spark, sf_dir):
     assert got == want
 
 
-def test_parameterized_oracle_parity(spark, sf_dir):
-    """ADVICE r7: Spark-side parameters (n_bins, min_n, top_n,
-    cutoff) must stay parity-checkable at NON-default values — the
-    static ORACLE_SQL strings pin the shared defaults, and these
-    builder twins prove the parameterization itself is faithful, so
-    a future caller passing non-defaults cannot silently diverge."""
+def test_parameterized_oracle_parity(spark, sf_dir, monkeypatch):
+    """ADVICE r7: Spark-side tuning constants (GAINS_N_BINS,
+    SEQ_ENTROPY_MIN_N, SEQ_ENTROPY_TOP_N) must stay parity-checkable
+    at NON-default values — the static ORACLE_SQL strings pin the
+    import-time values, and these builder twins prove both sides
+    read the same constants, so a retuned constant cannot silently
+    diverge."""
     import duckdb
 
+    from simpleetlpipeline_spark.functions import pretrain
     from simpleetlpipeline_spark.functions.pretrain import (
         calibration_oracle, calibration_reliability, gains_lift_oracle,
         gains_lift_table)
+    from simpleetlpipeline_spark.plans import advanced
     from simpleetlpipeline_spark.plans.advanced import (
         user_sequence_entropy, user_sequence_entropy_oracle)
 
@@ -633,14 +641,18 @@ def test_parameterized_oracle_parity(spark, sf_dir):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{sf_dir}/{t}.parquet')")
 
-    cases = [
-        (gains_lift_table(spark, sf_dir, n_bins=4),
-         gains_lift_oracle(n_bins=4)),
-        (calibration_reliability(spark, sf_dir, n_bins=3),
-         calibration_oracle(n_bins=3)),
-        (user_sequence_entropy(spark, sf_dir, min_n=5, top_n=7),
-         user_sequence_entropy_oracle(min_n=5, top_n=7)),
-    ]
+    # each frame's plan and SQL are fixed when built, so a constant
+    # only has to hold while its pair is built
+    cases = []
+    monkeypatch.setattr(pretrain, "GAINS_N_BINS", 4)
+    cases.append((gains_lift_table(spark, sf_dir), gains_lift_oracle()))
+    monkeypatch.setattr(pretrain, "GAINS_N_BINS", 3)
+    cases.append((calibration_reliability(spark, sf_dir),
+                  calibration_oracle()))
+    monkeypatch.setattr(advanced, "SEQ_ENTROPY_MIN_N", 5)
+    monkeypatch.setattr(advanced, "SEQ_ENTROPY_TOP_N", 7)
+    cases.append((user_sequence_entropy(spark, sf_dir),
+                  user_sequence_entropy_oracle()))
     for sdf, sql in cases:
         srows = sorted(tuple(r) for r in sdf.collect())
         drows = sorted(tuple(r) for r in con.execute(sql).fetchall())

@@ -99,6 +99,20 @@ def test_monitoring_surfaces(run):
     assert tips and any("broadcast" in t for t in tips)
 
 
+def test_health_reads_configured_quality_floor(run):
+    """pipeline_status derives health from ETLConfig.min_quality_score
+    (YAML data_quality.minimum_quality_score): no average quality
+    score reaches a floor above 100, and every one clears a floor
+    of 0."""
+    spark, cfg, _ = run
+    strict = pipeline.ETLConfig(warehouse_dir=cfg.warehouse_dir,
+                                min_quality_score=101.0)
+    assert pipeline.pipeline_status(spark, strict)["health"] == "degraded"
+    lax = pipeline.ETLConfig(warehouse_dir=cfg.warehouse_dir,
+                             min_quality_score=0.0)
+    assert pipeline.pipeline_status(spark, lax)["health"] == "healthy"
+
+
 def test_failure_isolation(spark, tmp_path, monkeypatch):
     """A poisoned transform must fail its table only; the loop
     continues and other tables load (reference main.py:593-596)."""

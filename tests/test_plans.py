@@ -364,13 +364,14 @@ def test_partitioned_write_prunes_directories(spark, sf_dir, tmp_path):
     assert n_day == events.filter(F.col("day") == days[0]).count()
 
 
-def test_decontaminate_broadcast_guard(spark, sf_dir):
+def test_decontaminate_broadcast_guard(spark, sf_dir, monkeypatch):
     """Below the size threshold the blocklist join carries a FORCED
     broadcast hint; above it the hint is dropped so the optimizer
     decides from statistics. Verified by disabling stats-based
     broadcast (threshold -1): the hint must still force a broadcast,
     and without it the join must fall back to a shuffled equi-join —
     i.e. an oversized blocklist can never be force-broadcast."""
+    from simpleetlpipeline_spark.functions import curation
     from simpleetlpipeline_spark.functions.curation import decontaminate
 
     before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -379,7 +380,8 @@ def test_decontaminate_broadcast_guard(spark, sf_dir):
         below = _plan(decontaminate(spark, sf_dir))
         assert "BroadcastHashJoin" in below, \
             "sub-threshold blocklist must be hint-forced broadcast"
-        above = _plan(decontaminate(spark, sf_dir, broadcast_max_bytes=0))
+        monkeypatch.setattr(curation, "DECON_BROADCAST_MAX_BYTES", 0)
+        above = _plan(decontaminate(spark, sf_dir))
         assert "BroadcastHashJoin" not in above.split("Exchange", 1)[0] \
             and ("SortMergeJoin" in above or "ShuffledHashJoin" in above), \
             "oversized blocklist must shuffle on the gram key"

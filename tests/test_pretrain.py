@@ -122,7 +122,9 @@ def test_kmeans_separates_planted_blobs(spark, monkeypatch):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int")
     monkeypatch.setattr(pt, "read_table", lambda _s, _d, _n: df)
-    out = pt.kmeans_assign(spark, "unused", k=2, iters=2).collect()
+    monkeypatch.setattr(pt, "KMEANS_K", 2)
+    monkeypatch.setattr(pt, "KMEANS_ITERS", 2)
+    out = pt.kmeans_assign(spark, "unused").collect()
     clusters_by_blob = {}
     for r in out:
         clusters_by_blob.setdefault(r["label"], set()).add(r["cluster"])
@@ -135,10 +137,12 @@ def test_kmeans_assignment_is_total_and_deterministic(spark, monkeypatch):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int")
     monkeypatch.setattr(pt, "read_table", lambda _s, _d, _n: df)
+    monkeypatch.setattr(pt, "KMEANS_K", 3)
+    monkeypatch.setattr(pt, "KMEANS_ITERS", 2)
     a = sorted((r["vec_id"], r["cluster"]) for r in
-               pt.kmeans_assign(spark, "unused", k=3, iters=2).collect())
+               pt.kmeans_assign(spark, "unused").collect())
     b = sorted((r["vec_id"], r["cluster"]) for r in
-               pt.kmeans_assign(spark, "unused", k=3, iters=2).collect())
+               pt.kmeans_assign(spark, "unused").collect())
     assert a == b and len(a) == 30
     assert {c for _, c in a} <= {0, 1, 2}
 

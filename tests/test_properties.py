@@ -307,15 +307,20 @@ def test_segment_dedup_matches_reference_any_corpus(spark, tmp_path_factory,
     pressure: most 3-token segments repeat across docs)."""
     import hashlib
 
-    from simpleetlpipeline_spark.functions.dedup import segment_dedup
+    from unittest import mock
+
+    from simpleetlpipeline_spark.functions import dedup
 
     docs = list(enumerate(texts))
     path = tmp_path_factory.mktemp("segdd")
     (spark.createDataFrame(docs, "doc_id long, text string")
      .repartition(3)
      .write.mode("overwrite").parquet(str(path / "documents.parquet")))
-    got = {r["doc_id"]: r for r in
-           segment_dedup(spark, str(path), seg_len=3).collect()}
+    # patch.object, not monkeypatch: function-scoped fixtures are not
+    # reset between @given examples
+    with mock.patch.object(dedup, "SEGMENT_LEN", 3):
+        got = {r["doc_id"]: r for r in
+               dedup.segment_dedup(spark, str(path)).collect()}
     ref = _segment_dedup_reference(docs, 3)
     assert set(got) == set(ref)
     for doc_id, (n_segs, n_kept, txt) in ref.items():

@@ -53,7 +53,7 @@ def test_doc_chunk_covers_every_token(spark, sf_dir):
         | (F.col("chunk_tokens") > CHUNK_CTX)).count() == 0
 
 
-def test_bpe_merge_pairs_counts_match_manual(spark, sf_dir):
+def test_bpe_merge_pairs_counts_match_manual(spark, sf_dir, monkeypatch):
     df = spark.createDataFrame(
         [(0, "a b a b c"), (1, "a b x")], "doc_id long, text string")
     toks = tokens_col(F.col("text"))
@@ -66,8 +66,11 @@ def test_bpe_merge_pairs_counts_match_manual(spark, sf_dir):
            .collect()}
     # "a b" appears in doc0 twice and doc1 once
     assert got == {"a b": 3, "b a": 1, "b c": 1, "b x": 1}
-    # catalog entry: at most top_n rows, ordered by count desc
-    top = bpe_merge_pairs(spark, sf_dir, top_n=5).collect()
+    # catalog entry: at most BPE_MERGE_TOP_N rows, ordered by count desc
+    from simpleetlpipeline_spark.functions import text
+
+    monkeypatch.setattr(text, "BPE_MERGE_TOP_N", 5)
+    top = bpe_merge_pairs(spark, sf_dir).collect()
     assert len(top) == 5
     counts = [r["n_occurrences"] for r in top]
     assert counts == sorted(counts, reverse=True)
@@ -180,7 +183,8 @@ def test_heavy_hitter_support_adapts_to_data(spark, tmp_path, monkeypatch):
               "event_type string, value double, props string") \
         .write.parquet(os.path.join(str(tmp_path), "events.parquet"))
 
-    out = sketches.heavy_hitter_users(spark, str(tmp_path), k=5).collect()
+    monkeypatch.setattr(sketches, "HH_TOP_K", 5)
+    out = sketches.heavy_hitter_users(spark, str(tmp_path)).collect()
     assert [r["user_id"] for r in out][:2] == [1, 2]
     # k-th hitter share = 4/1000 = 0.004 > support = min(1e-4, 0.002)
     # -> guarantee applies, membership genuinely asserted
@@ -188,7 +192,7 @@ def test_heavy_hitter_support_adapts_to_data(spark, tmp_path, monkeypatch):
 
     # flat regime: raise the state floor above any attainable support
     monkeypatch.setattr(sketches, "HH_SUPPORT_FLOOR", 1.0)
-    out2 = sketches.heavy_hitter_users(spark, str(tmp_path), k=5).collect()
+    out2 = sketches.heavy_hitter_users(spark, str(tmp_path)).collect()
     assert all(r["sketch_ok"] for r in out2)
 
 

@@ -1,0 +1,52 @@
+"""One query signature: every module-level function whose first two
+parameters are (spark, sf_dir) takes nothing else, except the
+arguments below that carry data rather than tuning. A tuning value
+is a module constant its body reads at call time (tests patch the
+constant), so no caller can step outside the contract its DuckDB
+oracle checks."""
+
+from __future__ import annotations
+
+import ast
+import os
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
+    __file__))), "simpleetlpipeline_spark")
+
+ALLOWED = {
+    ("read_table", "name"),
+    ("_table_rows", "name"),
+    ("run_sql", "sql"),
+    ("register_views", "tables"),
+    ("write_dashboard", "out_dir"),
+    ("streaming_totals_to_table", "table_root"),
+    ("streaming_distinct_users_hll", "table_root"),
+    ("validation_rules", "config"),
+    # the one tuning keyword: hybrid_rrf_search ranks a deeper pool
+    ("bm25_doc_ranking", "k"),
+}
+
+
+def test_spark_sf_dir_functions_take_no_tuning_parameters():
+    extra = []
+    for dirpath, _, files in os.walk(PKG):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in tree.body:
+                if not isinstance(node, ast.FunctionDef):
+                    continue
+                a = node.args
+                params = [p.arg for p in a.posonlyargs + a.args]
+                if params[:2] != ["spark", "sf_dir"]:
+                    continue
+                rest = params[2:] + [p.arg for p in a.kwonlyargs]
+                rest += [p.arg for p in (a.vararg, a.kwarg) if p]
+                rel = os.path.relpath(path, PKG)
+                extra += [f"{rel}:{node.lineno} {node.name}({p})"
+                          for p in rest if (node.name, p) not in ALLOWED]
+    assert not extra, "tuning parameters on (spark, sf_dir) functions:\n" \
+        + "\n".join(extra)

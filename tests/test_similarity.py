@@ -41,8 +41,10 @@ def _cos(a, b):
     return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b)))
 
 
-def test_ann_topk_matches_python_ground_truth(spark, synth_dir):
-    out = S.ann_topk(spark, synth_dir, n_probes=5, k=3).collect()
+def test_ann_topk_matches_python_ground_truth(spark, synth_dir, monkeypatch):
+    monkeypatch.setattr(S, "N_PROBES", 5)
+    monkeypatch.setattr(S, "TOP_K", 3)
+    out = S.ann_topk(spark, synth_dir).collect()
     emb = {r["vec_id"]: list(r["embedding"])
            for r in spark.read.parquet(
                os.path.join(synth_dir, "embeddings.parquet")).collect()}
@@ -55,35 +57,42 @@ def test_ann_topk_matches_python_ground_truth(spark, synth_dir):
         assert got == want, f"probe {a_id}: {got} != {want}"
 
 
-def test_neardup_exact_finds_planted_pairs(spark, synth_dir):
-    out = S.embedding_neardup(spark, synth_dir, threshold=0.99).collect()
+def test_neardup_exact_finds_planted_pairs(spark, synth_dir, monkeypatch):
+    monkeypatch.setattr(S, "NEARDUP_THRESHOLD", 0.99)
+    out = S.embedding_neardup(spark, synth_dir).collect()
     pairs = {(r["a_id"], r["b_id"]) for r in out}
     assert {(j, 100 + j) for j in range(10)} <= pairs
 
 
-def test_neardup_lsh_recall_on_planted_pairs(spark, synth_dir):
+def test_neardup_lsh_recall_on_planted_pairs(spark, synth_dir, monkeypatch):
     """Sign-random-projection blocking must recover nearly all planted
     cosine>0.99 pairs: P(bit agrees) = 1 - theta/pi ~ 0.98, so
     P(>=1 of 4 bands agrees) > 0.99."""
-    out = S.embedding_neardup_lsh(spark, synth_dir, threshold=0.99).collect()
+    monkeypatch.setattr(S, "NEARDUP_THRESHOLD", 0.99)
+    out = S.embedding_neardup_lsh(spark, synth_dir).collect()
     pairs = {(r["a_id"], r["b_id"]) for r in out}
     planted = {(j, 100 + j) for j in range(10)}
     assert len(pairs & planted) >= 9
 
 
-def test_lsh_topk_rank1_is_neardup(spark, synth_dir):
+def test_lsh_topk_rank1_is_neardup(spark, synth_dir, monkeypatch):
     """For probes with a planted near-dup, LSH ANN must rank it #1."""
-    out = S.ann_lsh_topk(spark, synth_dir, n_probes=5, k=3).collect()
+    monkeypatch.setattr(S, "N_PROBES", 5)
+    monkeypatch.setattr(S, "TOP_K", 3)
+    out = S.ann_lsh_topk(spark, synth_dir).collect()
     rank1 = {r["a_id"]: r["b_id"] for r in out if r["rank"] == 1}
     hits = sum(1 for j in range(5) if rank1.get(j) == 100 + j)
     assert hits >= 4
 
 
-def test_ivf_topk_rank1_is_neardup(spark, synth_dir):
+def test_ivf_topk_rank1_is_neardup(spark, synth_dir, monkeypatch):
     """IVF cells are label-based; each planted near-dup shares its
-    base vector's label, so with nprobe>=1 the duplicate's cell is
+    base vector's label, so with IVF_NPROBE>=1 the duplicate's cell is
     always probed and it must rank #1."""
-    out = S.ann_ivf_topk(spark, synth_dir, n_probes=5, k=3, nprobe=2).collect()
+    monkeypatch.setattr(S, "N_PROBES", 5)
+    monkeypatch.setattr(S, "TOP_K", 3)
+    monkeypatch.setattr(S, "IVF_NPROBE", 2)
+    out = S.ann_ivf_topk(spark, synth_dir).collect()
     rank1 = {r["a_id"]: r["b_id"] for r in out if r["rank"] == 1}
     hits = sum(1 for j in range(5) if rank1.get(j) == 100 + j)
     assert hits >= 4
@@ -96,7 +105,7 @@ def test_label_centroids_shape(spark, sf_dir):
     assert all(r["n_vectors"] > 0 for r in rows)
 
 
-def test_embedding_neardup_lsh_duplicate_heavy_star(spark):
+def test_embedding_neardup_lsh_duplicate_heavy_star(spark, monkeypatch):
     """Bit-identical vectors must collapse before the SRP band join
     and come back as cosine-1.0 star edges on the group minimum —
     O(n) rows for an n-copy group, not C(n, 2)."""
@@ -110,7 +119,8 @@ def test_embedding_neardup_lsh_duplicate_heavy_star(spark):
         spark.createDataFrame(
             rows, "vec_id long, embedding array<float>, label int"
         ).write.parquet(os.path.join(td, "embeddings.parquet"))
-        out = S.embedding_neardup_lsh(spark, td, threshold=0.9).collect()
+        monkeypatch.setattr(S, "NEARDUP_THRESHOLD", 0.9)
+        out = S.embedding_neardup_lsh(spark, td).collect()
     grp = [r for r in out if r["a_id"] < 10_000 and r["b_id"] < 10_000]
     assert len(grp) == n - 1
     assert all(r["a_id"] == 0 and r["cosine_sim"] == 1.0 for r in grp)
@@ -133,14 +143,17 @@ def test_embedding_quantize_zero_vector_guard(spark):
     assert out[1]["q_min"] == -127  # the regular path still scales
 
 
-def test_embedding_neardup_guard_refuses_oversized_corpus(spark, sf_dir):
-    """The exact form broadcasts the whole corpus; above max_bytes it
-    must fail fast with the scale-path alternative, not OOM."""
+def test_embedding_neardup_guard_refuses_oversized_corpus(spark, sf_dir,
+                                                          monkeypatch):
+    """The exact form broadcasts the whole corpus; above
+    EXACT_NEARDUP_MAX_BYTES it must fail fast with the scale-path
+    alternative, not OOM."""
+    monkeypatch.setattr(S, "EXACT_NEARDUP_MAX_BYTES", 1)
     with pytest.raises(ValueError, match="embedding_neardup_lsh"):
-        S.embedding_neardup(spark, sf_dir, max_bytes=1)
+        S.embedding_neardup(spark, sf_dir)
 
 
-def test_embedding_outliers_finds_planted_outlier(spark):
+def test_embedding_outliers_finds_planted_outlier(spark, monkeypatch):
     """A vector far from its label's centroid must rank first; the
     tight cluster members fill the remaining top-k slots with
     strictly smaller distances."""
@@ -151,14 +164,15 @@ def test_embedding_outliers_finds_planted_outlier(spark):
             tight + [planted],
             "vec_id long, embedding array<float>, label int"
         ).write.parquet(os.path.join(td, "embeddings.parquet"))
-        out = S.embedding_outliers(spark, td, top_k=3).collect()
+        monkeypatch.setattr(S, "OUTLIER_TOP_K", 3)
+        out = S.embedding_outliers(spark, td).collect()
     assert len(out) == 3
     top = sorted(out, key=lambda r: r["rank"])
     assert top[0]["vec_id"] == 99 and top[0]["rank"] == 1
     assert top[0]["dist2"] > top[1]["dist2"] >= top[2]["dist2"]
 
 
-def test_semantic_decontaminate_flags_planted_leak(spark):
+def test_semantic_decontaminate_flags_planted_leak(spark, monkeypatch):
     """A corpus vector that IS a probe (plus noise too small to
     matter) must be flagged against that probe with ~1 similarity;
     orthogonal vectors must not be flagged."""
@@ -177,15 +191,16 @@ def test_semantic_decontaminate_flags_planted_leak(spark):
         spark.createDataFrame(
             rows, "vec_id long, embedding array<float>, label int"
         ).write.parquet(os.path.join(td, "embeddings.parquet"))
-        out = S.semantic_decontaminate(spark, td, threshold=0.95,
-                                       n_probes=1).collect()
+        monkeypatch.setattr(S, "SEMDECON_THRESHOLD", 0.95)
+        monkeypatch.setattr(S, "SEMDECON_N_PROBES", 1)
+        out = S.semantic_decontaminate(spark, td).collect()
     assert len(out) == 1
     assert out[0]["vec_id"] == 100
     assert out[0]["closest_probe"] == 0
     assert out[0]["similarity"] > 0.999
 
 
-def test_pq_ann_ranks_exact_copy_first(spark):
+def test_pq_ann_ranks_exact_copy_first(spark, monkeypatch):
     """An exact copy of a probe quantizes to the probe's own nearest
     codes, so ADC must rank it above unrelated vectors."""
     import numpy as np
@@ -202,7 +217,9 @@ def test_pq_ann_ranks_exact_copy_first(spark):
         spark.createDataFrame(
             rows, "vec_id long, embedding array<float>, label int"
         ).write.parquet(os.path.join(td, "embeddings.parquet"))
-        out = S.pq_ann_topk(spark, td, n_probes=1, k=5).collect()
+        monkeypatch.setattr(S, "PQ_N_PROBES", 1)
+        monkeypatch.setattr(S, "PQ_TOP_K", 5)
+        out = S.pq_ann_topk(spark, td).collect()
     byrank = sorted(out, key=lambda r: r["rank"])
     assert byrank[0]["b_id"] == 100, "exact copy must rank first"
     assert byrank[0]["dist9"] == 0, \

@@ -324,7 +324,7 @@ def test_streaming_hll_sketch_state_accuracy_and_merge(spark, tmp_path):
 
     root = str(tmp_path / "hll_state")
     os.makedirs(root)
-    merge = hll_merge_batch_fn(spark, root, 14)
+    merge = hll_merge_batch_fn(spark, root)
     n_users = 6000
     slices = [(0, 2500), (2000, 4500), (4000, n_users)]  # overlaps
     for bid, (lo, hi) in enumerate(slices):

@@ -106,7 +106,7 @@ def test_idle_customers_threshold_membership(spark, sf_dir):
     assert sum(out.values()) <= eligible
 
 
-def test_copurchase_pagerank_hub_ranks_first(spark):
+def test_copurchase_pagerank_hub_ranks_first(spark, monkeypatch):
     """A star graph (hub bought with every spoke, spokes never
     together) must rank the hub first, all spokes tied behind it."""
     import os
@@ -114,6 +114,7 @@ def test_copurchase_pagerank_hub_ranks_first(spark):
 
     from pyspark.sql import functions as F
 
+    from simpleetlpipeline_spark.plans import relational
     from simpleetlpipeline_spark.plans.relational import copurchase_pagerank
 
     rows = []
@@ -132,7 +133,8 @@ def test_copurchase_pagerank_hub_ranks_first(spark):
                 "l_shipdate string"
         ).withColumn("l_shipdate", F.to_timestamp("l_shipdate")) \
          .write.parquet(os.path.join(td, "lineitem.parquet"))
-        out = copurchase_pagerank(spark, td, min_orders=2).collect()
+        monkeypatch.setattr(relational, "PAGERANK_MIN_ORDERS", 2)
+        out = copurchase_pagerank(spark, td).collect()
     assert out[0]["partkey"] == 1, "hub must rank first"
     assert out[0]["degree"] == 6
     spoke_ranks = {r["rank12"] for r in out[1:]}

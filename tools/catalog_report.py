@@ -6,13 +6,18 @@ and the first line of its docstring as a one-line description. Run
 after adding operators:
 
     python tools/catalog_report.py        # writes CATALOG.md
+
+tests/test_catalog_report.py fails when CATALOG.md differs from
+render().
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def first_line(fn) -> str:
@@ -24,7 +29,8 @@ def first_line(fn) -> str:
     return line[:160] + ("…" if len(line) > 160 else "")
 
 
-def main() -> None:
+def render() -> str:
+    """CATALOG.md's full text for the current registry."""
     from simpleetlpipeline_spark.plans import catalog
 
     lines = [
@@ -50,8 +56,14 @@ def main() -> None:
         gate = "oracle" if name in catalog.ORACLE_SQL else "rows-only"
         lines.append(f"| {i} | {name} | {mod} | {gate} | {first_line(fn)} |")
     lines.append("")
-    with open("/root/repo/CATALOG.md", "w") as fh:
-        fh.write("\n".join(lines))
+    return "\n".join(lines)
+
+
+def main() -> None:
+    from simpleetlpipeline_spark.plans import catalog
+
+    with open(os.path.join(ROOT, "CATALOG.md"), "w") as fh:
+        fh.write(render())
     print(f"wrote CATALOG.md ({len(catalog.QUERIES)} queries)")
 
 
