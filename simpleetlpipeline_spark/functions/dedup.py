@@ -29,7 +29,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.cache import shared, track
-from simpleetlpipeline_spark.io import fan_out, read_table
+from simpleetlpipeline_spark.io import driver_rows_df, fan_out, read_table
+from simpleetlpipeline_spark.operators.aggregates import ordered_pairs
 
 # MinHash parameters: 32 hash functions = 8 bands x 4 rows.
 # P(candidate | jaccard=s) = 1 - (1 - s^4)^8  — ~0.97 at s=0.8,
@@ -419,7 +420,7 @@ def band_candidates(sig: DataFrame,
     as a racing broadcast-thread job). Now the capped members
     aggregate into ONE sorted posting array per (band, bucket) —
     reusing the cap window's own hash partitioning, so no new
-    exchange — and pairs enumerate with nested array transforms
+    exchange — and pairs enumerate in-array with ordered_pairs
     (a < b by the sort). Same pair set, one signature pass, and the
     only wide ops left are the band-key exchange and the final
     distinct. The membership cap (see BUCKET_CAP) bounds both the
@@ -448,11 +449,8 @@ def band_candidates(sig: DataFrame,
         .agg(F.array_sort(F.collect_list("doc_id")).alias("m"))
         .filter(F.size("m") >= 2)
     )
-    pairs = F.flatten(F.transform(
-        F.col("m"),
-        lambda a, i: F.transform(
-            F.slice(F.col("m"), i + F.lit(2), F.size("m")),
-            lambda b: F.struct(a.alias("a_id"), b.alias("b_id")))))
+    pairs = ordered_pairs(
+        F.col("m"), lambda a, b: F.struct(a.alias("a_id"), b.alias("b_id")))
     return (
         members.select(F.explode(pairs).alias("p"))
         .select("p.a_id", "p.b_id")
@@ -519,15 +517,23 @@ def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "jaccard", F.lit(1.0))
     sig = docs.select("doc_id", "grams", minhash("grams").alias("sig"))
 
-    candidates = band_candidates(sig)
+    return _verified_pairs(band_candidates(sig), docs, star)
 
+
+def _verified_pairs(candidates: DataFrame, docs: DataFrame,
+                    star: DataFrame) -> DataFrame:
+    """The published near-dup pair graph of an LSH pipeline: each
+    (a_id, b_id) candidate verified by exact Jaccard over the
+    persisted (doc_id, grams) cache `docs`, floored at 4dp and kept
+    at >= JACCARD_THRESHOLD, plus the exact-duplicate `star` edges.
+
+    Materializing the pair graph eagerly (persist + count) lets the
+    corpus-sized gram cache be released immediately — the pair graph
+    is the only thing the consumers still need."""
     a = docs.select(F.col("doc_id").alias("a_id"), F.col("grams").alias("a_g"))
     b = docs.select(F.col("doc_id").alias("b_id"), F.col("grams").alias("b_g"))
     inter = F.size(F.array_intersect("a_g", "b_g"))
     union = F.size("a_g") + F.size("b_g") - inter
-    # Materializing the pair graph eagerly (persist + count) lets the
-    # corpus-sized gram cache be released immediately — the pair
-    # graph is the only thing the consumers still need.
     pairs = (
         candidates.join(a, "a_id").join(b, "b_id")
         .withColumn("jaccard", F.floor(inter / union * 10000) / 10000)
@@ -626,37 +632,17 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
              .alias("m"))
         .filter(F.size("m") >= 2)
     )
-    cand = F.flatten(F.transform(
-        F.col("m"),
-        lambda a, i: F.filter(
-            F.transform(
-                F.slice(F.col("m"), i + F.lit(2), F.size("m")),
-                lambda b: F.struct(
-                    a["doc_id"].alias("a_id"),
-                    b["doc_id"].alias("b_id"),
-                    F.bit_count(a["sh"].bitwiseXOR(b["sh"]))
-                    .alias("hd"))),
-            lambda p: p["hd"] <= F.lit(SIMHASH_MAX_HAMMING))))
+    cand = F.filter(
+        ordered_pairs(F.col("m"), lambda a, b: F.struct(
+            a["doc_id"].alias("a_id"), b["doc_id"].alias("b_id"),
+            F.bit_count(a["sh"].bitwiseXOR(b["sh"])).alias("hd"))),
+        lambda p: p["hd"] <= F.lit(SIMHASH_MAX_HAMMING))
     candidates = (
         members.select(F.explode(cand).alias("p"))
         .select("p.a_id", "p.b_id")
         .distinct()
     )
-    a = docs.select(F.col("doc_id").alias("a_id"), F.col("grams").alias("a_g"))
-    b = docs.select(F.col("doc_id").alias("b_id"), F.col("grams").alias("b_g"))
-    inter = F.size(F.array_intersect("a_g", "b_g"))
-    union = F.size("a_g") + F.size("b_g") - inter
-    pairs = track(
-        candidates.join(a, "a_id").join(b, "b_id")
-        .withColumn("jaccard", F.floor(inter / union * 10000) / 10000)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("a_id", "b_id", "jaccard")
-        .unionByName(star)
-        .persist()
-    )
-    pairs.count()
-    docs.unpersist()
-    return pairs
+    return track(_verified_pairs(candidates, docs, star))
 
 
 QUERIES = {
@@ -851,22 +837,10 @@ def connected_components(edges: DataFrame, a: str = "a_id",
                     parent[rd] = rs
                 else:
                     parent[rs] = rd
-        # Arrow re-entry (round 12, guide §4/§6): createDataFrame over
-        # a plain Python list takes the pickled-RDD path — the label
-        # table parallelized into one slice PER CORE and pushed through
-        # 32 Python-worker tasks (profiled: 1.56s of a 1.5s-total
-        # query for ~700 rows). A pandas frame rides the Arrow path:
-        # one batch, one partition, no Python workers.
-        import pandas as pd
-
-        spark = edges.sparkSession
         edges_p.unpersist()
-        nodes = list(parent)
-        out_pdf = pd.DataFrame(
-            {"node": pd.Series(nodes, dtype="int64"),
-             "component": pd.Series([find(n) for n in nodes],
-                                    dtype="int64")})
-        return spark.createDataFrame(out_pdf)
+        return driver_rows_df(edges.sparkSession,
+                              [(n, find(n)) for n in parent],
+                              "node bigint, component bigint")
 
     # Distributed regime: every propagation round joins against the
     # symmetric edge list, so IT carries the persist from here on
@@ -1059,16 +1033,11 @@ def _pairs_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sizes = (kg.select(F.explode("ids").alias("doc_id"))
              .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")))
-    # C(df,2) ordered pairs per posting list: for element i (0-based),
-    # pair it with every later element. ids is sorted, so a < b holds
+    # C(df,2) pairs per posting list; ids is sorted, so a < b holds
     # structurally.
-    pair_structs = F.flatten(F.transform(
-        "ids",
-        lambda a, i: F.transform(
-            F.slice("ids", i + 2, F.size("ids")),
-            lambda b: F.struct(a.alias("a_id"), b.alias("b_id")),
-        ),
-    ))
+    pair_structs = ordered_pairs(
+        F.col("ids"),
+        lambda a, b: F.struct(a.alias("a_id"), b.alias("b_id")))
     common = (
         kg.select(F.explode(pair_structs).alias("p"))
         .select("p.a_id", "p.b_id")
@@ -1330,13 +1299,9 @@ def dedup_shared_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("g")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
     )
-    pair_structs = F.flatten(F.transform(
-        "ids",
-        lambda a, i: F.transform(
-            F.slice("ids", i + 2, F.size("ids")),
-            lambda b: F.struct(a.alias("a_id"), b.alias("b_id")),
-        ),
-    ))
+    pair_structs = ordered_pairs(
+        F.col("ids"),
+        lambda a, b: F.struct(a.alias("a_id"), b.alias("b_id")))
     return (
         kg.select(F.explode(pair_structs).alias("p"))
         .select("p.a_id", "p.b_id")
@@ -1542,15 +1507,11 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .select(F.explode("ss").alias("source"))
                   .groupBy("source")
                   .agg(F.count(F.lit(1)).cast("long").alias("n")))
-    # all source_a < source_b pairs of each gram's source set,
-    # emitted array-side (sets are sorted, so slice-after-i pairs
-    # are exactly the ordered combinations)
-    pair_col = F.flatten(F.transform(
+    # all source_a < source_b pairs of each gram's (sorted) source
+    # set, emitted array-side
+    pair_col = ordered_pairs(
         F.col("ss"),
-        lambda x, i: F.transform(
-            F.slice(F.col("ss"), i + 2, F.size(F.col("ss"))),
-            lambda y: F.struct(x.alias("source_a"),
-                               y.alias("source_b")))))
+        lambda x, y: F.struct(x.alias("source_a"), y.alias("source_b")))
     shared = (gram_sources
               .select(F.explode(pair_col).alias("p"))
               .groupBy(F.col("p.source_a").alias("source_a"),
@@ -1677,37 +1638,17 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches_batch = (
         lambda p: (F.pmod(p["a_id"], F.lit(INCR_MOD)) == 0)
         | (F.pmod(p["b_id"], F.lit(INCR_MOD)) == 0))
-    cand = F.flatten(F.transform(
-        F.col("m"),
-        lambda a, i: F.filter(
-            F.transform(
-                F.slice(F.col("m"), i + F.lit(2), F.size("m")),
-                lambda b: F.struct(a.alias("a_id"), b.alias("b_id"))),
-            touches_batch)))
+    cand = F.filter(
+        ordered_pairs(F.col("m"),
+                      lambda a, b: F.struct(a.alias("a_id"), b.alias("b_id"))),
+        touches_batch)
     candidates = (
         members.select(F.explode(cand).alias("p"))
         .select("p.a_id", "p.b_id")
         .distinct())
-
-    a = docs.select(F.col("doc_id").alias("a_id"),
-                    F.col("grams").alias("a_g"))
-    b = docs.select(F.col("doc_id").alias("b_id"),
-                    F.col("grams").alias("b_g"))
-    inter = F.size(F.array_intersect("a_g", "b_g"))
-    union = F.size("a_g") + F.size("b_g") - inter
-    # same persist discipline as dedup_minhash_lsh: the small pair
-    # graph materializes eagerly so the corpus-sized gram/key caches
-    # release immediately; the registry owns the pair cache lifetime
-    pairs = track(
-        candidates.join(a, "a_id").join(b, "b_id")
-        .withColumn("jaccard", F.floor(inter / union * 10000) / 10000)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("a_id", "b_id", "jaccard")
-        .unionByName(star)
-        .persist())
-    pairs.count()
-    docs.unpersist()
-    return pairs
+    # same verify and persist discipline as dedup_minhash_lsh; the
+    # registry owns the pair cache lifetime
+    return track(_verified_pairs(candidates, docs, star))
 
 
 QUERIES["dedup_minhash_incremental"] = dedup_minhash_incremental

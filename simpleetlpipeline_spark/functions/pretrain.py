@@ -1391,6 +1391,35 @@ ORACLE_SQL["woe_encoding"] = f"""
 """
 
 
+def _ranked_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Customers scored by pre-WOE_CUTOFF spend, with their
+    post-cutoff repeat flag and their distributed spend rank: columns
+    o_custkey, spend, is_repeat (0/1), neg_spend, __r (rank by spend
+    desc, ties to custkey) and __n (customer count). The split scan
+    stays unpersisted (see gains_lift_table)."""
+    from simpleetlpipeline_spark.operators.aggregates import (
+        two_pass_global_window)
+
+    orders = (
+        read_table(spark, sf_dir, "orders")
+        .select("o_custkey", "o_totalprice",
+                (F.col("o_orderdate") < ts_lit(WOE_CUTOFF)).alias("is_pre")))
+    spend = (orders.filter("is_pre")
+             .groupBy("o_custkey")
+             .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+                  .alias("spend")))
+    repeat = (orders.filter(~F.col("is_pre"))
+              .select("o_custkey").distinct()
+              .withColumn("is_repeat", F.lit(1)))
+    scored = (spend.join(repeat, "o_custkey", "left")
+              .select("o_custkey", "spend",
+                      F.coalesce("is_repeat", F.lit(0)).alias("is_repeat"),
+                      (-F.col("spend")).alias("neg_spend")))
+    return two_pass_global_window(
+        scored, "neg_spend", [F.col("neg_spend"), F.col("o_custkey")],
+        rank_out="__r", total_rows_out="__n")
+
+
 def gains_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gains/lift table — the standard model-evaluation readout:
     customers are scored by pre-cutoff spend (the 'model'), cut into
@@ -1419,27 +1448,9 @@ def gains_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Persisting IS still right when the cached derivation is
     expensive (quality_bins' tokenized scores); a raw projected
     scan is cheaper to rescan than to cache-and-race."""
-    from simpleetlpipeline_spark.operators.aggregates import (
-        ntile_from_rank, two_pass_global_window)
+    from simpleetlpipeline_spark.operators.aggregates import ntile_from_rank
 
-    orders = (
-        read_table(spark, sf_dir, "orders")
-        .select("o_custkey", "o_totalprice",
-                (F.col("o_orderdate") < ts_lit(WOE_CUTOFF)).alias("is_pre")))
-    spend = (orders.filter("is_pre")
-             .groupBy("o_custkey")
-             .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                  .alias("spend")))
-    repeat = (orders.filter(~F.col("is_pre"))
-              .select("o_custkey").distinct()
-              .withColumn("is_repeat", F.lit(1)))
-    scored = (spend.join(repeat, "o_custkey", "left")
-              .select("o_custkey", "spend",
-                      F.coalesce("is_repeat", F.lit(0)).alias("is_repeat"),
-                      (-F.col("spend")).alias("neg_spend")))
-    ranked = two_pass_global_window(
-        scored, "neg_spend", [F.col("neg_spend"), F.col("o_custkey")],
-        rank_out="__r", total_rows_out="__n")
+    ranked = _ranked_customers(spark, sf_dir)
     deciled = ranked.select(
         "is_repeat",
         ntile_from_rank(F.col("__r"), F.col("__n"), GAINS_N_BINS)
@@ -1642,27 +1653,9 @@ def calibration_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own subqueries and was removed), two-pass distributed rank
     (never an unpartitioned window over the customer tier),
     ntile_from_rank deciles, one GAINS_N_BINS-row hash aggregate."""
-    from simpleetlpipeline_spark.operators.aggregates import (
-        ntile_from_rank, two_pass_global_window)
+    from simpleetlpipeline_spark.operators.aggregates import ntile_from_rank
 
-    orders = (
-        read_table(spark, sf_dir, "orders")
-        .select("o_custkey", "o_totalprice",
-                (F.col("o_orderdate") < ts_lit(WOE_CUTOFF)).alias("is_pre")))
-    spend = (orders.filter("is_pre")
-             .groupBy("o_custkey")
-             .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                  .alias("spend")))
-    repeat = (orders.filter(~F.col("is_pre"))
-              .select("o_custkey").distinct()
-              .withColumn("is_repeat", F.lit(1)))
-    scored = (spend.join(repeat, "o_custkey", "left")
-              .select("o_custkey", "spend",
-                      F.coalesce("is_repeat", F.lit(0)).alias("is_repeat"),
-                      (-F.col("spend")).alias("neg_spend")))
-    ranked = two_pass_global_window(
-        scored, "neg_spend", [F.col("neg_spend"), F.col("o_custkey")],
-        rank_out="__r", total_rows_out="__n")
+    ranked = _ranked_customers(spark, sf_dir)
     p_micro = F.expr("(__n - __r + 1) * 1000000 div __n")
     err = p_micro - F.col("is_repeat").cast("long") * F.lit(1_000_000)
     binned = ranked.select(

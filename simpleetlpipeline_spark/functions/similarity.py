@@ -39,6 +39,7 @@ from simpleetlpipeline_spark.cache import file_stamp, shared, track
 from simpleetlpipeline_spark.functions.dedup import (
     cap_bucket_members, collapse_exact_groups, star_pairs)
 from simpleetlpipeline_spark.io import driver_rows_df, fan_out, read_table
+from simpleetlpipeline_spark.operators.aggregates import ordered_pairs
 
 N_PROBES = 10          # probe set = vec_id < N_PROBES
 TOP_K = 10
@@ -424,11 +425,9 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("m") >= 2)
     )
     raw_pairs = (
-        members.select(F.explode(F.flatten(F.transform(
+        members.select(F.explode(ordered_pairs(
             F.col("m"),
-            lambda a, i: F.transform(
-                F.slice(F.col("m"), i + F.lit(2), F.size("m")),
-                lambda b: F.struct(a.alias("a_id"), b.alias("b_id")))))
+            lambda a, b: F.struct(a.alias("a_id"), b.alias("b_id")))
         ).alias("p"))
         .select("p.a_id", "p.b_id")
     )

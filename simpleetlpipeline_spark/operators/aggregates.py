@@ -157,6 +157,22 @@ def salted_topk(df: DataFrame, keys: list[str], order_by: list[Column],
     )
 
 
+def ordered_pairs(arr: Column, emit) -> Column:
+    """The flattened array of `emit(x, y)` for every element `x` of
+    `arr` and every element `y` after it — on a sorted distinct
+    posting list, exactly the C(n, 2) pairs with x < y, in order.
+
+    The pair fan-out of basket mining, LSH bucket candidates and
+    shared-gram scoring: pairs are emitted inside the row that holds
+    the posting list, so no self-join re-reads (or re-computes) the
+    list's source. Callers bound the fan-out by capping the list
+    before it is built (BASKET_CAP, BUCKET_CAP, DF_CAP)."""
+    return F.flatten(F.transform(
+        arr,
+        lambda x, i: F.transform(F.slice(arr, i + 2, F.size(arr)),
+                                 lambda y: emit(x, y))))
+
+
 def two_pass_global_window(df: DataFrame, key_col: str,
                            order_cols: list[Column] | None = None,
                            value_col: str | list[str] | None = None,

@@ -2586,6 +2586,32 @@ ORACLE_SQL["revenue_attribution"] = f"""
 """
 
 
+def _daily_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per order day: day (the _trend_day index), y (revenue
+    cents), prefix (running sum of y), d (1-based day rank), n (day
+    count), total (sum of y) and cusum_scaled = n*prefix - d*total,
+    the exact DECIMAL(38,0) n*CUSUM_d. A map-side-combined daily
+    rollup, then ordered windows over the tiny day table."""
+    daily = (
+        read_table(spark, sf_dir, "orders")
+        .select(_trend_day().alias("day"),
+                (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+                .cast("long").alias("cents"))
+        .groupBy("day").agg(F.sum("cents").alias("y"))
+    )
+    w_cum = (Window.orderBy("day")
+             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    w_all = Window.partitionBy()
+    t = (daily
+         .withColumn("prefix", F.sum("y").over(w_cum))
+         .withColumn("d", F.row_number().over(Window.orderBy("day")))
+         .withColumn("n", F.count(F.lit(1)).over(w_all))
+         .withColumn("total", F.sum("y").over(w_all)))
+    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+    return t.withColumn(
+        "cusum_scaled", d38("n") * d38("prefix") - d38("d") * d38("total"))
+
+
 def revenue_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM changepoint detection over daily order revenue: the day
     d maximizing |sum_{i<=d}(y_i - mean)| — the standard level-shift
@@ -2625,25 +2651,7 @@ def revenue_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is also the 100 TB-safe form: n*prefix exceeds int64 at
     ~1e16 total daily cents. See monthly_sales_retract's round-8
     note and tests/test_oracle_types.py for the catalog-wide ban."""
-    daily = (
-        read_table(spark, sf_dir, "orders")
-        .select(_trend_day().alias("day"),
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long").alias("cents"))
-        .groupBy("day").agg(F.sum("cents").alias("y"))
-    )
-    w_cum = (Window.orderBy("day")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_all = Window.partitionBy()
-    t = (daily
-         .withColumn("prefix", F.sum("y").over(w_cum))
-         .withColumn("d", F.row_number().over(Window.orderBy("day")))
-         .withColumn("n", F.count(F.lit(1)).over(w_all))
-         .withColumn("total", F.sum("y").over(w_all)))
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    scored = t.withColumn(
-        "cusum_scaled", d38("n") * d38("prefix") - d38("d") * d38("total"))
-    pick = (scored
+    pick = (_daily_cusum(spark, sf_dir)
             .orderBy(F.abs(F.col("cusum_scaled")).desc(), F.asc("day"))
             .limit(1))
     mean_before = (F.col("prefix").cast("double")
@@ -2710,25 +2718,7 @@ def cusum_daily_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
     row's non-BIGINT columns or the canonicalizer; if this reds, the
     prefix/rank layer itself diverges. All five output columns are
     exact integers identical by construction in both engines."""
-    daily = (
-        read_table(spark, sf_dir, "orders")
-        .select(_trend_day().alias("day"),
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long").alias("cents"))
-        .groupBy("day").agg(F.sum("cents").alias("y"))
-    )
-    w_cum = (Window.orderBy("day")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_all = Window.partitionBy()
-    t = (daily
-         .withColumn("prefix", F.sum("y").over(w_cum))
-         .withColumn("d", F.row_number().over(Window.orderBy("day")))
-         .withColumn("n", F.count(F.lit(1)).over(w_all))
-         .withColumn("total", F.sum("y").over(w_all)))
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    scored = t.withColumn(
-        "cusum_scaled", d38("n") * d38("prefix") - d38("d") * d38("total"))
-    return (scored
+    return (_daily_cusum(spark, sf_dir)
             .orderBy(F.abs(F.col("cusum_scaled")).desc(), F.asc("day"))
             .limit(5)
             .select(F.col("day").cast("long").alias("day"),

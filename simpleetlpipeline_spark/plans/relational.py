@@ -28,9 +28,9 @@ Scale notes (the 100 TB framing for each):
   = 21 pairs per order — linear in lineitem regardless of corpus
   size). The pair-count agg has map-side combine; top-N plans as
   TakeOrderedAndProject. The skew hazard of basket mining is giant
-  baskets, absent here by construction; for open-schema data apply a
-  per-basket distinct-item cap first (the DF_CAP analog used in
-  functions/dedup.py).
+  baskets, absent here by construction; for open-schema data the
+  per-basket distinct-item cap BASKET_CAP bounds it (the DF_CAP
+  analog used in functions/dedup.py).
 - latest_event_per_user: single hash agg, max over a (ts, id, ...)
   struct — the deterministic argmax (field-by-field struct ordering
   breaks ties by event_id), no window over raw events (a per-user
@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.io import read_table
+from simpleetlpipeline_spark.operators.aggregates import ordered_pairs
 from simpleetlpipeline_spark.operators.dates import (
     HOUR_US,
     label_of_month_start,
@@ -160,37 +161,42 @@ COPURCHASE_TOP_N = 100
 BASKET_CAP = 64
 
 
+def _basket_pairs(items: DataFrame, cap: bool) -> DataFrame:
+    """(pa, pb) rows: every a<b item pair of every basket, once per
+    basket. `items` is a two-column (basket key, item) frame.
+
+    Posting-list form (measured ~1.9x vs the orderkey self-join it
+    replaced): ONE shuffle builds the per-basket sorted distinct item
+    array (collect_set folds map-side) — with the BASKET_CAP slice
+    when `cap` — and pairs are emitted in-array by ordered_pairs (the
+    a<b guard is positional in the sorted basket). The self-join
+    version shuffled lineitem three times and re-joined it; this
+    moves each basket exactly once. Uncapped callers match their
+    oracle's a<b self-join exactly."""
+    key, item = items.columns
+    parts = F.sort_array(F.collect_set(item))
+    if cap:
+        parts = F.slice(parts, 1, BASKET_CAP)
+    return (
+        items.groupBy(key).agg(parts.alias("parts"))
+        .filter(F.size("parts") >= 2)
+        .select(F.explode(ordered_pairs(
+            F.col("parts"),
+            lambda x, y: F.struct(x.alias("pa"), y.alias("pb")))).alias("p"))
+        .select("p.pa", "p.pb")
+    )
+
+
 def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket pair mining: the top-N part pairs most often
     bought in the same order.
 
-    Posting-list form (measured ~1.9x vs the orderkey self-join it
-    replaced): ONE shuffle builds the per-order sorted distinct
-    basket (collect_set folds map-side), pairs are emitted once per
-    basket by array transforms (the a<b guard is positional — j>i in
-    the sorted array), then one pair-keyed count agg. The self-join
-    version shuffled lineitem three times and re-joined it; this
-    moves each basket exactly once."""
-    baskets = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.slice(F.sort_array(F.collect_set("l_partkey")),
-                     1, BASKET_CAP).alias("parts"))
-        .filter(F.size("parts") >= 2)
-    )
-    pairs = F.flatten(F.transform(
-        F.col("parts"),
-        lambda x, i: F.transform(
-            F.slice(F.col("parts"), i + 2,
-                    F.greatest(F.size("parts") - i - 1, F.lit(0))),
-            lambda y: F.struct(x.alias("part_a"), y.alias("part_b")),
-        ),
-    ))
+    The capped _basket_pairs of each order (one basket shuffle), then
+    one pair-keyed count agg."""
     return (
-        baskets.select(F.explode(pairs).alias("p"))
-        .select("p.part_a", "p.part_b")
-        .groupBy("part_a", "part_b")
+        _basket_pairs(read_table(spark, sf_dir, "lineitem")
+                      .select("l_orderkey", "l_partkey"), cap=True)
+        .groupBy(F.col("pa").alias("part_a"), F.col("pb").alias("part_b"))
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .orderBy(F.desc("n_orders"), F.asc("part_a"), F.asc("part_b"))
         .limit(COPURCHASE_TOP_N)
@@ -883,7 +889,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the per-iteration shuffle is |edges| (contributions) +
     |nodes| (sums) — linear, never materializing anything quadratic.
     The basket pair fan-out is C(basket,2) with TPC-H baskets <= 7;
-    open-schema data would add copurchase_pairs' BASKET_CAP slice
+    open-schema data would add _basket_pairs' BASKET_CAP slice
     (omitted here so the oracle's a<b self-join semantics hold
     exactly). Skewed hub
     nodes (huge in-degree) are the classic hazard: the sum agg
@@ -892,26 +898,9 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from simpleetlpipeline_spark.cache import track
 
-    # Posting-list pair build (same shape as copurchase_pairs: one
-    # basket shuffle instead of a three-way self-join; a<b is
-    # positional in the sorted basket, matching the oracle's a<b).
-    baskets = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") >= 2)
-    )
-    pair_structs = F.flatten(F.transform(
-        F.col("parts"),
-        lambda x, i: F.transform(
-            F.slice(F.col("parts"), i + 2,
-                    F.greatest(F.size("parts") - i - 1, F.lit(0))),
-            lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-        ),
-    ))
-    pairs = (baskets.select(F.explode(pair_structs).alias("p"))
-             .select("p.pa", "p.pb")
+    # uncapped _basket_pairs: the oracle's a<b self-join exactly
+    pairs = (_basket_pairs(read_table(spark, sf_dir, "lineitem")
+                           .select("l_orderkey", "l_partkey"), cap=False)
              .groupBy("pa", "pb")
              .agg(F.count(F.lit(1)).alias("n"))
              .filter(F.col("n") >= PAGERANK_MIN_ORDERS))
@@ -922,7 +911,10 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = track(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")).persist())
     n_nodes = deg.count()  # one scalar to the driver, like kmeans' k
-    base = _PR_UNIT // n_nodes
+    # no pair reaching PAGERANK_MIN_ORDERS leaves every frame below
+    # empty, so the ranking is empty too (the oracle's r0 over an
+    # empty deg) — the base only has to avoid dividing by zero
+    base = _PR_UNIT // max(n_nodes, 1)
     teleport = (100 - _PR_DAMP_NUM) * base // 100
 
     ranks = deg.select(F.col("src").alias("node"),
@@ -1351,6 +1343,16 @@ CF_MIN_ORDERS = 3
 CF_TOP_N = 50
 
 
+def _item_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(l_partkey, n_orders): the number of distinct orders holding
+    each part — the item-popularity side of the pair scores."""
+    return (
+        read_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey").distinct()
+        .groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).alias("n_orders")))
+
+
 def item_cooccurrence_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item collaborative filtering over the basket graph: the
     top part pairs by cosine association n_ab / sqrt(n_a * n_b) —
@@ -1359,38 +1361,19 @@ def item_cooccurrence_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     step from copurchase_pairs' raw counts to a usable 'customers
     also bought' score).
 
-    Shape: the posting-list pair build (one basket shuffle), one
+    Shape: the _basket_pairs build (one basket shuffle), one
     per-item order-count aggregate joined twice onto the
     |pairs|-sized frame (at 100 TB the item-count table is
     catalog-sized — broadcast), top-N as TakeOrderedAndProject.
     All inputs to the score are exact integers; sqrt/divide is a
     fixed IEEE chain floored at 4dp, ties to the (a, b) key."""
-    baskets = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") >= 2)
-    )
-    pair_structs = F.flatten(F.transform(
-        F.col("parts"),
-        lambda x, i: F.transform(
-            F.slice(F.col("parts"), i + 2,
-                    F.greatest(F.size("parts") - i - 1, F.lit(0))),
-            lambda y: F.struct(x.alias("part_a"), y.alias("part_b")),
-        ),
-    ))
-    pairs = (baskets.select(F.explode(pair_structs).alias("p"))
-             .select("p.part_a", "p.part_b")
-             .groupBy("part_a", "part_b")
+    pairs = (_basket_pairs(read_table(spark, sf_dir, "lineitem")
+                           .select("l_orderkey", "l_partkey"), cap=False)
+             .groupBy(F.col("pa").alias("part_a"),
+                      F.col("pb").alias("part_b"))
              .agg(F.count(F.lit(1)).alias("n_ab"))
              .filter(F.col("n_ab") >= CF_MIN_ORDERS))
-    item_counts = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey").distinct()
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
+    item_counts = _item_order_counts(spark, sf_dir)
     # Although the two broadcast subtrees are written twice, AQE's
     # runtime stage reuse canonicalizes them to one BroadcastExchange
     # (verified round 12: executed final plan carries ReusedExchange;
@@ -1455,7 +1438,7 @@ def basket_lift_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All ratio inputs are exact integers; confidence and lift are
     fixed IEEE chains floored at 4dp, ties broken on the rule key.
-    Shape: one basket shuffle (posting-list pairs), the item-count
+    Shape: one basket shuffle (_basket_pairs), the item-count
     table broadcast onto the pair frame twice, top-N as
     TakeOrderedAndProject.
 
@@ -1468,27 +1451,12 @@ def basket_lift_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the basket shuffle ran up to 4x instead of 1x. Independent
     cheap columnar scans for the broadcast sides beat a shared
     cache that every broadcast job rebuilds; reverted."""
-    baskets = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") >= 2)
-    )
     n_baskets_row = (
         read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey").distinct()
         .agg(F.count(F.lit(1)).alias("__n")))
-    pair_structs = F.flatten(F.transform(
-        F.col("parts"),
-        lambda x, i: F.transform(
-            F.slice(F.col("parts"), i + 2,
-                    F.greatest(F.size("parts") - i - 1, F.lit(0))),
-            lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-        ),
-    ))
-    pairs = (baskets.select(F.explode(pair_structs).alias("p"))
-             .select("p.pa", "p.pb")
+    pairs = (_basket_pairs(read_table(spark, sf_dir, "lineitem")
+                           .select("l_orderkey", "l_partkey"), cap=False)
              .groupBy("pa", "pb")
              .agg(F.count(F.lit(1)).alias("n_ab"))
              .filter(F.col("n_ab") >= RULES_MIN_ORDERS))
@@ -1506,11 +1474,7 @@ def basket_lift_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct(F.col("pb").alias("antecedent"),
                  F.col("pa").alias("consequent"), F.col("n_ab")),
     )).alias("r")).select("r.antecedent", "r.consequent", "r.n_ab"))
-    item_counts = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey").distinct()
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("n_orders")))
+    item_counts = _item_order_counts(spark, sf_dir)
     # Written as two broadcasts, executed as one: AQE runtime stage
     # reuse (see item_cooccurrence_cf).
     ca = F.broadcast(item_counts.select(
@@ -1576,12 +1540,11 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph-cohesion score recommender pipelines track as baskets
     evolve.
 
-    Edges are support-thresholded copurchase pairs (same posting-
-    list derivation as copurchase_pairs — one basket shuffle, a<b
-    canonical, BASKET_CAP bounding any hot order), persisted once
-    and reused by all three hops. Triangles enumerate each exactly
-    once via the ordering a<b<c: wedge join on the middle vertex,
-    closure join on (a, c). At 100 TB the standard hardening is
+    Edges are support-thresholded copurchase pairs (_basket_pairs —
+    one basket shuffle, a<b canonical, BASKET_CAP bounding any hot
+    order), persisted once and reused by all three hops. Triangles
+    enumerate each exactly once via the ordering a<b<c: wedge join on
+    the middle vertex, closure join on (a, c). At 100 TB the standard hardening is
     degree-ordered orientation before the wedge join (bounds
     per-vertex fan-out by arboricity); the support threshold plays
     that role at catalog scale. Every count is integer-exact; the
@@ -1589,25 +1552,9 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic in both engines)."""
     from simpleetlpipeline_spark.cache import track
 
-    baskets = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.slice(F.sort_array(F.collect_set("l_partkey")),
-                     1, BASKET_CAP).alias("parts"))
-        .filter(F.size("parts") >= 2)
-    )
-    pair_structs = F.flatten(F.transform(
-        F.col("parts"),
-        lambda x, i: F.transform(
-            F.slice(F.col("parts"), i + 2,
-                    F.greatest(F.size("parts") - i - 1, F.lit(0))),
-            lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-        ),
-    ))
     edges = track(
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.pa", "p.pb")
+        _basket_pairs(read_table(spark, sf_dir, "lineitem")
+                      .select("l_orderkey", "l_partkey"), cap=True)
         .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("__n"))
         .filter(F.col("__n") >= TRI_MIN_SUPPORT)
@@ -1735,15 +1682,8 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_oi = (all_items.filter(~F.col("is_train"))
                .select("o_custkey", "l_partkey").distinct())
 
-    train_baskets = (
-        train_items
-        .select("o_orderkey", "l_partkey")
-        .groupBy("o_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .filter(F.size("parts") >= 2)
-    )
-    # emit each unordered co-purchase pair ONCE (the basket arrays
-    # are sorted, so x<y enumerates each pair exactly once), fold the
+    # emit each unordered co-purchase pair ONCE (uncapped
+    # _basket_pairs, the oracle's a<b self-join), fold the
     # map-side-combined count on the half pairs, PERSIST that tiny
     # aggregate, then mirror it — counts are symmetric. Round 8
     # emitted both directions inside the explode to keep a single
@@ -1751,17 +1691,9 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle (worst linear ratio 7.69), and mirroring the persisted
     # |distinct pairs| aggregate costs a union of counted rows, not a
     # second explode.
-    pair_structs = F.flatten(F.transform(
-        F.col("parts"),
-        lambda x, i: F.transform(
-            F.slice(F.col("parts"), i + 2,
-                    F.greatest(F.size("parts") - i - 1, F.lit(0))),
-            lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-        ),
-    ))
     assoc_half = track(
-        train_baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.pa", "p.pb")
+        _basket_pairs(train_items.select("o_orderkey", "l_partkey"),
+                      cap=False)
         .groupBy("pa", "pb").agg(F.count(F.lit(1)).alias("n_ab"))
         .persist())
     assoc = assoc_half.unionAll(
@@ -2081,44 +2013,28 @@ ORACLE_SQL["customer_retention_set_ops"] = f"""
 
 
 def _sym_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetrized distinct copurchase edge list (a, b): the
-    copurchase_pairs posting-list contract (per-order sorted distinct
-    basket, BASKET_CAP slice, positional a<b pairs — one basket
-    shuffle, no orderkey self-join), with BOTH directions emitted
-    from the basket array itself (each positional a<b pair is
-    mirrored in-array before the explode). Round-12 rewrite
-    (optimization guide §2.4): the previous edges.union(swapped)
-    form duplicated the ENTIRE basket-build subtree — Catalyst
-    cannot share a subtree across union branches, so the basket
-    shuffle and pair distinct ran twice to build the cache.
-    Emitting the mirror pairs before the single distinct leaves one
-    basket shuffle + one distinct (plan: 2 scans/4 exchanges -> 1
-    scan/2 exchanges), and a<b-distinct ⟺ symmetric-distinct is a
-    bijection, so the edge SET is unchanged. Persisted
-    (cache.track-owned) since every graph consumer reads it more
-    than once."""
+    """Symmetrized distinct copurchase edge list (a, b): the capped
+    _basket_pairs of each order (one basket shuffle, no orderkey
+    self-join), with each a<b pair mirrored by an in-row explode
+    before the single distinct. Round-12 rewrite (optimization guide
+    §2.4): the previous edges.union(swapped) form duplicated the
+    ENTIRE basket-build subtree — Catalyst cannot share a subtree
+    across union branches, so the basket shuffle and pair distinct
+    ran twice to build the cache. Emitting the mirror pairs before
+    the single distinct leaves one basket shuffle + one distinct
+    (plan: 2 scans/4 exchanges -> 1 scan/2 exchanges), and
+    a<b-distinct ⟺ symmetric-distinct is a bijection, so the edge
+    SET is unchanged. Persisted (cache.track-owned) since every
+    graph consumer reads it more than once."""
     from simpleetlpipeline_spark.cache import track
 
-    baskets = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.slice(F.sort_array(F.collect_set("l_partkey")),
-                     1, BASKET_CAP).alias("parts"))
-        .filter(F.size("parts") >= 2)
-    )
-    fwd = F.flatten(F.transform(
-        F.col("parts"),
-        lambda x, i: F.transform(
-            F.slice(F.col("parts"), i + 2,
-                    F.greatest(F.size("parts") - i - 1, F.lit(0))),
-            lambda y: F.struct(x.alias("a"), y.alias("b")),
-        ),
-    ))
-    both = F.concat(fwd, F.transform(
-        fwd, lambda p: F.struct(p["b"].alias("a"), p["a"].alias("b"))))
-    sym = (baskets.select(F.explode(both).alias("e"))
-           .select(F.col("e.a").alias("a"), F.col("e.b").alias("b"))
+    sym = (_basket_pairs(read_table(spark, sf_dir, "lineitem")
+                         .select("l_orderkey", "l_partkey"), cap=True)
+           .select(F.explode(F.array(
+               F.struct(F.col("pa").alias("a"), F.col("pb").alias("b")),
+               F.struct(F.col("pb").alias("a"), F.col("pa").alias("b")),
+           )).alias("e"))
+           .select("e.a", "e.b")
            .distinct())
     return track(sym.persist())
 
@@ -2131,10 +2047,9 @@ def copurchase_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist); unrolled as per-hop semi/anti joins, the shape an
     iterative BFS takes on any cluster.
 
-    Edges reuse the copurchase_pairs posting-list contract (per-order
-    sorted distinct basket, BASKET_CAP slice, positional a<b pairs —
-    one basket shuffle, no orderkey self-join), symmetrized by a
-    cheap union. The hub is the max-degree vertex (ties -> min
+    Edges are the shared _sym_copurchase_edges (capped _basket_pairs
+    — one basket shuffle, no orderkey self-join — mirrored in-row
+    before one distinct). The hub is the max-degree vertex (ties -> min
     partkey), selected as a ONE-ROW broadcast join — no collect.
 
     Round-12 rewrite (optimization guide §2.4 — remove shuffles
@@ -2365,8 +2280,9 @@ def brand_triple_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE basket shuffle builds the per-order sorted distinct brand
     array (collect_set dedupes inside the aggregate, so no separate
     distinct pass), persisted once; pairs and triples then
-    enumerate IN-ARRAY (nested positional transforms — the
-    copurchase_pairs posting-list trick lifted to level 3) as
+    enumerate IN-ARRAY (ordered_pairs, the triples extending each
+    pair by the later elements — the posting-list trick lifted to
+    level 3) as
     narrow maps over the cached baskets, each followed by one hash
     agg over the <=|brands|^3 candidate space. The previous form
     shuffled the (order, brand) item table three times through a
@@ -2391,22 +2307,16 @@ def brand_triple_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_baskets = baskets.agg(F.count(F.lit(1)).alias("__nb"))
     min_sup = F.greatest(
         F.lit(2), F.expr(f"__nb * {TRIPLE_SUPPORT_MILLI} div 1000"))
-    bs, n = F.col("bs"), F.size("bs")
-    rest = lambda i: F.slice(  # noqa: E731 — elements after 0-based i
-        bs, i + 2, F.greatest(n - i - 1, F.lit(0)))
-    pair_structs = F.flatten(F.transform(
-        bs, lambda x, i: F.transform(
-            rest(i), lambda y: F.struct(x.alias("brand_a"),
-                                        y.alias("brand_b")))))
-    triple_structs = F.flatten(F.transform(
-        bs, lambda x, i: F.flatten(F.transform(
-            rest(i), lambda y, j: F.transform(
-                # y sits at 0-based index i+1+j; take everything after
-                F.slice(bs, i + j + 3,
-                        F.greatest(n - i - j - 2, F.lit(0))),
-                lambda z: F.struct(x.alias("brand_a"),
-                                   y.alias("brand_b"),
-                                   z.alias("brand_c")))))))
+    bs = F.col("bs")
+    pair_structs = ordered_pairs(
+        bs, lambda x, y: F.struct(x.alias("brand_a"), y.alias("brand_b")))
+    # each pair (x, y) extends by every z after y — in a sorted
+    # distinct array, exactly the elements greater than y
+    triple_structs = F.flatten(ordered_pairs(
+        bs, lambda x, y: F.transform(
+            F.filter(bs, lambda z: z > y),
+            lambda z: F.struct(x.alias("brand_a"), y.alias("brand_b"),
+                               z.alias("brand_c")))))
     triples = (
         baskets.select(F.explode(triple_structs).alias("t"))
         .select("t.brand_a", "t.brand_b", "t.brand_c")

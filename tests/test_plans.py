@@ -649,6 +649,33 @@ def test_salted_topk_identity_and_two_stage_plan(spark):
             == sorted(map(tuple, want.select(*got.columns).collect())))
 
 
+def test_ordered_pairs_emits_each_later_element_once(spark):
+    """ordered_pairs on sorted arrays of size 0, 1, 2 and 4 gives
+    exactly the C(n,2) a<b pairs in order, for scalar and struct
+    elements (emit sees the elements themselves)."""
+    from itertools import combinations
+
+    from simpleetlpipeline_spark.operators.aggregates import ordered_pairs
+
+    arrays = [[], [7], [3, 9], [1, 2, 5, 8]]
+    df = spark.createDataFrame([(i, a) for i, a in enumerate(arrays)],
+                               "id int, arr array<int>")
+    scalar = ordered_pairs(
+        F.col("arr"), lambda x, y: F.struct(x.alias("a"), y.alias("b")))
+    structs = F.transform("arr", lambda v: F.struct(
+        v.alias("v"), (v * 10).alias("w")))
+    nested = ordered_pairs(structs, lambda x, y: F.struct(
+        x["v"].alias("a"), y["w"].alias("bw")))
+    rows = df.select("id", scalar.alias("p"), nested.alias("q")) \
+        .orderBy("id").collect()
+    for arr, row in zip(arrays, rows):
+        want = list(combinations(arr, 2))
+        assert len(want) == len(arr) * (len(arr) - 1) // 2
+        assert [(p["a"], p["b"]) for p in row["p"]] == want
+        assert [(q["a"], q["bw"]) for q in row["q"]] == \
+            [(a, b * 10) for a, b in want]
+
+
 def test_cdc_latest_state_plan_argmax_folds_no_window(spark, sf_dir):
     """CDC compaction must plan as a map-side-folding argmax hash
     aggregate — a per-key window would sort the whole change log."""

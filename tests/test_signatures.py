@@ -50,3 +50,46 @@ def test_spark_sf_dir_functions_take_no_tuning_parameters():
                           for p in rest if (node.name, p) not in ALLOWED]
     assert not extra, "tuning parameters on (spark, sf_dir) functions:\n" \
         + "\n".join(extra)
+
+
+def _is_plus_two(node) -> bool:
+    """`<name> + 2` or `<name> + F.lit(2)`: the 1-based start of the
+    elements after 0-based index <name>."""
+    if not (isinstance(node, ast.BinOp) and isinstance(node.op, ast.Add)
+            and isinstance(node.left, ast.Name)):
+        return False
+    r = node.right
+    if isinstance(r, ast.Call) and len(r.args) == 1:
+        r = r.args[0]
+    return isinstance(r, ast.Constant) and r.value == 2
+
+
+def test_pairs_within_an_array_enumerate_only_in_ordered_pairs():
+    """One pair enumerator: `F.slice(arr, i + 2, ...)` — the elements
+    after the i-th — appears only inside
+    operators.aggregates.ordered_pairs; every a<b posting-list
+    expansion calls it instead of writing the nested transforms."""
+    sites = []
+    for dirpath, _, files in os.walk(PKG):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            allowed = {
+                id(n) for f in ast.walk(tree)
+                if isinstance(f, ast.FunctionDef)
+                and f.name == "ordered_pairs"
+                for n in ast.walk(f)}
+            for node in ast.walk(tree):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "slice"
+                        and len(node.args) >= 2
+                        and _is_plus_two(node.args[1])
+                        and id(node) not in allowed):
+                    rel = os.path.relpath(path, PKG)
+                    sites.append(f"{rel}:{node.lineno}")
+    assert not sites, "hand-written pair expansions (use ordered_pairs):\n" \
+        + "\n".join(sites)

@@ -134,7 +134,14 @@ def test_copurchase_pagerank_hub_ranks_first(spark, monkeypatch):
         ).withColumn("l_shipdate", F.to_timestamp("l_shipdate")) \
          .write.parquet(os.path.join(td, "lineitem.parquet"))
         monkeypatch.setattr(relational, "PAGERANK_MIN_ORDERS", 2)
-        out = copurchase_pagerank(spark, td).collect()
+        df = copurchase_pagerank(spark, td)
+        out = df.collect()
+        # every star pair occurs in exactly 2 orders: at 3 no edge
+        # survives, and the ranking is empty with the same columns
+        monkeypatch.setattr(relational, "PAGERANK_MIN_ORDERS", 3)
+        empty = copurchase_pagerank(spark, td)
+        assert empty.collect() == []
+        assert empty.schema == df.schema
     assert out[0]["partkey"] == 1, "hub must rank first"
     assert out[0]["degree"] == 6
     spoke_ranks = {r["rank12"] for r in out[1:]}
