@@ -407,8 +407,34 @@ def star_pairs(df: DataFrame, groups: DataFrame, id_col: str,
     )
 
 
-def band_candidates(sig: DataFrame,
-                    bucket_cap: int = BUCKET_CAP) -> DataFrame:
+def _band_postings(sig: DataFrame) -> DataFrame:
+    """The MinHash banding both LSH runs share: each signature's
+    MINHASH_BANDS (band, bucket) keys, bucket membership capped at
+    BUCKET_CAP, then one sorted posting array `m` per (band, bucket)
+    with at least two members. dedup_minhash_incremental's recall
+    equivalence with dedup_minhash_lsh rests on both calling this."""
+    bands = sig.select(
+        "doc_id",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(F.concat_ws(
+                    ",", *[F.element_at("sig", b * MINHASH_ROWS + r + 1)
+                           for r in range(MINHASH_ROWS)])).alias("bucket"),
+            )
+            for b in range(MINHASH_BANDS)
+        ])).alias("bb"),
+    ).select("doc_id", "bb.band", "bb.bucket")
+    bands = cap_bucket_members(bands, ["band", "bucket"], "doc_id",
+                               BUCKET_CAP)
+    return (
+        bands.groupBy("band", "bucket")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("m"))
+        .filter(F.size("m") >= 2)
+    )
+
+
+def band_candidates(sig: DataFrame) -> DataFrame:
     """Candidate pairs from banded LSH: explode each signature into
     (band, bucket) keys, cap bucket membership, enumerate pairs
     IN-ARRAY per bucket posting list, distinct pairs.
@@ -425,34 +451,14 @@ def band_candidates(sig: DataFrame,
     only wide ops left are the band-key exchange and the final
     distinct. The membership cap (see BUCKET_CAP) bounds both the
     posting array (spill-safe: the window caps BEFORE the collect,
-    so no aggregation buffer ever holds more than bucket_cap ids)
-    and the per-bucket fan-out at C(bucket_cap, 2), so a
+    so no aggregation buffer ever holds more than BUCKET_CAP ids)
+    and the per-bucket fan-out at C(BUCKET_CAP, 2), so a
     near-identical flood cannot go quadratic on one reducer.
     """
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.concat_ws(
-                    ",", *[F.element_at("sig", b * MINHASH_ROWS + r + 1)
-                           for r in range(MINHASH_ROWS)])).alias("bucket"),
-            )
-            for b in range(MINHASH_BANDS)
-        ])).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-
-    bands = cap_bucket_members(bands, ["band", "bucket"], "doc_id",
-                               bucket_cap)
-    members = (
-        bands.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("m"))
-        .filter(F.size("m") >= 2)
-    )
     pairs = ordered_pairs(
         F.col("m"), lambda a, b: F.struct(a.alias("a_id"), b.alias("b_id")))
     return (
-        members.select(F.explode(pairs).alias("p"))
+        _band_postings(sig).select(F.explode(pairs).alias("p"))
         .select("p.a_id", "p.b_id")
         .distinct()
     )
@@ -1607,34 +1613,13 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     | (F.pmod("b_id", F.lit(INCR_MOD)) == 0)))
     sig = docs.select("doc_id", "grams", minhash("grams").alias("sig"))
 
-    # same banding + SAME capping universe as the full run, so the
-    # incremental candidate set is exactly the full set's batch slice
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.concat_ws(
-                    ",", *[F.element_at("sig", b * MINHASH_ROWS + r + 1)
-                           for r in range(MINHASH_ROWS)])).alias("bucket"),
-            )
-            for b in range(MINHASH_BANDS)
-        ])).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    bands = cap_bucket_members(bands, ["band", "bucket"], "doc_id",
-                               BUCKET_CAP)
-    # Round 12: in-array pair enumeration over per-bucket posting
-    # lists replaces the probe-x-index self-join (see
-    # band_candidates), with the batch restriction applied INSIDE
-    # the array — pairs touching no batch doc are dropped before
-    # they ever become rows, so the distinct shuffle still carries
-    # only the incremental slice. The bands persist went with the
-    # join: the posting aggregate is the single consumer.
-    members = (
-        bands.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("m"))
-        .filter(F.size("m") >= 2)
-    )
+    # Round 12: in-array pair enumeration over the SAME per-bucket
+    # posting lists as the full run (_band_postings: same banding,
+    # same capping universe, so the incremental candidate set is
+    # exactly the full set's batch slice), with the batch
+    # restriction applied INSIDE the array — pairs touching no batch
+    # doc are dropped before they ever become rows, so the distinct
+    # shuffle carries only the incremental slice.
     touches_batch = (
         lambda p: (F.pmod(p["a_id"], F.lit(INCR_MOD)) == 0)
         | (F.pmod(p["b_id"], F.lit(INCR_MOD)) == 0))
@@ -1643,7 +1628,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                       lambda a, b: F.struct(a.alias("a_id"), b.alias("b_id"))),
         touches_batch)
     candidates = (
-        members.select(F.explode(cand).alias("p"))
+        _band_postings(sig).select(F.explode(cand).alias("p"))
         .select("p.a_id", "p.b_id")
         .distinct())
     # same verify and persist discipline as dedup_minhash_lsh; the

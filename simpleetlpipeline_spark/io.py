@@ -492,6 +492,32 @@ def driver_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(pdf, schema)
 
 
+def scratch_rows_df(spark: SparkSession, prefix: str, build,
+                    schema=None) -> DataFrame:
+    """Run `build(root)` in a fresh scratch directory and return its
+    small result through driver_rows_df, so the directory can go
+    before the caller returns. The directory is removed in `finally`:
+    a build that raises leaks nothing. This is the one protocol of
+    the catalog entries that exercise a write path in a throwaway
+    warehouse (repeated bench/driver runs would otherwise accumulate
+    scratch dirs).
+
+    `build` returns a DataFrame over the scratch data (collected here,
+    before the removal), or row tuples when `schema` is given.
+    """
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        out = build(root)
+        rows, schema = ((out.collect(), out.schema) if schema is None
+                        else (out, schema))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return driver_rows_df(spark, rows, schema)
+
+
 def append_table(df: DataFrame, table_path: str) -> None:
     """Relational-table append sink (S3; reference main.py:501-558).
 

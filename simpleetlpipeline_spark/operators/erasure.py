@@ -21,8 +21,6 @@ aggregates (sanctioned driver collects).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +35,7 @@ from pyspark.sql.types import (
 from simpleetlpipeline_spark.io import (
     read_table,
     read_table_version,
+    scratch_rows_df,
     write_table_version,
 )
 
@@ -71,8 +70,7 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     report counts READ BACK FROM THE WAREHOUSE (the audit must
     reflect what readers actually see, not what the input implied).
     The throwaway root is removed after the counts materialize, so
-    the returned frame is a local literal row (etl_pipeline_run's
-    contract).
+    the returned frame is a local literal row (io.scratch_rows_df).
 
     Executes at construction by design (same exemption class as
     etl_pipeline_run in the no-collect plan contract)."""
@@ -81,10 +79,10 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.count(F.lit(1)).alias("n"))
               .orderBy(F.desc("n"), F.asc("user_id")).limit(1)
               .select("user_id"))
-    root = tempfile.mkdtemp(prefix="spark_graft_erasure_")
-    try:
-        write_table_version(events, os.path.join(root, "events"))
+
+    def build(root: str) -> list[tuple]:
         table_root = os.path.join(root, "events")
+        write_table_version(events, table_root)
         schema = events.schema
         rows_before = read_table_version(
             spark, table_root, schema=schema).count()
@@ -92,14 +90,11 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         erase_user(spark, table_root, "user_id", target, schema=schema)
         rows_after = read_table_version(
             spark, table_root, schema=schema).count()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    from simpleetlpipeline_spark.io import driver_rows_df
+        return [("events", int(target_id), rows_before,
+                 rows_before - rows_after, rows_after, 1, 2)]
 
-    return driver_rows_df(
-        spark,
-        [("events", int(target_id), rows_before,
-          rows_before - rows_after, rows_after, 1, 2)], AUDIT_SCHEMA)
+    return scratch_rows_df(spark, "spark_graft_erasure_", build,
+                           AUDIT_SCHEMA)
 
 
 QUERIES = {"user_erasure_audit": user_erasure_audit}

@@ -33,9 +33,9 @@ from pyspark.sql import functions as F
 
 from simpleetlpipeline_spark.io import (
     append_table,
-    driver_rows_df,
     read_csv,
     read_table_version,
+    scratch_rows_df,
     write_table_version,
 )
 from simpleetlpipeline_spark.operators.joins import rollup_update
@@ -403,12 +403,9 @@ def etl_pipeline_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest (test_metadata_lineage) and the S8 parity goldens.
     """
     import re
-    import tempfile
 
-    td = tempfile.mkdtemp(prefix="etl_run_")
     _ensure_etl_src_parent()
     src = ETL_ORACLE_SRC_DIR
-    cfg = ETLConfig(warehouse_dir=os.path.join(td, "wh"))
 
     # Scale the synthetic volume with the requested sf so the bench
     # measures data throughput, not fixed job-scheduling overhead
@@ -416,30 +413,28 @@ def etl_pipeline_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders, ~450k items).
     m = re.search(r"sf([0-9.]+)", sf_dir or "")
     scale = max(float(m.group(1)) / 0.001, 0.2) if m else 1.0
-    metrics = run_generated_pipeline(
-        spark, src, cfg,
-        n_customers=int(2000 * scale), n_products=int(500 * scale),
-        n_orders=int(1500 * scale))
-    global LAST_RUN_METRICS
-    LAST_RUN_METRICS = metrics
-    if metrics.failed_tables:
-        raise RuntimeError(f"pipeline failures: {metrics.errors}")
-    # Declared schema: skips the footer-inference job on the freshly
-    # written lineage dir (same reasoning as load_table's re-read).
-    meta = spark.read.schema(ETL_METADATA).parquet(
-        os.path.join(cfg.warehouse_dir, "etl_metadata"))
-    out = meta.select(
-        "table_name", "records_processed", "records_inserted",
-        "records_failed", "data_quality_score")
-    # The lineage result is one row per table; materialize it so the
-    # throwaway warehouse can be deleted (repeated bench/driver runs
-    # otherwise accumulate scratch dirs in /tmp), and re-enter it
-    # through the shared Arrow path.
-    import shutil
 
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(td, ignore_errors=True)
-    return driver_rows_df(spark, rows, schema)
+    def build(td: str) -> DataFrame:
+        global LAST_RUN_METRICS
+        cfg = ETLConfig(warehouse_dir=os.path.join(td, "wh"))
+        metrics = run_generated_pipeline(
+            spark, src, cfg,
+            n_customers=int(2000 * scale), n_products=int(500 * scale),
+            n_orders=int(1500 * scale))
+        LAST_RUN_METRICS = metrics
+        if metrics.failed_tables:
+            raise RuntimeError(f"pipeline failures: {metrics.errors}")
+        # Declared schema: skips the footer-inference job on the
+        # freshly written lineage dir (same reasoning as load_table's
+        # re-read). One row per table, so it re-enters through the
+        # scratch-result path and the warehouse can be deleted.
+        meta = spark.read.schema(ETL_METADATA).parquet(
+            os.path.join(cfg.warehouse_dir, "etl_metadata"))
+        return meta.select(
+            "table_name", "records_processed", "records_inserted",
+            "records_failed", "data_quality_score")
+
+    return scratch_rows_df(spark, "etl_run_", build)
 
 
 def prune_metadata(spark: SparkSession, config: ETLConfig,

@@ -587,20 +587,17 @@ def compaction_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: merge is one left-anti shuffle + union (no driver rows);
     compaction is one round-robin repartition sized by bytes. The
-    3-row result is collected so the scratch root can be deleted
-    before returning (same pattern as etl_pipeline_run)."""
-    import shutil
-    import tempfile
-
+    3-row result re-enters through io.scratch_rows_df, which deletes
+    the scratch root before returning."""
     from simpleetlpipeline_spark.io import (
         compact_table,
         merge_upsert,
         read_table_version,
+        scratch_rows_df,
         write_table_version,
     )
 
-    td = tempfile.mkdtemp(prefix="compaction_inv_")
-    try:
+    def build(td: str) -> DataFrame:
         root = os.path.join(td, "cust_bal")
         base = read_table(spark, sf_dir, "customer").select(
             "c_custkey",
@@ -631,19 +628,15 @@ def compaction_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("c_custkey").alias("max_key"),
                 F.lit(files_after <= files_before).alias("files_ok"))
 
-        out = (
+        return (
             _agg(read_table_version(spark, root, version=1), "v1_seed")
             .unionAll(_agg(read_table_version(spark, root), "v2_merged"))
             .unionAll(_agg(read_table_version(spark, v2_dir + "_compacted"),
                            "v2_compacted"))
             .orderBy("snapshot")
         )
-        rows, schema = out.collect(), out.schema
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
-    from simpleetlpipeline_spark.io import driver_rows_df
 
-    return driver_rows_df(spark, rows, schema)
+    return scratch_rows_df(spark, "compaction_inv_", build)
 
 
 QUERIES["compaction_invariant"] = compaction_invariant

@@ -25,7 +25,6 @@ parquet (Delta/Iceberg MERGE would prune untouched files).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,21 +33,41 @@ from simpleetlpipeline_spark.functions.sketches import HLL_LGK
 from simpleetlpipeline_spark.io import (
     read_table_version,
     read_version_meta,
+    scratch_rows_df,
     write_table_version,
 )
 from simpleetlpipeline_spark.streaming.windows import read_events_stream
 
 
-def streaming_totals_to_table(spark: SparkSession, sf_dir: str,
-                              table_root: str | None = None) -> DataFrame:
-    """Run the events stream to completion, foreachBatch-merging
-    per-user totals into a versioned warehouse table; returns the
-    final committed snapshot (rounded for the oracle — raw double
-    partials are what the table stores, so multi-batch replays
-    accumulate exactly)."""
-    caller_owns_root = table_root is not None
-    table_root = table_root or tempfile.mkdtemp(prefix="stream_totals_")
+def _run_sink(stream: DataFrame, table_root: str | None, prefix: str,
+              merge_batch_fn, result) -> DataFrame:
+    """Run `stream` to completion, foreachBatch-committing through
+    `merge_batch_fn(spark, root)`, and return `result` of the
+    final committed snapshot. A caller-supplied table_root keeps the
+    table and gets the live frame; otherwise the table lives in a
+    scratch dir and the (tiny) result re-enters through
+    io.scratch_rows_df, which removes the dir even when the stream
+    fails."""
+    spark = stream.sparkSession
 
+    def build(root: str) -> DataFrame:
+        q = (
+            stream.writeStream.foreachBatch(merge_batch_fn(spark, root))
+            .trigger(availableNow=True)
+            .option("checkpointLocation", os.path.join(root, "_chk"))
+            .start()
+        )
+        q.awaitTermination()
+        return result(read_table_version(spark, root))
+
+    if table_root is not None:
+        return build(table_root)
+    return scratch_rows_df(spark, prefix, build)
+
+
+def _totals_merge_batch_fn(spark: SparkSession, table_root: str):
+    """foreachBatch body of streaming_totals_to_table: merges a
+    batch's per-user increments into the versioned table."""
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Idempotence under foreachBatch's at-least-once retries: the
         # applied batch id is stamped INSIDE each snapshot commit
@@ -64,7 +83,7 @@ def streaming_totals_to_table(spark: SparkSession, sf_dir: str,
         # renumbers batches from 0 with possibly different contents;
         # the stamp cannot distinguish that and would skip/misapply.
         # Restart-from-scratch therefore requires a fresh table_root
-        # (the default tmpdir path does this), matching the
+        # (the default scratch path does this), matching the
         # checkpoint-and-sink-move-together rule of every
         # transactional foreachBatch sink.
         meta = read_version_meta(table_root)
@@ -95,32 +114,21 @@ def streaming_totals_to_table(spark: SparkSession, sf_dir: str,
             merged = inc
         write_table_version(merged, table_root,
                             commit_meta={"batch_id": batch_id})
-
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(table_root, "_chk"))
-        .start()
-    )
-    q.awaitTermination()
-    out = read_table_version(spark, table_root).select(
-        "user_id", "n_events",
-        F.round("total_value", 2).alias("total_value"))
-    if caller_owns_root:
-        return out
-    # Scratch warehouse: materialize the (per-user, tiny) result and
-    # delete the temp table + checkpoint so repeated driver/bench runs
-    # don't accumulate /tmp dirs — same protocol as etl_pipeline_run.
-    import shutil
-
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(table_root, ignore_errors=True)
-    from simpleetlpipeline_spark.io import driver_rows_df
-
-    return driver_rows_df(spark, rows, schema)
+    return merge_batch
 
 
+def streaming_totals_to_table(spark: SparkSession, sf_dir: str,
+                              table_root: str | None = None) -> DataFrame:
+    """Run the events stream to completion, foreachBatch-merging
+    per-user totals into a versioned warehouse table; returns the
+    final committed snapshot (rounded for the oracle — raw double
+    partials are what the table stores, so multi-batch replays
+    accumulate exactly)."""
+    return _run_sink(
+        read_events_stream(spark, sf_dir), table_root, "stream_totals_",
+        _totals_merge_batch_fn,
+        lambda t: t.select("user_id", "n_events",
+                           F.round("total_value", 2).alias("total_value")))
 
 
 def hll_merge_batch_fn(spark: SparkSession, table_root: str):
@@ -177,30 +185,13 @@ def streaming_distinct_users_hll(spark: SparkSession, sf_dir: str,
     documented hll_shard_merge lesson), so a hash-exact SQL oracle
     would flake; the accuracy contract (within 3*rsd of exact) and
     the multi-batch replay live in tests/test_streaming.py."""
-    caller_owns_root = table_root is not None
-    table_root = table_root or tempfile.mkdtemp(prefix="stream_hll_")
-    merge_batch = hll_merge_batch_fn(spark, table_root)
-
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(table_root, "_chk"))
-        .start()
-    )
-    q.awaitTermination()
-    out = read_table_version(spark, table_root).select(
-        "event_type",
-        F.hll_sketch_estimate("sk").cast("long").alias("approx_users"))
-    if caller_owns_root:
-        return out
-    import shutil
-
-    rows, schema = out.collect(), out.schema
-    shutil.rmtree(table_root, ignore_errors=True)
-    from simpleetlpipeline_spark.io import driver_rows_df
-
-    return driver_rows_df(spark, rows, schema).orderBy("event_type")
+    return _run_sink(
+        read_events_stream(spark, sf_dir), table_root, "stream_hll_",
+        hll_merge_batch_fn,
+        lambda t: t.select(
+            "event_type",
+            F.hll_sketch_estimate("sk").cast("long").alias("approx_users"),
+        )).orderBy("event_type")
 
 
 QUERIES = {

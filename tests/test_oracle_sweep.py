@@ -26,6 +26,10 @@ import sys
 
 import pytest
 
+CHECK_ORACLE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tools", "check_oracle.py")
+
 pytestmark = [
     pytest.mark.slow,
     pytest.mark.skipif(
@@ -40,7 +44,7 @@ def test_full_catalog_hostile_shuffle_sweep():
                SPARK_GRAFT_ORACLE_SHUFFLE="3",
                SPARK_GRAFT_ORACLE_CPUS="8")
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/check_oracle.py",
+        [sys.executable, CHECK_ORACLE,
          "/root/testdata/sf0.01"],
         env=env, capture_output=True, text=True, timeout=3600)
     tail = "\n".join(proc.stdout.splitlines()[-8:])

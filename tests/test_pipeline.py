@@ -133,6 +133,25 @@ def test_failure_isolation(spark, tmp_path, monkeypatch):
     assert os.path.exists(os.path.join(cfg.warehouse_dir, "customers_enriched"))
 
 
+def test_etl_run_failure_leaves_no_scratch_dir(spark, tmp_path, monkeypatch):
+    """A failed catalog ETL run raises and still removes its scratch
+    warehouse (io.scratch_rows_df owns the dir)."""
+    import tempfile
+
+    def boom(df):
+        raise RuntimeError("poisoned transform")
+
+    monkeypatch.setitem(transforms.TRANSFORM_DISPATCH, "products", boom)
+    monkeypatch.setattr(pipeline, "ETL_ORACLE_SRC_DIR",
+                        str(tmp_path / "src" / "current"))
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    with pytest.raises(RuntimeError, match="pipeline failures"):
+        pipeline.etl_pipeline_run(spark, "sf0.0002")
+    assert not list(scratch.glob("etl_run_*"))
+
+
 def test_missing_source_isolated(spark, tmp_path):
     """Missing CSVs must not raise out of the pipeline loop."""
     cfg = pipeline.ETLConfig(warehouse_dir=str(tmp_path / "wh"))

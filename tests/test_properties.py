@@ -200,6 +200,7 @@ def test_float_queries_survive_hostile_partitioning():
     float accumulation order (the doc_logprob bug class, ADVICE r3)
     fails HERE before the driver's gate can see it. Subprocess so the
     hostile session cannot leak conf into the shared fixture."""
+    import os
     import subprocess
     import sys
 
@@ -209,9 +210,11 @@ def test_float_queries_survive_hostile_partitioning():
         "order_value_percentiles",
     ]
     r = subprocess.run(
-        [sys.executable, "/root/repo/tools/check_oracle.py",
+        [sys.executable,
+         os.path.join(os.path.dirname(os.path.dirname(
+             os.path.abspath(__file__))), "tools", "check_oracle.py"),
          "/root/testdata/sf0.001", *queries],
-        env={**__import__("os").environ,
+        env={**os.environ,
              "SPARK_GRAFT_ORACLE_SHUFFLE": "3",
              "SPARK_GRAFT_ORACLE_CPUS": "4"},
         capture_output=True, text=True, timeout=420)

@@ -9,9 +9,10 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
-    __file__))), "simpleetlpipeline_spark")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(ROOT, "simpleetlpipeline_spark")
 
 ALLOWED = {
     ("read_table", "name"),
@@ -93,3 +94,36 @@ def test_pairs_within_an_array_enumerate_only_in_ordered_pairs():
                     sites.append(f"{rel}:{node.lineno}")
     assert not sites, "hand-written pair expansions (use ordered_pairs):\n" \
         + "\n".join(sites)
+
+
+def test_no_file_names_its_own_checkout():
+    """Every tool and test finds the checkout from its own __file__:
+    a hard-coded absolute path to the checkout makes any other copy
+    (the parent side of an A/B) import, profile and oracle-check that
+    fixed tree instead of itself."""
+    own = re.compile(re.escape(ROOT) + r"(?![\w.-])")
+    hits = []
+    for dirpath, dirs, files in os.walk(ROOT):
+        dirs[:] = [d for d in dirs if not d.startswith(".")]
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path, encoding="utf-8") as fh:
+                hits += [f"{os.path.relpath(path, ROOT)}:{n}"
+                         for n, line in enumerate(fh, 1)
+                         if own.search(line)]
+    assert not hits, f"hard-coded {ROOT} (derive it from __file__):\n" \
+        + "\n".join(hits)
+
+
+def test_no_tool_shadows_a_stdlib_module():
+    """A script's directory heads sys.path, so tools/<name>.py named
+    like a stdlib module replaces it for every sibling tool (a
+    tools/profile.py breaks `import pyspark`, which reaches the stdlib
+    `profile` through cProfile)."""
+    import sys
+
+    tools = os.listdir(os.path.join(ROOT, "tools"))
+    assert not [f for f in tools if f.endswith(".py")
+                and f[:-3] in sys.stdlib_module_names]

@@ -24,9 +24,10 @@ Fetch modes (SPARK_GRAFT_ORACLE_FETCH):
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def normalize(rows: list[tuple], cols: list[str]) -> list[tuple]:
@@ -116,8 +117,6 @@ def main() -> int:
     # aggregate's fold order — any query whose hashed floats depend on
     # accumulation order (the doc_logprob bug class) fails HERE before
     # the driver's gate can catch it under its own partitioning.
-    import os
-
     spark = get_spark(
         "oracle-check",
         cpus=int(os.environ.get("SPARK_GRAFT_ORACLE_CPUS", "8")),

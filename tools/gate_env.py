@@ -26,7 +26,7 @@ header of sf1 addenda; a next-round rebuild that fingerprints
 differently invalidates the old attestations explicitly instead of
 silently.
 
-Usage: python tools/gate_env.py            # writes /root/repo/GATE_ENV.json
+Usage: python tools/gate_env.py            # writes <checkout>/GATE_ENV.json
        python tools/gate_env.py --print    # stdout only
        python tools/gate_env.py --fixture /tmp/spark_graft_sf1
 """
@@ -39,7 +39,7 @@ import os
 import platform
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def fingerprint() -> dict:

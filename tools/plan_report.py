@@ -13,10 +13,12 @@ WholeStageCodegen. Run after plan-affecting changes:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 #: Plan digests cover EVERY oracled, non-streaming catalog entry
 #: (round-6 verdict task #6: a plan regression needs a committed
@@ -132,7 +134,7 @@ def main() -> None:
         "aggregation keeps two aggregate stages.",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines))
     print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
     spark.stop()

@@ -10,30 +10,17 @@ since the sweep would then need re-running.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from tools.gate_env import fixture_fingerprint  # noqa: E402
+
 SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/spark_graft_sf1")
-
-
-def fingerprint(d: str) -> dict:
-    out = {}
-    for fn in sorted(os.listdir(d)):
-        if not fn.endswith(".parquet"):
-            continue
-        p = os.path.join(d, fn)
-        h = hashlib.md5()
-        with open(p, "rb") as fh:
-            for chunk in iter(lambda: fh.read(1 << 20), b""):
-                h.update(chunk)
-        out[fn] = {"bytes": os.path.getsize(p), "md5": h.hexdigest()}
-    return out
 
 
 def main() -> None:
@@ -54,7 +41,7 @@ def main() -> None:
     passes = passes + rows_only
 
     prev = json.load(open(os.path.join(REPO, "CORRECTNESS_sf1.json")))
-    fresh_fp = fingerprint(SF1)
+    fresh_fp = fixture_fingerprint(SF1)
     prev_fp = prev.get("env", {}).get("fixture", {}).get("tables", {})
     if prev_fp and prev_fp != fresh_fp:
         raise SystemExit(
